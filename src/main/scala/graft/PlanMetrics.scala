@@ -29,10 +29,11 @@ object PlanMetrics {
 
   /** Shuffle totals of an ALREADY-EXECUTED frame (metrics are zero until
     * an action has run the plan). Round-robin exchanges are excluded by
-    * default: the only ones the engine plans are `Tables.fanOut`'s
-    * single-row-group scan spreading — test-environment plumbing that is
-    * a documented no-op on real multi-split tables — and counting them
-    * would charge every query a full input-cardinality shuffle that
+    * default: the only ones the engine plans are `Tables.load`'s fan-out
+    * of single-row-group `documents` / `embeddings` scans (relational
+    * tables are never fanned out) — test-environment plumbing that is a
+    * documented no-op on real multi-split tables — and counting them
+    * would charge those queries a full input-cardinality shuffle that
     * doesn't exist at scale.
     */
   def shuffleStats(df: DataFrame,

@@ -1,6 +1,10 @@
 package graft
+import scala.util.control.NonFatal
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Round-16 measurement harness (guide §1: measure first) — NOT part of
   * the driver contract. For each named registered query it separates the
@@ -13,8 +17,11 @@ import org.apache.spark.sql.SparkSession
   *    driver-side argmax loops like BPE training);
   *  - EXECUTION: the terminal `.count()` on the built frame.
   *
-  * Per rep it also counts Spark jobs and completed stages (a listener),
-  * and on the last rep reads the executed plan's shuffle records/bytes
+  * Per rep it also counts Spark jobs and completed stages (a listener)
+  * and Janino compiles with their compile time (deltas of the count of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` and of the code generator's
+  * cumulative compile nanos — the histogram keeps no exact sum), and on
+  * the last rep reads the executed plan's shuffle records/bytes
   * via [[PlanMetrics]]. Output: one parseable line per (query, rep) and
   * a summary line per query. Optionally (`SPARK_GRAFT_PLAN_DIR`) writes
   * `explain("formatted")` of each query to `<dir>/<name>.txt` — how the
@@ -44,7 +51,7 @@ object ProfileQuery {
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       Tables.load(spark, sfDir, "lineitem").count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[profile] warm-up failed: $e") }
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -77,6 +84,8 @@ object ProfileQuery {
       var lastDf: org.apache.spark.sql.DataFrame = null
       val rows = (1 to reps).map { rep =>
         jobs = 0; stages = 0
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         // log stage-level detail for the LAST rep (covers the eager
         // construction jobs of loop-bearing operators too)
         if (rep == reps) { logStages = true; stageLog.clear() }
@@ -89,9 +98,11 @@ object ProfileQuery {
         // listener events are posted asynchronously; give the bus a beat
         Thread.sleep(200)
         lastDf = df
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
         val line = f"[profile] $name rep$rep construct=${(t1 - t0) / 1e9}%.3f" +
           f" exec=${(t2 - t1) / 1e9}%.3f jobs=$jobs (construct=$constructJobs)" +
-          f" stages=$stages rows=$n"
+          f" stages=$stages compiles=$compiles compileMs=$compileMs%.1f rows=$n"
         println(line)
         ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
       }
@@ -105,7 +116,11 @@ object ProfileQuery {
           val (n, s) = PlanMetrics.measure(lastDf)
           f"collectExec=${(System.nanoTime() - t3) / 1e9}%.3f rows=$n " +
             f"shuffles=${s.exchanges} shufRecords=${s.recordsWritten} shufMB=${s.bytesWritten / 1e6}%.1f"
-        } catch { case e: Throwable => s"shuffles=? (${e.getMessage})" }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[profile] $name shuffle stats failed: $e")
+            s"shuffles=? (${e.getMessage})"
+        }
       logStages = false
       println(f"[profile-best] $name construct=$bc%.3f exec=$be%.3f total=${bc + be}%.3f $st")
       Thread.sleep(300) // let the listener bus drain before printing stages

@@ -151,12 +151,6 @@ object GraftFunctions {
           i => substring(norm, i, lit(n))),
         t => length(t) === n))
 
-  /** Character n-gram shingles (distinct) of the normalized text —
-    * single-expression form for once-per-row contexts.
-    */
-  def charShingles(text: Column, n: Int): Column =
-    charShinglesFromNorm(normalizeText(text), n)
-
   /** Word n-gram shingles (distinct) from an ALREADY-MATERIALIZED token
     * array column. Callers must project the token array into a real column
     * first (two-step select): `toks` is referenced once per shingle inside

@@ -347,11 +347,6 @@ object Relational {
     events.filter(col("event_type") === t1).select(col("user_id"))
       .intersect(events.filter(col("event_type") === t2).select(col("user_id")))
 
-  /** EXCEPT: users with events of t1 but never t2. */
-  def usersOnlyInType(events: DataFrame, t1: String, t2: String): DataFrame =
-    events.filter(col("event_type") === t1).select(col("user_id"))
-      .except(events.filter(col("event_type") === t2).select(col("user_id")))
-
   /** HyperLogLog++ approximate distinct — the sketch path for cardinality
     * at 100 TB (exact distinct shuffles every key; HLL ships a fixed-size
     * sketch per partition). Engine-specific sketch ⇒ unit-tested against

@@ -1147,31 +1147,6 @@ object Pipelines {
       checkpoint, mode)
   }
 
-  /** K5 streaming face: append each micro-batch to a JDBC table (the
-    * generator's `to_sql(if_exists='append')` as a continuous sink).
-    * foreachBatch because Spark ships no streaming JDBC sink; gated like
-    * the Kafka paths — no database exists in the build sandbox.
-    *
-    * Delivery is AT-LEAST-ONCE: a micro-batch replayed after a failure
-    * appends again. Plain INSERT cannot be made idempotent without
-    * database-side cooperation, so every row carries its `batch_id` —
-    * downstream either MERGEs on (batch_id, natural key) or dedupes on it;
-    * exactly-once requires swapping this writer for a transactional
-    * upsert.
-    */
-  def startJdbcAppendSink(df: DataFrame, url: String, table: String,
-                          props: java.util.Properties, checkpoint: String,
-                          trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.IncrementalJdbc.appendJdbc(
-          batch.withColumn("batch_id", lit(batchId)), url, table, props)
-      }
-      .start()
-
   /** S2: Kafka source with an explicit schema applied to JSON values —
     * for topics carrying JSON. Built but not bound to a broker in the
     * sandbox.
@@ -1402,9 +1377,6 @@ object Pipelines {
     */
   private val mintLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Visible to the concurrent-mint spec: the live mint-lock count. */
-  private[graft] def mintLockCount: Int = mintLocks.size()
 
   /** Visible to the concurrent-mint spec: whether `key`'s qualified
     * lock entry is live (the leak assertion scoped to ONE checkpoint,

@@ -218,4 +218,98 @@ class CatalogAndRelationalSpec extends SparkSpec {
     assert(byStatus("Y") == nY)
     assert(byStatus("N") == nIns)
   }
+
+  /** Writes `df` as ONE parquet file at `path` (the testdata layout),
+    * replacing whatever file is there.
+    */
+  private def writeSingleFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val staging = Files.createTempDirectory("graft_stage").resolve("t")
+    df.coalesce(1).write.parquet(staging.toString)
+    val part = staging.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Spark jobs started on this thread while `body` ran. Listener events
+    * arrive asynchronously but in order, so once a sentinel job run after
+    * `body` has been seen, every job `body` started has been counted.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.tag"
+    val tag = s"jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"$tag-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$tag-end"), "the listener never saw the sentinel job")
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.load: a second load of a resolved table starts no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    writeSingleFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), s"$dir/t.parquet")
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")) >= 1,
+      "the first load infers the schema with a job (else this spec tests nothing)")
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")) == 0)
+    assert(Tables.load(spark, dir, "t").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("Tables.load: a table rewritten with an extra column is seen on the next load") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val path = s"$dir/t.parquet"
+    writeSingleFile(Seq((1L, "a")).toDF("k", "v"), path)
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    writeSingleFile(Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "w"), path)
+    val again = Tables.load(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("k", "v", "w"))
+    assert(again.as[(Long, String, Int)].collect().sorted.toSeq ==
+      Seq((1L, "a", 10), (2L, "b", 20)))
+  }
+
+  test("Tables.load: two loads of one table are independent relations (self-join)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    writeSingleFile(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), s"$dir/t.parquet")
+    Tables.load(spark, dir, "t") // resolves the path: both loads below hit the memo
+    val a = Tables.load(spark, dir, "t")
+    val b = Tables.load(spark, dir, "t").filter(col("k") > 1)
+    val got = a.join(b, a("k") === b("k"))
+      .select(a("k"), a("v"), b("v")).as[(Long, String, String)].collect().sorted.toSeq
+    assert(got == Seq((2L, "b", "b"), (3L, "c", "c")))
+  }
+
+  private def roundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+
+  test("Tables.load fans out documents but never a relational table") {
+    val sf = "/root/testdata/sf0.001"
+    assert(!roundRobin(Tables.load(spark, sf, "lineitem")))
+    assert(roundRobin(Tables.load(spark, sf, "documents")),
+      "the single-row-group documents scan lost its fan-out")
+  }
+
+  test("Tables.load: the fan-out verdict follows a rewritten table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    writeSingleFile(docs, s"$dir/documents.parquet")
+    assert(roundRobin(Tables.load(spark, dir, "documents")))
+    // one file per scan partition: enough splits, no fan-out
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    docs.repartition(8).write.parquet(s"$dir/documents.parquet")
+    val split = Tables.load(spark, dir, "documents")
+    assert(!roundRobin(split), "a stale fan-out verdict survived the rewrite")
+    assert(split.count() == docs.count())
+  }
 }

@@ -61,7 +61,8 @@ class HashEmbeddingSpec extends SparkSpec {
     assert(fused == agg)
     // the fused plan is a pure scan projection: no data shuffle (the only
     // Exchange is Tables.load's round-robin fan-out of the 1-row-group
-    // parquet, which carries no key and exists at any query)
+    // documents parquet, which carries no key and exists at any query
+    // over documents)
     val p = TextAnalysis.hashEmbeddingSketchFused(d)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning")

@@ -434,8 +434,9 @@ class PlanShapeSpec extends SparkSpec {
       Tables.load(spark, sf, "documents"))
     q.count()
     val p = q.queryExecution.executedPlan.toString
-    // the one repartition comes from Tables.load's fan-out; beyond it the
-    // operator itself must add NO exchange of any kind
+    // the one repartition comes from Tables.load's fan-out of documents
+    // (a UDF-kernel table; relational tables are not fanned out); beyond
+    // it the operator itself must add NO exchange of any kind
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges <= 1, s"epochSample added exchanges: $exchanges\n$p")
     assert(p.contains("Generate explode"), "replication lost the generator")
