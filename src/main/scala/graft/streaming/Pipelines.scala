@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.util.SerializableConfiguration
 import graft.operators.ReferenceQueries
 
 /** Minimal event row for the custom-state operator. */
@@ -140,7 +141,9 @@ object Pipelines {
     * keys as separate objects. Partition = md5-hash of the key mod
     * `numPartitions` (the off-broker analog of Kafka's key partitioner;
     * deterministic, so results are reproducible). Objects are written
-    * executor-side per partition group — no driver collect at any scale.
+    * executor-side per partition group — no driver collect at any scale —
+    * through the session's Hadoop conf, shipped to the tasks
+    * ([[ConnectLayout.sinkConf]]).
     */
   def startConnectJsonSink(agg: DataFrame, s3Dir: String, topic: String,
                            keyCols: Seq[String], checkpoint: String,
@@ -159,9 +162,10 @@ object Pipelines {
             graft.functions.DetHash.base60(col("__key")),
             lit(numPartitions)).cast("int"))
         val base = s"$s3Dir/$topicsDir/$topic"
+        val conf = new SerializableConfiguration(ConnectLayout.sinkConf(batch.sparkSession))
         keyed.repartition(numPartitions, col("__partition"))
           .foreachPartition { (it: Iterator[Row]) =>
-            ConnectLayout.writeJsonObjects(it, base, topic, flushSize, batchId)
+            ConnectLayout.writeJsonObjects(it, conf.value, base, topic, flushSize, batchId)
           }
       }
       .start()

@@ -1,14 +1,31 @@
 package graft
 
+import java.io.RandomAccessFile
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.{Date, Timestamp}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.{AvroBinary, AvroCodec}
-import graft.streaming.Pipelines
+import graft.streaming.{ConnectLayout, Pipelines, PosixLocalFileSystem}
+
+/** The raw local file system under the made-up scheme `sinktest:`. It
+  * resolves only where `fs.sinktest.impl` is set, so a writer that
+  * reaches it proves it used that conf.
+  */
+class SinkTestFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("sinktest:///")
+  override def getScheme: String = "sinktest"
+}
 
 /** Parity specs for the Confluent-S3-sink object layout and the Kafka
   * record wire encodings — the broker-free checks of K1-K4's output
@@ -109,6 +126,143 @@ class ConnectLayoutSpec extends SparkSpec {
     assert(back.count() == 5)
     objects.foreach { o =>
       assert(spark.read.parquet(partDir.resolve(o).toString).count() <= 2)
+    }
+  }
+
+  private val sinkRows = Seq(
+    mkCust("ana", "2001-05-05", 10_000L), mkCust("bia", "1969-12-31", 12_000L),
+    mkCust("caio", "2000-01-01", 31_000L), mkCust("eva", "2002-02-02", 61_000L),
+    mkCust("iza", "2003-03-03", 62_000L), mkCust("leo", "2004-04-04", 63_000L))
+
+  /** Both Connect sinks, by topic: flushSize 2 gives several objects per
+    * partition, and the JSON sink writes two partitions.
+    */
+  private val connectSinks: Seq[(String, (DataFrame, String, String) => StreamingQuery)] = Seq(
+    "jovens" -> ((df, s3Dir, ckp) => Pipelines.startConnectParquetSink(
+      Pipelines.jovens(df), s3Dir, "jovens", checkpoint = ckp, flushSize = 2)),
+    "idadecont" -> ((df, s3Dir, ckp) => Pipelines.startConnectJsonSink(
+      Pipelines.idadecont(df), s3Dir, "idadecont", Seq("idadecat", "window_start"),
+      checkpoint = ckp, numPartitions = 2, flushSize = 2)))
+
+  private def runSink(start: (DataFrame, String, String) => StreamingQuery, s3Dir: String): Unit = {
+    val mem = MemoryStream[Cust]
+    val q = start(mem.toDF(), s3Dir, tmpDir("graft_ckp_"))
+    try {
+      mem.addData(sinkRows)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  private def walk(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    Files.walk(dir).iterator().asScala.toSeq
+
+  private def mode(p: java.nio.file.Path): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  /** Sink objects: data and keys files, not their hidden `.crc` sidecars. */
+  private def objects(topicDir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    walk(topicDir).filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+
+  connectSinks.foreach { case (topic, start) =>
+    test(s"$topic connect sink: writes through PosixLocalFileSystem with the stock local modes") {
+      val stockDir = Paths.get(tmpDir("graft_stock_"), "partition=0")
+      val stock = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+      assert(!stock.isInstanceOf[PosixLocalFileSystem])
+      val out = stock.create(new Path(stockDir.resolve("object").toUri), true)
+      try out.write(1) finally out.close()
+      val fileMode = mode(stockDir.resolve("object"))
+      val dirMode = mode(stockDir)
+      assert(mode(stockDir.resolve(".object.crc")) == fileMode)
+
+      val posix = FileSystem.getStatistics("file", classOf[PosixLocalFileSystem.Raw])
+      val posixBytesBefore = posix.getBytesWritten
+      val s3Dir = tmpDir("graft_s3m_")
+      runSink(start, s3Dir)
+      val written = walk(Paths.get(s3Dir)).drop(1) // s3Dir itself is a 0700 temp dir
+      val (dirs, files) = written.partition(Files.isDirectory(_))
+      assert(dirs.exists(_.getFileName.toString.startsWith("partition=")) && files.nonEmpty)
+      // every byte on disk went through PosixLocalFileSystem
+      assert(posix.getBytesWritten - posixBytesBefore >= files.map(Files.size).sum)
+      dirs.foreach(d => assert(mode(d) == dirMode, s"$d"))
+      files.foreach(f => assert(mode(f) == fileMode, s"$f"))
+    }
+
+    test(s"$topic connect sink: every object has a .crc sidecar that catches a flipped byte") {
+      val s3Dir = tmpDir("graft_s3c_")
+      runSink(start, s3Dir)
+      val objs = objects(Paths.get(s3Dir, "raw-data", "kafka", topic))
+      assert(objs.nonEmpty)
+      // stock checksummed reads, minus LocalFileSystem's move of a bad
+      // file into <mount>/bad_files
+      val fs = new LocalFileSystem {
+        override def reportChecksumFailure(p: Path, in: FSDataInputStream, inPos: Long,
+                                           sums: FSDataInputStream, sumsPos: Long): Boolean = false
+      }
+      fs.initialize(URI.create("file:///"), spark.sessionState.newHadoopConf())
+      def read(p: java.nio.file.Path): Array[Byte] = {
+        val in = fs.open(new Path(p.toUri))
+        try in.readAllBytes() finally in.close()
+      }
+      objs.foreach { o =>
+        assert(Files.exists(o.resolveSibling(s".${o.getFileName}.crc")), s"no .crc for $o")
+        assert(read(o).sameElements(Files.readAllBytes(o)))
+        val raf = new RandomAccessFile(o.toFile, "rw")
+        try { val b = raf.read(); raf.seek(0); raf.write(b ^ 0xff) } finally raf.close()
+        intercept[ChecksumException](read(o))
+      }
+    }
+
+    test(s"$topic connect sink resolves schemes through the session's Hadoop conf") {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val keys = Seq("fs.sinktest.impl", "fs.sinktest.impl.disable.cache")
+      hconf.set(keys(0), classOf[SinkTestFileSystem].getName)
+      hconf.set(keys(1), "true")
+      val local = tmpDir("graft_s3t_")
+      try runSink(start, s"sinktest://$local")
+      finally keys.foreach(hconf.unset)
+      val objs = objects(Paths.get(local, "raw-data", "kafka", topic))
+      assert(objs.nonEmpty && objs.forall(_.getFileName.toString.startsWith(s"$topic+")), s"$objs")
+    }
+  }
+
+  test("PosixLocalFileSystem matches chmod(1) on sticky modes and in setgid directories") {
+    val conf = spark.sessionState.newHadoopConf()
+    val posix = new PosixLocalFileSystem
+    posix.initialize(URI.create("file:///"), conf)
+    val root = Paths.get(tmpDir("graft_modes_"))
+    val setgid = Files.createDirectory(root.resolve("setgid"))
+    Files.setAttribute(setgid, "unix:mode", Integer.valueOf(Integer.parseInt("2755", 8)))
+    def unixMode(p: java.nio.file.Path) =
+      Integer.toOctalString(Files.getAttribute(p, "unix:mode").asInstanceOf[Integer] & 0xfff)
+    val modes = Seq(FileSystem.getLocal(conf), posix).map { fs =>
+      val name = fs.getClass.getSimpleName
+      // a new directory inherits setgid; chmod(1) keeps it under a numeric mode
+      val child = setgid.resolve(name)
+      assert(fs.mkdirs(new Path(child.toUri)))
+      val sticky = Files.createDirectory(root.resolve(name))
+      fs.setPermission(new Path(sticky.toUri), new FsPermission(Integer.parseInt("1777", 8).toShort))
+      (unixMode(child), unixMode(sticky))
+    }
+    assert(modes.head == ("2755", "1777"))
+    assert(modes(1) == modes.head)
+  }
+
+  test("sink conf: session settings plus file: on PosixLocalFileSystem, other schemes stock") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("graft.sinkconf.probe", "kept")
+    val (base, overlay) =
+      try (spark.sessionState.newHadoopConf(), ConnectLayout.sinkConf(spark))
+      finally hconf.unset("graft.sinkconf.probe")
+    assert(overlay.get("graft.sinkconf.probe") == "kept")
+    assert(FileSystem.getFileSystemClass("file", overlay) == classOf[PosixLocalFileSystem])
+    // a stock instance is cached for file: by now; the overlay still wins
+    assert(!FileSystem.getLocal(base).isInstanceOf[PosixLocalFileSystem])
+    assert(FileSystem.get(URI.create("file:///"), overlay).getClass == classOf[PosixLocalFileSystem])
+    def cls(scheme: String, c: org.apache.hadoop.conf.Configuration) =
+      Try(FileSystem.getFileSystemClass(scheme, c).getName).toOption
+    assert(cls("hdfs", base).isDefined)
+    Seq("hdfs", "viewfs", "har", "s3a").foreach { scheme =>
+      assert(cls(scheme, overlay) == cls(scheme, base), scheme)
     }
   }
 
