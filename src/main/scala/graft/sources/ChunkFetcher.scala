@@ -22,9 +22,9 @@ import org.apache.spark.sql.types._
   * under the mode's ordering (pure timestamp: ts alone; composite:
   * (ts, id) lexicographic), NULL-timestamp rows excluded — the same
   * predicate shape as [[ChunkSource.chunk]], with an inclusive upper KEY
-  * instead of a LIMIT. Determinism across retries relies on timestamp
-  * mode's append-only assumption (rows at or before a committed offset
-  * never change), identical to the replay guarantee of the stash path.
+  * instead of a LIMIT. Determinism across retries and restarts relies on
+  * timestamp mode's append-only assumption (rows at or before a committed
+  * offset never change).
   */
 trait ChunkFetcher extends Serializable {
   def fetch(schema: StructType, timestampCol: String,
@@ -33,6 +33,16 @@ trait ChunkFetcher extends Serializable {
 }
 
 object ChunkFetcher {
+  /** `a` strictly after `b` in the mode's key order: ts alone in pure
+    * timestamp mode, (ts, id) lexicographic in composite mode. A key
+    * without an id covers its whole timestamp (the SQL bounds compare ts
+    * alone then), so nothing at that timestamp is after it.
+    */
+  private[graft] def after(a: JdbcOffset, b: JdbcOffset,
+                           composite: Boolean): Boolean =
+    a.ts.after(b.ts) || (composite && a.ts.equals(b.ts) &&
+      b.id.exists(hi => a.id.exists(_ > hi)))
+
   /** The `(lower, upper]` range predicate on a materialized row — one
     * definition shared by the in-memory fetcher and the specs, mirroring
     * the SQL [[IncrementalJdbc.rangeSql]] ships to a database.
@@ -40,20 +50,9 @@ object ChunkFetcher {
   private[graft] def inRange(ts: Timestamp, id: Option[Long],
                              lower: Option[JdbcOffset], upper: JdbcOffset,
                              composite: Boolean): Boolean = {
-    if (ts == null) return false
-    val aboveLower = lower.forall { o =>
-      (composite, o.id) match {
-        case (true, Some(loId)) =>
-          ts.after(o.ts) || (ts.equals(o.ts) && id.exists(_ > loId))
-        case _ => ts.after(o.ts)
-      }
-    }
-    val atOrBelowUpper = (composite, upper.id) match {
-      case (true, Some(hiId)) =>
-        ts.before(upper.ts) || (ts.equals(upper.ts) && id.exists(_ <= hiId))
-      case _ => !ts.after(upper.ts)
-    }
-    aboveLower && atOrBelowUpper
+    val key = JdbcOffset(ts, id)
+    ts != null && lower.forall(after(key, _, composite)) &&
+      !after(key, upper, composite)
   }
 }
 
@@ -71,7 +70,7 @@ final case class ArrayChunkFetcher(rows: IndexedSeq[Row]) extends ChunkFetcher {
     val idIdx = incrementingCol.map(schema.fieldIndex)
     rows.iterator.filter { r =>
       val ts = if (r.isNullAt(tsIdx)) null else r.getTimestamp(tsIdx)
-      val id = idIdx.filterNot(r.isNullAt).map(r.getLong)
+      val id = idIdx.filterNot(r.isNullAt).map(r.getAs[Number](_).longValue)
       ChunkFetcher.inRange(ts, id, lower, upper, idIdx.isDefined)
     }
   }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** `spark.readStream.format("graft-jdbc")` — the incremental JDBC source
@@ -22,30 +22,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * delivery guarantees Connect stores in its offset topic, inherited here
   * from the Structured Streaming commit log for free.
   *
-  * Chunk probing happens ON THE DRIVER at `latestOffset()` time, bounded
-  * by `maxRowsPerPoll`. Two delivery paths:
+  * One delivery path. At each trigger the driver probes only the
+  * (ts[, id]) KEYS of the next chunk ([[IncrementalJdbc.chunkKeysProbe]],
+  * bounded by `maxRowsPerPoll`); the planner picks split keys every
+  * `rowsPerPartition` rows and plans one [[GraftJdbcRangePartition]] per
+  * `(lo, hi]` slice. Each task reads its own slice through the source's
+  * [[ChunkSource.rangeFetcher]] where it runs — for JDBC, a remote range
+  * statement ([[IncrementalJdbc.rangeSql]]) over the task's own
+  * connection, so the driver never holds a batch's rows. A source without
+  * a fetcher (the frame-backed [[SnapshotChunkSource]] of specs and
+  * offline runs) has each slice read on the driver at plan time into an
+  * [[ArrayChunkFetcher]] holding only that slice.
   *
-  *  - PARALLEL (default whenever the source provides a
-  *    [[ChunkSource.rangeFetcher]] — always true for the JDBC path): the
-  *    probe materializes only (ts[, id]) KEYS
-  *    ([[IncrementalJdbc.chunkKeysProbe]]), picks split keys every
-  *    `rowsPerPartition` rows, and plans one [[GraftJdbcRangePartition]]
-  *    per `(lo, hi]` slice. Each task then fetches its own slice where it
-  *    runs — for JDBC, a remote range statement
-  *    ([[IncrementalJdbc.rangeSql]]) over the task's own connection. The
-  *    driver never holds a batch's rows; a 100 TB backfill streams
-  *    through N executor connections.
-  *  - STASH (fallback, `parallelReads=false` or no fetcher): the probe
-  *    collects the rows themselves (the same materialize-before-advance
-  *    probe as [[IncrementalJdbc.poll]]) and ships them inside the
-  *    partitions — the reference Connect source's single-task shape
-  *    (`tasks.max=1`, `connect_postgres.config:5`).
-  *
-  * Either way a replay after restart re-derives the checkpointed
-  * (start, end] range from the source — correct under timestamp-mode's
-  * append-only assumption (rows at or before a committed offset never
-  * change; README.md:136), which also makes the two paths deliver
-  * identical batches.
+  * A replay after restart re-derives the checkpointed (start, end] keys
+  * from the source — correct under timestamp-mode's append-only
+  * assumption (rows at or before a committed offset never change;
+  * README.md:136) — and fails loudly past a cap of 2×`maxRowsPerPoll`.
   *
   * Options:
   *  - `url`, `table`, `user`, `password`: the JDBC path (builds
@@ -54,10 +46,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    driver-registered [[ChunkSource]], the offline/test path (no
   *    database in the sandbox; the streaming machinery is identical).
   *  - `timestampColumn` (default dt_update), `incrementingColumn`
-  *    (enables composite mode), `maxRowsPerPoll` (default 100k),
-  *    `delayIntervalMs` (Connect's timestamp.delay), `rowsPerPartition`
-  *    (split granularity of both paths, default 10k), `parallelReads`
-  *    (default true; set false to force the stash path).
+  *    (enables composite mode; must be an integral column),
+  *    `maxRowsPerPoll` (default 100k), `delayIntervalMs` (Connect's
+  *    `timestamp.delay.interval.ms`: rows newer than the driver's wall
+  *    clock minus the delay wait for a later batch, so a transaction
+  *    committing late with an older `dt_update` is not skipped; a driver
+  *    clock ahead of the database's erodes it), `rowsPerPartition` (split
+  *    granularity, default 10k). Both row counts must be positive.
   */
 class GraftJdbcStream extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-jdbc"
@@ -138,206 +133,147 @@ private[graft] object GraftJdbcOffset {
 }
 
 private[graft] class GraftJdbcMicroBatchStream(
-    schema: StructType, options: CaseInsensitiveStringMap) extends MicroBatchStream {
+    schema: StructType, options: CaseInsensitiveStringMap)
+    extends MicroBatchStream with SupportsAdmissionControl {
 
   private val source = GraftJdbcStream.resolveSource(options)
-  private val maxRows = options.getInt("maxRowsPerPoll",
-    IncrementalJdbc.DefaultMaxRowsPerPoll)
+  private val composite = source.incrementingCol.isDefined
+  private val fetcher = source.rangeFetcher
+
+  private def positive(option: String, default: Int): Int = {
+    val v = options.getInt(option, default)
+    require(v > 0, s"graft-jdbc option '$option' must be positive, got $v")
+    v
+  }
+  private val maxRows = positive("maxRowsPerPoll", IncrementalJdbc.DefaultMaxRowsPerPoll)
+  private val rowsPerPartition = positive("rowsPerPartition", 10000)
   private val delayMs = options.getLong("delayIntervalMs", 0L)
-  private val rowsPerPartition = options.getInt("rowsPerPartition", 10000)
-  private val fetcher: Option[ChunkFetcher] =
-    if (options.getBoolean("parallelReads", true)) source.rangeFetcher else None
 
-  /** Furthest probed offset; a stash serves exactly (stashStart, latest]. */
-  @volatile private var latest: GraftJdbcOffset = GraftJdbcOffset(None)
-  @volatile private var stash: Option[(GraftJdbcOffset, GraftJdbcOffset, Array[Row])] = None
-  /** Parallel path: the probed chunk's KEYS (not rows) for split planning. */
-  @volatile private var keysStash: Option[(GraftJdbcOffset, GraftJdbcOffset, Array[JdbcOffset])] = None
+  source.incrementingCol.foreach { c =>
+    val t = schema(c).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"graft-jdbc incrementing column '$c' must be integral, got ${t.sql}")
+  }
 
-  /** Total order of offsets ((ts, id), None = beginning) — used to bump
-    * [[latest]] to the checkpointed position after a restart, so the next
-    * probe resumes where the offset log ended instead of re-reading the
-    * table from the beginning.
-    */
-  private def isAfter(a: GraftJdbcOffset, b: GraftJdbcOffset): Boolean =
-    (a.pos, b.pos) match {
-      case (Some(x), Some(y)) =>
-        x.ts.after(y.ts) || (x.ts == y.ts &&
-          x.id.getOrElse(Long.MinValue) > y.id.getOrElse(Long.MinValue))
-      case (Some(_), None) => true
-      case _ => false
-    }
-
-  private def bump(seen: GraftJdbcOffset): Unit =
-    this.synchronized { if (isAfter(seen, latest)) latest = seen }
+  /** The last probe's keys and the (start, end] range they cover. */
+  @volatile private var probed: Option[(GraftJdbcOffset, GraftJdbcOffset, Array[JdbcOffset])] = None
 
   override def initialOffset(): Offset = GraftJdbcOffset(None)
 
-  override def deserializeOffset(json: String): Offset = {
-    val o = GraftJdbcOffset.fromJson(json)
-    bump(o) // a logged offset marks delivered rows — never probe below it
-    o
-  }
+  override def deserializeOffset(json: String): Offset = GraftJdbcOffset.fromJson(json)
 
-  override def latestOffset(): Offset = this.synchronized {
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "graft-jdbc is probed through latestOffset(start, limit)")
+
+  /** Probes the next chunk past `start`: the end of the last planned
+    * batch, which Spark recovers from the offset log on a restart. (A
+    * stream-held cursor would be empty when Spark first asks after a
+    * restart, and a capped probe from the table start would end below
+    * the committed offset and re-deliver rows.)
+    */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = this.synchronized {
+    val from = start.asInstanceOf[GraftJdbcOffset]
     val upper =
       if (delayMs > 0) Some(new Timestamp(System.currentTimeMillis() - delayMs))
       else None
-    if (fetcher.isDefined) {
-      val (keys, next) =
-        IncrementalJdbc.chunkKeysProbe(source, latest.pos, upper, maxRows)
-      next.foreach { o =>
-        val end = GraftJdbcOffset(Some(o))
-        keysStash = Some((latest, end, keys))
-        latest = end
-      }
-    } else {
-      val (rows, _, next) =
-        IncrementalJdbc.chunkRows(source, latest.pos, upper, maxRows)
-      next.foreach { o =>
-        val end = GraftJdbcOffset(Some(o))
-        stash = Some((latest, end, rows))
-        latest = end
-      }
+    val (keys, next) =
+      IncrementalJdbc.chunkKeysProbe(source, from.pos, upper, maxRows)
+    next.fold(from) { o =>
+      val end = GraftJdbcOffset(Some(o))
+      probed = Some((from, end, keys))
+      end
     }
-    latest
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[GraftJdbcOffset], end.asInstanceOf[GraftJdbcOffset])
-    bump(e)
-    fetcher match {
-      case Some(f) =>
-        val keys = this.synchronized {
-          keysStash match {
-            case Some((ss, se, k)) if ss == s && se == e => k
-            case _ => replayKeys(s, e) // restart: re-derive (start, end]
-          }
-        }
-        rangePartitions(f, s, keys)
-      case None =>
-        val rows = this.synchronized {
-          stash match {
-            case Some((ss, se, r)) if ss == s && se == e => r
-            case _ => replay(s, e) // checkpoint restart: re-read (start, end]
-          }
-        }
-        rows.grouped(rowsPerPartition).map(g =>
-          GraftJdbcInputPartition(g, schema): InputPartition).toArray
+    val keys = this.synchronized {
+      probed match {
+        case Some((ps, pe, k)) if ps == s && pe == e => k
+        case _ => replayKeys(s, e) // restart: re-derive (start, end]
+      }
     }
+    rangePartitions(s, keys)
   }
 
   /** Split one batch's keys into ~`rowsPerPartition` slices: a boundary
-    * key every `rowsPerPartition` rows plus the batch end, deduplicated
-    * to strictly-increasing under the mode's ordering. Pure-timestamp
-    * ranges bound by ts alone, so an equal-ts run spanning a boundary
-    * lands WHOLE in the earlier partition (skew, never duplication or
-    * loss — the next partition's `ts > boundary` excludes the run);
-    * composite (ts, id) keys cut exactly.
+    * every `rowsPerPartition` keys plus the batch end. Pure-timestamp
+    * bounds compare ts alone, so a boundary inside an equal-ts run moves
+    * to the run's end: the run lands WHOLE in one partition (skew, never
+    * duplication or loss); composite (ts, id) keys cut exactly.
     */
-  private def rangePartitions(f: ChunkFetcher, s: GraftJdbcOffset,
+  private def rangePartitions(s: GraftJdbcOffset,
                               keys: Array[JdbcOffset]): Array[InputPartition] = {
     if (keys.isEmpty) return Array.empty
-    val composite = source.incrementingCol.isDefined
-    def after(a: JdbcOffset, b: JdbcOffset): Boolean =
-      a.ts.after(b.ts) || (composite && a.ts.equals(b.ts) &&
-        a.id.getOrElse(Long.MinValue) > b.id.getOrElse(Long.MinValue))
-    val raw = (rowsPerPartition to keys.length by rowsPerPartition)
-      .map(p => keys(p - 1)) :+ keys.last
-    val bounds = raw.foldLeft(Vector.empty[JdbcOffset]) { (acc, k) =>
-      if (acc.isEmpty || after(k, acc.last)) acc :+ k else acc
+    val cuts = (rowsPerPartition until keys.length by rowsPerPartition) :+ keys.length
+    val ends = cuts.foldLeft(Vector.empty[Int]) { (acc, c) =>
+      if (acc.lastOption.exists(_ >= c)) acc
+      else {
+        val next = keys.indexWhere(ChunkFetcher.after(_, keys(c - 1), composite), c)
+        acc :+ (if (next < 0) keys.length else next)
+      }
     }
-    val lowers = s.pos +: bounds.init.map(Option(_))
-    lowers.zip(bounds).map { case (lo, hi) =>
+    (0 +: ends.init).zip(ends).map { case (from, until) =>
+      val lo = if (from == 0) s.pos else Some(keys(from - 1))
+      val hi = keys(until - 1)
+      val f = fetcher.getOrElse(ArrayChunkFetcher(
+        source.chunk(lo, Some(hi.ts), Some(until - from)).collect().toIndexedSeq))
       GraftJdbcRangePartition(f, source.timestampCol, source.incrementingCol,
         lo, hi): InputPartition
     }.toArray
   }
 
-  /** Restart path of the parallel planner: re-derive the committed
-    * range's keys (not rows) so the replayed batch re-plans the same
-    * splits' worth of work — deterministic under append-only.
+  /** Restart path: re-derive the committed range's keys so the replayed
+    * batch re-plans the same slices — deterministic under append-only.
+    *
+    * A committed range is probe-sized (≤ maxRowsPerPoll plus an equal-ts
+    * run) under append-only, so the re-read is capped at 2×maxRowsPerPoll
+    * keys and anything past the cap fails LOUDLY: it means the
+    * append-only assumption broke (rows inserted below a committed offset)
+    * or maxRowsPerPoll was lowered across a restart, and replanning an
+    * arbitrarily large range would hold it on the driver (and, without a
+    * fetcher, its rows) instead of naming the misconfiguration.
+    *
+    * The cap counts only keys the COMMITTED RANGE itself holds — what the
+    * forward path could legitimately have delivered in one probe:
+    *
+    *  - COMPOSITE mode: the fetch's upper bound is the coarse `ts`, so
+    *    boundary-timestamp rows appended AFTER the commit (id > end id —
+    *    the regime composite mode exists for) land in the fetch but are
+    *    beyond the range. They trim away BEFORE the length check; the
+    *    (ts, id) ordering makes the committed range a PREFIX of the
+    *    fetch, so a trimmed prefix within the cap is complete whenever
+    *    the fetch was not truncated or saw a beyond-range key.
+    *  - PURE-TIMESTAMP mode: an offset may only land on a distinct-ts
+    *    edge, and the forward path delivers an equal-ts boundary run
+    *    UNCAPPED by design ([[IncrementalJdbc.chunkKeysProbe]]). The
+    *    replay honors the same contract: only keys STRICTLY before the
+    *    committed ts count against the cap. A truncated fetch whose keys
+    *    are all strictly before it already proves the overflow and fails
+    *    before any unbounded read; otherwise the range is re-read
+    *    unbounded and the prefix is checked again.
     */
   private def replayKeys(s: GraftJdbcOffset, e: GraftJdbcOffset): Array[JdbcOffset] =
     e.pos match {
       case None => Array.empty
       case Some(endPos) =>
-        val all = source.chunkKeys(s.pos, Some(endPos.ts), None)
-        (endPos.id, source.incrementingCol) match {
-          case (Some(endId), Some(_)) =>
-            all.filter(k => k.ts.before(endPos.ts) || k.id.exists(_ <= endId))
-          case _ => all
-        }
-    }
-
-  /** Bounded re-read of a committed range — timestamp mode's append-only
-    * assumption makes this deterministic (rows at or before a committed
-    * offset never change). The stash fallback must never hold an
-    * UNBOUNDED chunk on the driver: a committed range is probe-sized
-    * (≤ maxRowsPerPoll plus an equal-timestamp run) under append-only,
-    * so the re-read is capped at 2×maxRowsPerPoll and anything past the
-    * cap fails LOUDLY — it means the append-only assumption broke (rows
-    * inserted below a committed offset), and silently stashing an
-    * arbitrarily large range would OOM the driver instead of naming the
-    * misconfiguration.
-    *
-    * The cap counts only rows the COMMITTED RANGE itself holds — what
-    * the forward path could legitimately have delivered in one poll:
-    *
-    *  - COMPOSITE mode: the fetch's upper bound is the coarse `ts`, so
-    *    boundary-timestamp rows appended AFTER the commit (id > endId —
-    *    the regime composite mode exists for) land in the fetch but are
-    *    beyond the range. They trim away BEFORE the length check; the
-    *    (ts, id) ordering makes the committed range a PREFIX of the
-    *    fetch, so a trimmed prefix within the cap is complete whenever
-    *    the fetch was not truncated or saw a beyond-range row.
-    *  - PURE-TIMESTAMP mode: an offset may only land on a distinct-ts
-    *    edge, and the forward path delivers an equal-ts boundary run
-    *    UNCAPPED by design (the unavoidable pure-ts corner — see
-    *    [[IncrementalJdbc.chunkRows]]). The replay honors the same
-    *    contract: only rows STRICTLY before the committed ts count
-    *    against the cap; an over-cap fetch re-reads the range unbounded
-    *    and fails only if the strictly-before prefix itself exceeds it.
-    */
-  private def replay(s: GraftJdbcOffset, e: GraftJdbcOffset): Array[Row] =
-    e.pos match {
-      case None => Array.empty
-      case Some(endPos) =>
         val cap = 2 * maxRows
-        def capMsg =
-          s"graft-jdbc stash replay exceeded its driver cap ($cap rows) for " +
-            s"range (${s.json()}, ${e.json()}]: the source violated the " +
-            "append-only assumption or maxRowsPerPoll was lowered across a " +
-            "restart; use a rangeFetcher source (parallelReads=true) or " +
-            "restore the original maxRowsPerPoll"
-        val fetched = source.chunk(s.pos, Some(endPos.ts), Some(cap + 1)).collect()
-        val tsIdx = schema.fieldIndex(source.timestampCol)
-        (endPos.id, source.incrementingCol) match {
-          case (Some(endId), Some(idCol)) =>
-            val idIdx = schema.fieldIndex(idCol)
-            val trimmed = fetched.filter(r =>
-              r.getTimestamp(tsIdx).before(endPos.ts) ||
-                r.getLong(idIdx) <= endId)
-            require(trimmed.length <= cap, capMsg)
-            trimmed
-          case _ =>
-            if (fetched.length <= cap) fetched
-            else {
-              // chunk() is (ts)-ordered, so a truncated cap+1 fetch whose
-              // rows are ALL strictly before endPos.ts already proves the
-              // strictly-before prefix exceeds the cap — fail HERE, before
-              // the unbounded re-fetch collect()s the very range the cap
-              // exists to keep off the driver. Only when the overflow row
-              // is the equal-ts boundary run (the documented uncapped
-              // pure-ts contract) does the unbounded read proceed, and the
-              // prefix re-check after it stays as the exact gate.
-              require(fetched.count(_.getTimestamp(tsIdx).before(endPos.ts)) <= cap,
-                capMsg)
-              val all = source.chunk(s.pos, Some(endPos.ts), None).collect()
-              require(all.count(_.getTimestamp(tsIdx).before(endPos.ts)) <= cap,
-                capMsg)
-              all
-            }
+        def check(keys: Array[JdbcOffset]): Array[JdbcOffset] = {
+          require(keys.length <= cap,
+            s"graft-jdbc replay exceeded its driver cap ($cap keys) for " +
+              s"range (${s.json()}, ${e.json()}]: the source violated the " +
+              "append-only assumption or maxRowsPerPoll was lowered across " +
+              "a restart; restore the original maxRowsPerPoll")
+          keys
+        }
+        val inRange = source.chunkKeys(s.pos, Some(endPos.ts), Some(cap + 1))
+          .filterNot(ChunkFetcher.after(_, endPos, composite))
+        if (composite || inRange.length <= cap) check(inRange)
+        else {
+          check(inRange.filter(_.ts.before(endPos.ts)))
+          val all = source.chunkKeys(s.pos, Some(endPos.ts), None)
+          check(all.filter(_.ts.before(endPos.ts)))
+          all
         }
     }
 
@@ -345,25 +281,15 @@ private[graft] class GraftJdbcMicroBatchStream(
     GraftJdbcReaderFactory(schema)
 
   override def commit(end: Offset): Unit = this.synchronized {
-    stash = stash.filterNot(_._2 == end) // batch served; free the rows
-    keysStash = keysStash.filterNot(_._2 == end)
+    probed = probed.filterNot(_._2 == end) // batch served; free the keys
   }
 
   override def stop(): Unit = ()
 }
 
-/** Stash-path partition: rows ride to executors as plain serializable
-  * [[Row]]s, already materialized on the driver by the chunk probe — the
-  * Connect single-task shape, kept as the fallback for sources without a
-  * [[ChunkFetcher]].
-  */
-private[graft] case class GraftJdbcInputPartition(rows: Array[Row],
-                                                    schema: StructType)
-    extends InputPartition
-
-/** Parallel-path partition: NO rows ride along — only the `(lower,
-  * upper]` bounds plus the serialized fetcher; the task reads its own
-  * slice where it runs (a remote range statement for JDBC).
+/** One `(lower, upper]` slice of a batch: NO rows ride along — only the
+  * bounds plus the serialized fetcher; the task reads its own slice where
+  * it runs (a remote range statement for JDBC).
   */
 private[graft] case class GraftJdbcRangePartition(
     fetcher: ChunkFetcher, timestampCol: String,
@@ -373,15 +299,10 @@ private[graft] case class GraftJdbcRangePartition(
 
 private[graft] case class GraftJdbcReaderFactory(schema: StructType)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: GraftJdbcInputPartition => reader(p.rows.iterator)
-      case p: GraftJdbcRangePartition =>
-        reader(p.fetcher.fetch(schema, p.timestampCol, p.incrementingCol,
-          p.lower, p.upper))
-    }
-
-  private def reader(rows: Iterator[Row]): PartitionReader[InternalRow] =
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[GraftJdbcRangePartition]
+    val rows = p.fetcher.fetch(schema, p.timestampCol, p.incrementingCol,
+      p.lower, p.upper)
     new PartitionReader[InternalRow] {
       private val conv = CatalystTypeConverters.createToCatalystConverter(schema)
       private var cur: Row = _
@@ -390,4 +311,5 @@ private[graft] case class GraftJdbcReaderFactory(schema: StructType)
       override def get(): InternalRow = conv(cur).asInstanceOf[InternalRow]
       override def close(): Unit = ()
     }
+  }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.sql.Timestamp
 import java.util.Properties
-import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,21 +51,24 @@ trait ChunkSource {
                 limit: Option[Int]): Array[JdbcOffset] = {
     val keyCols = col(timestampCol) +: incrementingCol.map(col).toSeq
     chunk(lower, upper, limit).select(keyCols: _*).collect().map { r =>
-      JdbcOffset(r.getTimestamp(0), incrementingCol.map(_ => r.getLong(1)))
+      JdbcOffset(r.getTimestamp(0),
+        incrementingCol.map(_ => r.getAs[Number](1).longValue))
     }
   }
 
-  /** Serializable executor-side fetcher for `(lower, upper]` row ranges.
-    * When present, the `graft-jdbc` stream plans range partitions (tasks
-    * read their own slices); None (the default) keeps the single-task
-    * driver-stash delivery path.
+  /** Serializable executor-side fetcher for `(lower, upper]` row ranges:
+    * the `graft-jdbc` stream's tasks read their own slices through it.
+    * None (the default) makes the planner read each slice on the driver
+    * instead, into an [[ArrayChunkFetcher]] holding only that slice.
     */
   def rangeFetcher: Option[ChunkFetcher] = None
 }
 
 /** [[ChunkSource]] over any snapshot-frame factory — the offline/test
   * implementation (no database in the build sandbox, SURVEY.md §7.5.1),
-  * and the fallback for sources that cannot accept injected SQL.
+  * and the fallback for sources that cannot accept injected SQL. Without
+  * a `fetcher`, the `graft-jdbc` planner reads each partition's slice
+  * from the frame on the driver, bounded by the slice's key count.
   *
   * Bounds are applied as DataFrame predicates on the provided frame: over
   * a parquet/memory frame they evaluate where the data lives; over a V1
@@ -107,73 +109,38 @@ final class SnapshotChunkSource(
   }
 }
 
-/** Incremental "timestamp-mode" table polling — the engine's analog of the
+/** Incremental "timestamp-mode" table reads — the engine's analog of the
   * reference's Kafka Connect JDBC source (`connect_postgres.config:4-14`:
   * `mode=timestamp`, `timestamp.column.name=dt_update`,
-  * `poll.interval.ms=500`).
+  * `poll.interval.ms=500`), driven by the `graft-jdbc` stream
+  * ([[GraftJdbcStream]]).
   *
-  * Semantics copied from the reference (README.md:136): every poll emits
-  * rows strictly past the last seen offset — new inserts only, updates to
-  * old rows are not re-captured. The offset is the position of the last
-  * emitted row, exactly the Connect task's stored offset.
-  *
-  * @param source where chunks come from: [[SnapshotChunkSource]] offline,
-  *   [[IncrementalJdbc.jdbcChunkSource]] against a database (bounds +
-  *   ORDER BY + LIMIT all execute remotely via an inlined subquery).
-  * @param delayIntervalMs rows newer than `now - delay` are left for a
-  *   later poll — Kafka Connect's `timestamp.delay.interval.ms`. Without
-  *   it, a transaction that commits AFTER a poll but with a dt_update
-  *   at or below the already-advanced offset is lost forever (the classic
-  *   timestamp-mode race). 0 keeps polling deterministic for tests.
-  * @param nowMillis clock the delay is measured against. MUST be the
-  *   DATABASE's clock in production (e.g. `SELECT current_timestamp` over
-  *   the same connection) — measuring against the driver's wall clock
-  *   silently erodes the delay by any driver-ahead skew, which is exactly
-  *   the window the parameter exists to protect.
-  * @param maxRowsPerPoll chunk cap: a poll that would exceed it instead
-  *   delivers the oldest `maxRowsPerPoll` rows and advances the offset to
-  *   the chunk boundary, so the next poll resumes there. This bounds the
-  *   driver-side materialization of the INITIAL backfill against a large
-  *   pre-existing table (the reference's Connect task streams that
-  *   snapshot through a JDBC cursor; we stream it across polls). The
-  *   default is finite on purpose: an uncapped first poll against a big
-  *   table is an unbounded driver collect. Pass `Int.MaxValue` explicitly
-  *   to disable chunking (tests, known-small tables).
-  * @param initialOffset seed watermark — Connect's `timestamp.initial`
-  *   analog. `Some(o)` skips the backfill of rows at or before `o`;
-  *   None starts from the beginning of the table.
+  * Semantics copied from the reference (README.md:136): every batch holds
+  * rows strictly past the last committed offset — new inserts only,
+  * updates to old rows are not re-captured. The offset is the position of
+  * the last delivered row, exactly the Connect task's stored offset.
   */
-class IncrementalJdbc(
-    source: ChunkSource,
-    delayIntervalMs: Long = 0L,
-    nowMillis: () => Long = () => System.currentTimeMillis(),
-    maxRowsPerPoll: Int = IncrementalJdbc.DefaultMaxRowsPerPoll,
-    initialOffset: Option[JdbcOffset] = None) {
-  require(maxRowsPerPoll > 0, "maxRowsPerPoll must be positive")
+object IncrementalJdbc {
 
-  /** Last emitted position; `initialOffset` before the first poll. */
-  @volatile private var offset: Option[JdbcOffset] = initialOffset
-  private val stopped = new AtomicBoolean(false)
+  /** Finite by default: an uncapped probe is an unbounded driver collect
+    * on the initial backfill. 100k keys ≈ a few MB.
+    */
+  val DefaultMaxRowsPerPoll: Int = 100000
 
-  def currentOffset: Option[JdbcOffset] = offset
-
-  /** One poll: the next chunk of at most ~[[maxRowsPerPoll]] rows past the
-    * current offset, and the offset advance. Returns the incremental batch
-    * (possibly empty).
+  /** The keys of the next chunk past `lower` and the advanced offset (None
+    * when the chunk is empty): at most ~`maxRows` (ts[, id]) keys in
+    * ascending order, and only the keys cross to the driver.
     *
-    * The batch is MATERIALIZED before the offset advances: a lazy frame
-    * would re-run the remote query at every downstream action, so rows
-    * inserted between the offset computation and the sink's evaluation
-    * would be delivered twice (this poll re-reads them, the next poll's
-    * filter matches them again). Steady-state batches are bounded by
-    * ingest-rate × poll-interval; the initial backfill is bounded by
-    * [[maxRowsPerPoll]] per chunk (the materialize-before-advance
-    * invariant holds per chunk).
+    * The cap bounds the driver-side materialization of the INITIAL
+    * backfill against a large pre-existing table (the reference's Connect
+    * task streams that snapshot through a JDBC cursor; the stream spreads
+    * it across micro-batches): a chunk that would exceed it ends at the
+    * chunk boundary, and the next probe resumes there.
     *
     * Chunk-boundary semantics by mode:
     *  - COMPOSITE (`incrementingCol` set, Connect's
     *    `timestamp+incrementing`): `(ts, id)` totally orders rows, so the
-    *    cap cuts anywhere — every chunk is exactly ≤ cap rows, including
+    *    cap cuts anywhere — every chunk is exactly ≤ cap keys, including
     *    runs of equal timestamps larger than the cap (they span chunks,
     *    resumed by the id tiebreak). Prefer this mode for
     *    coarse-granularity timestamp columns (second-precision at high
@@ -182,93 +149,14 @@ class IncrementalJdbc(
     *    boundary may only land on a DISTINCT-timestamp edge — splitting an
     *    equal-ts run would silently skip its tail. When the cap cuts
     *    mid-run we back off to the previous distinct timestamp; if every
-    *    fetched row shares ONE timestamp the whole run is delivered in
-    *    this chunk, EXCEEDING the cap via an unbounded collect — the
+    *    fetched key shares ONE timestamp the whole run is delivered in
+    *    this chunk, EXCEEDING the cap via an unbounded read — the
     *    unavoidable pure-timestamp corner (same as Connect). With a
     *    coarse timestamp column this re-opens the OOM the cap exists to
     *    prevent: use composite mode there.
     *
-    * The over-fetch of one row (cap+1) distinguishes "exactly the cap"
+    * The over-fetch of one key (cap+1) distinguishes "exactly the cap"
     * from "truncated at the cap" without a second round-trip.
-    */
-  def poll(): DataFrame = {
-    val upper =
-      if (delayIntervalMs > 0) Some(new Timestamp(nowMillis() - delayIntervalMs))
-      else None
-    val (rows, schema, newOffset) =
-      IncrementalJdbc.chunkRows(source, offset, upper, maxRowsPerPoll)
-    val stable = SparkSession.active.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-    newOffset.foreach(o => offset = Some(o))
-    stable
-  }
-
-  /** Poll loop at `intervalMs` (reference default 500 ms), invoking `sink`
-    * per non-empty batch, until [[stop]] — the pragmatic micro-batch loop
-    * of SURVEY.md §7.4. Runs on the calling thread; callers wrap in a
-    * Future/Thread for background use.
-    */
-  def run(intervalMs: Long = 500L, maxPolls: Long = Long.MaxValue)
-         (sink: DataFrame => Unit): Unit = {
-    var polls = 0L
-    while (!stopped.get() && polls < maxPolls) {
-      val batch = poll()
-      if (!batch.isEmpty) sink(batch)
-      polls += 1
-      if (!stopped.get() && polls < maxPolls) Thread.sleep(intervalMs)
-    }
-  }
-
-  def stop(): Unit = stopped.set(true)
-}
-
-object IncrementalJdbc {
-
-  /** Finite by default: an uncapped poll is an unbounded driver collect on
-    * the initial backfill. 100k rows ≈ tens of MB for a typical row.
-    */
-  val DefaultMaxRowsPerPoll: Int = 100000
-
-  /** One materialized chunk past `lower`: the shared probe + boundary
-    * logic behind both [[IncrementalJdbc.poll]] and the DSv2
-    * [[GraftJdbcMicroBatchStream]]. Returns the delivered rows (ascending
-    * (ts[, id]) order), their schema, and the advanced offset (None when
-    * the chunk is empty). See [[IncrementalJdbc.poll]]'s scaladoc for the
-    * chunk-boundary semantics per mode.
-    */
-  def chunkRows(source: ChunkSource, lower: Option[JdbcOffset],
-                upper: Option[Timestamp], maxRows: Int)
-      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType,
-         Option[JdbcOffset]) = {
-    val capped = maxRows < Int.MaxValue
-    val probe = source.chunk(lower, upper, if (capped) Some(maxRows + 1) else None)
-    val schema = probe.schema
-    val tsIdx = schema.fieldIndex(source.timestampCol)
-    val idIdx = source.incrementingCol.map(schema.fieldIndex)
-    val fetched = probe.collect()
-    val rows =
-      if (!capped || fetched.length <= maxRows) fetched
-      else idIdx match {
-        case Some(_) => fetched.take(maxRows)
-        case None =>
-          val chunkMax = fetched.last.getTimestamp(tsIdx) // sorted asc
-          val beforeMax = fetched.filter(_.getTimestamp(tsIdx).before(chunkMax))
-          if (beforeMax.nonEmpty) beforeMax
-          // Every fetched row shares chunkMax: deliver the full equal-ts
-          // run so the strictly-greater resume filter cannot skip its
-          // tail (unbounded by design; composite mode is the escape).
-          else source.chunk(lower, Some(chunkMax), None).collect()
-      }
-    val next = rows.lastOption.map(last => // ascending (ts[, id]) order
-      JdbcOffset(last.getTimestamp(tsIdx), idIdx.map(i => last.getLong(i))))
-    (rows, schema, next)
-  }
-
-  /** Keys-only analog of [[chunkRows]]: identical chunk-boundary
-    * semantics (cap, composite cut-anywhere, pure-timestamp distinct-ts
-    * backoff and equal-run fallback), but only (ts[, id]) keys cross to
-    * the driver — the probe behind parallel range planning. Returns the
-    * chunk's keys and the advanced offset (None when empty).
     */
   def chunkKeysProbe(source: ChunkSource, lower: Option[JdbcOffset],
                      upper: Option[Timestamp], maxRows: Int)
@@ -284,8 +172,7 @@ object IncrementalJdbc {
         val beforeMax = fetched.filter(_.ts.before(chunkMax))
         if (beforeMax.nonEmpty) beforeMax
         // every fetched key shares chunkMax: deliver the full equal-ts
-        // run (see chunkRows — the strictly-greater resume filter must
-        // not skip its tail)
+        // run so the strictly-greater resume filter cannot skip its tail
         else source.chunkKeys(lower, Some(chunkMax), None)
       }
     (keys, keys.lastOption)
@@ -299,40 +186,12 @@ object IncrementalJdbc {
     */
   def rangeSql(table: String, timestampCol: String,
                incrementingCol: Option[String],
-               lower: Option[JdbcOffset], upper: JdbcOffset): String = {
-    def tsLit(t: Timestamp) = s"TIMESTAMP '${t.toString}'"
-    val lowerPred = lower.map { o =>
-      (incrementingCol, o.id) match {
-        case (Some(idCol), Some(i)) =>
-          s"($timestampCol > ${tsLit(o.ts)} OR ($timestampCol = ${tsLit(o.ts)} AND $idCol > $i))"
-        case _ => s"$timestampCol > ${tsLit(o.ts)}"
-      }
-    }
-    val upperPred = (incrementingCol, upper.id) match {
-      case (Some(idCol), Some(i)) =>
-        s"($timestampCol < ${tsLit(upper.ts)} OR ($timestampCol = ${tsLit(upper.ts)} AND $idCol <= $i))"
-      case _ => s"$timestampCol <= ${tsLit(upper.ts)}"
-    }
-    val preds = (Seq(s"$timestampCol IS NOT NULL") ++ lowerPred) :+ upperPred
-    val order = (Seq(timestampCol) ++ incrementingCol)
-      .map(_ + " ASC").mkString(", ")
-    s"SELECT * FROM $table WHERE ${preds.mkString(" AND ")} ORDER BY $order"
-  }
-
-  /** Offline/test construction over a snapshot-frame factory. */
-  def ofSnapshot(provider: () => DataFrame,
-                 timestampCol: String = "dt_update",
-                 incrementingCol: Option[String] = None,
-                 delayIntervalMs: Long = 0L,
-                 nowMillis: () => Long = () => System.currentTimeMillis(),
-                 maxRowsPerPoll: Int = DefaultMaxRowsPerPoll,
-                 initialOffset: Option[JdbcOffset] = None): IncrementalJdbc =
-    new IncrementalJdbc(
-      new SnapshotChunkSource(provider, timestampCol, incrementingCol),
-      delayIntervalMs, nowMillis, maxRowsPerPoll, initialOffset)
+               lower: Option[JdbcOffset], upper: JdbcOffset): String =
+    orderedSelect(table, timestampCol, incrementingCol, lower,
+      Some(keyPred(timestampCol, incrementingCol, upper, "<", "<=")))
 
   /** The remote chunk statement, inlined as a dbtable subquery. Pure
-    * function so the exact SQL a poll ships to the database is
+    * function so the exact SQL a probe ships to the database is
     * unit-testable without a database.
     *
     * Timestamp literals use the ANSI `TIMESTAMP '...'` form with
@@ -346,26 +205,44 @@ object IncrementalJdbc {
                incrementingCol: Option[String],
                lower: Option[JdbcOffset], upper: Option[Timestamp],
                limit: Option[Int]): String = {
-    def tsLit(t: Timestamp) = s"TIMESTAMP '${t.toString}'"
-    val lowerPred = lower.map { o =>
-      (incrementingCol, o.id) match {
-        case (Some(idCol), Some(i)) =>
-          s"($timestampCol > ${tsLit(o.ts)} OR ($timestampCol = ${tsLit(o.ts)} AND $idCol > $i))"
-        case _ => s"$timestampCol > ${tsLit(o.ts)}"
-      }
-    }
-    val preds = Seq(s"$timestampCol IS NOT NULL") ++ lowerPred ++
-      upper.map(u => s"$timestampCol <= ${tsLit(u)}")
-    val order = (Seq(timestampCol) ++ incrementingCol)
-      .map(_ + " ASC").mkString(", ")
+    val upperPred = upper.map(u =>
+      keyPred(timestampCol, incrementingCol, JdbcOffset(u), "<", "<="))
     val lim = limit.map(n => s" LIMIT $n").getOrElse("")
-    s"(SELECT * FROM $table WHERE ${preds.mkString(" AND ")} ORDER BY $order$lim) __graft_chunk"
+    s"(${orderedSelect(table, timestampCol, incrementingCol, lower, upperPred)}$lim) __graft_chunk"
+  }
+
+  /** `SELECT *` of the non-NULL-timestamp rows strictly past `lower`
+    * (plus `upperPred`) in ascending (ts[, id]) order — the statement
+    * shape [[chunkSql]] and [[rangeSql]] share.
+    */
+  private def orderedSelect(table: String, timestampCol: String,
+                            incrementingCol: Option[String],
+                            lower: Option[JdbcOffset],
+                            upperPred: Option[String]): String = {
+    val preds = Seq(s"$timestampCol IS NOT NULL") ++
+      lower.map(keyPred(timestampCol, incrementingCol, _, ">", ">")) ++ upperPred
+    val order = (timestampCol +: incrementingCol.toSeq).map(_ + " ASC").mkString(", ")
+    s"SELECT * FROM $table WHERE ${preds.mkString(" AND ")} ORDER BY $order"
+  }
+
+  /** `(ts[, id])` compared with `key`: `ts <tie> key.ts` on ts alone
+    * (pure timestamp mode, or a key without an id), else
+    * `ts <strict> key.ts OR (ts = key.ts AND id <tie> key.id)`.
+    */
+  private def keyPred(timestampCol: String, incrementingCol: Option[String],
+                      key: JdbcOffset, strict: String, tie: String): String = {
+    val ts = s"TIMESTAMP '${key.ts.toString}'"
+    (incrementingCol, key.id) match {
+      case (Some(idCol), Some(i)) =>
+        s"($timestampCol $strict $ts OR ($timestampCol = $ts AND $idCol $tie $i))"
+      case _ => s"$timestampCol $tie $ts"
+    }
   }
 
   /** Production provider (reference `connect_postgres.config:6-8,11` —
     * url/user/password + table whitelist): each chunk is ONE remote
     * statement carrying the WHERE bounds, the ORDER BY and the LIMIT via
-    * [[chunkSql]], so the database streams at most `limit` rows per poll —
+    * [[chunkSql]], so the database streams at most `limit` rows per probe —
     * a true remote top-k, never a full scan. (Spark's V1 JDBC relation
     * pushes only predicates, which is why the limit is inlined into the
     * dbtable subquery instead of composed as `.sort.limit` on the frame.)

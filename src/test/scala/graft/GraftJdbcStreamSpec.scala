@@ -3,8 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
-import graft.sources.{ArrayChunkFetcher, ChunkFetcher, GraftJdbcStream, IncrementalJdbc, JdbcOffset, SnapshotChunkSource}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.{ArrayChunkFetcher, ChunkFetcher, ChunkSource, GraftJdbcMicroBatchStream, GraftJdbcOffset, GraftJdbcStream, JdbcOffset, SnapshotChunkSource}
 
 /** The DSv2 `graft-jdbc` streaming source end-to-end: real
   * `spark.readStream` queries over a registered ChunkSource — offsets,
@@ -18,8 +22,42 @@ class GraftJdbcStreamSpec extends SparkSpec {
     rows.map { case (id, ms) => (id, new Timestamp(ms)) }
       .toDF("id", "dt_update")
 
+  private def tableWithNulls(rows: (Long, Option[Long])*): DataFrame =
+    rows.map { case (id, ms) => (id, ms.map(new Timestamp(_)).orNull) }
+      .toDF("id", "dt_update")
+
+  /** The same table as a frame-only source (slices read on the driver at
+    * plan time) and as a source with a fetcher (tasks read their slices).
+    */
+  private def bothKinds(df: DataFrame, incrementingCol: Option[String] = None)
+      : Seq[(String, SnapshotChunkSource)] = Seq(
+    "no fetcher" -> new SnapshotChunkSource(() => df, incrementingCol = incrementingCol),
+    "fetcher" -> new SnapshotChunkSource(() => df, incrementingCol = incrementingCol,
+      fetcher = Some(ArrayChunkFetcher(df.collect().toIndexedSeq))))
+
+  /** A stream instance driven by hand, as the engine drives it. */
+  private def stream(src: ChunkSource, schema: org.apache.spark.sql.types.StructType,
+                     opts: (String, String)*): GraftJdbcMicroBatchStream = {
+    val all = (("sourceHandle" -> handle(src)) +: opts).toMap
+    new GraftJdbcMicroBatchStream(schema, new CaseInsensitiveStringMap(all.asJava))
+  }
+
+  private def range(endMs: Long, endId: Option[Long] = None) =
+    (GraftJdbcOffset(None), GraftJdbcOffset(Some(JdbcOffset(new Timestamp(endMs), endId))))
+
+  /** Every row the planned partitions read, as their ids, sorted. */
+  private def drain(s: GraftJdbcMicroBatchStream, parts: Array[InputPartition]): Seq[Long] = {
+    val factory = s.createReaderFactory()
+    parts.flatMap { p =>
+      val r = factory.createReader(p)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+      while (r.next()) buf += r.get().getLong(0)
+      buf
+    }.sorted.toSeq
+  }
+
   private var n = 0
-  private def handle(src: SnapshotChunkSource): String = {
+  private def handle(src: ChunkSource): String = {
     n += 1
     val key = s"spec_src_$n"
     GraftJdbcStream.registry.put(key, src)
@@ -168,7 +206,9 @@ class GraftJdbcStreamSpec extends SparkSpec {
       fetcher = Some(SharedRowsFetcher(k))))
     val ckp = Files.createTempDirectory("gjs_pckp_").toString
     val out = Files.createTempDirectory("gjs_pout_").toString
-    def start() = readStream(key, "rowsPerPartition" -> "1").writeStream
+    // a one-key cap: a restart that re-probed from the table start would
+    // end its first batch below the committed offset and re-deliver rows
+    def start() = readStream(key, "rowsPerPartition" -> "1", "maxRowsPerPoll" -> "1").writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckp).start()
 
@@ -188,101 +228,60 @@ class GraftJdbcStreamSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("stash replay is hard-capped: oversized committed range fails loudly") {
-    // the round-10 advisory retirement: the driver-stash fallback used to
-    // re-read a committed range UNCAPPED onto the driver on restart; it
-    // now fetches at most 2×maxRowsPerPoll rows and refuses past that —
-    // an oversized range means the append-only assumption broke, and the
-    // failure names the fix instead of OOMing the driver
+  test("key replay is hard-capped: oversized committed range fails loudly") {
+    // a committed range is probe-sized under append-only; the replay
+    // re-reads at most 2×maxRowsPerPoll keys and refuses past that — an
+    // oversized range means the append-only assumption broke, and the
+    // failure names the fix instead of holding the range on the driver
     val snap = table((1L to 50L).map(i => (i, 1000L * i)): _*)
-    val key = handle(new SnapshotChunkSource(() => snap)) // no fetcher → stash
-    val stream = new graft.sources.GraftJdbcMicroBatchStream(snap.schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("sourceHandle", key, "maxRowsPerPoll", "10")))
-    val e = intercept[IllegalArgumentException] {
-      stream.planInputPartitions(
-        graft.sources.GraftJdbcOffset(None),
-        graft.sources.GraftJdbcOffset(Some(JdbcOffset(new Timestamp(50000L)))))
+    for (mode <- Seq(None, Some("id")); (kind, src) <- bothKinds(snap, mode)) {
+      val s = stream(src, snap.schema, "maxRowsPerPoll" -> "10")
+      val (lo, hi) = range(50000L, mode.map(_ => 50L))
+      val e = intercept[IllegalArgumentException](s.planInputPartitions(lo, hi))
+      assert(e.getMessage.contains("driver cap"), s"$kind $mode: ${e.getMessage}")
+      // a probe-sized committed range still replays through the same path
+      val (plo, phi) = range(15000L, mode.map(_ => 15L))
+      assert(drain(s, s.planInputPartitions(plo, phi)) == (1L to 15L), s"$kind $mode")
     }
-    assert(e.getMessage.contains("driver cap"), e.getMessage)
-    // a probe-sized committed range still replays through the same path
-    val parts = stream.planInputPartitions(
-      graft.sources.GraftJdbcOffset(None),
-      graft.sources.GraftJdbcOffset(Some(JdbcOffset(new Timestamp(15000L)))))
-    val factory = stream.createReaderFactory()
-    val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) buf += r.get().getLong(0)
-      buf
-    }
-    assert(got.sorted.toSeq == (1L to 15L))
   }
 
   test("oversized pure-ts replay fails from the truncated fetch, before any unbounded read") {
-    // r12 advisory: when the capped cap+1 fetch already proves the
-    // strictly-before prefix exceeds the cap (every fetched row is
-    // strictly before the committed ts), the cap error must fire THERE —
-    // the unbounded re-fetch would collect() onto the driver exactly the
-    // range the cap exists to keep off it
-    val snap = table((1L to 50L).map(i => (i, 1000L * i)): _*)
-    val inner = new SnapshotChunkSource(() => snap)
-    var unbounded = 0
-    val counting = new graft.sources.ChunkSource {
+    // when the capped cap+1 key fetch already proves the strictly-before
+    // prefix exceeds the cap (every fetched key is strictly before the
+    // committed ts), the cap error must fire THERE — the unbounded
+    // re-read would collect onto the driver exactly the range the cap
+    // exists to keep off it
+    def counting(inner: ChunkSource, unbounded: () => Unit) = new ChunkSource {
       override def timestampCol: String = inner.timestampCol
       override def incrementingCol: Option[String] = inner.incrementingCol
-      override def chunk(lower: Option[graft.sources.JdbcOffset],
-                         upper: Option[Timestamp],
+      override def chunk(lower: Option[JdbcOffset], upper: Option[Timestamp],
                          limit: Option[Int]): DataFrame = {
-        if (limit.isEmpty && upper.isDefined) unbounded += 1
+        if (limit.isEmpty && upper.isDefined) unbounded()
         inner.chunk(lower, upper, limit)
       }
+      override def rangeFetcher: Option[ChunkFetcher] = inner.rangeFetcher
     }
-    GraftJdbcStream.registry.put("spec_precheck", counting)
-    val stream = new graft.sources.GraftJdbcMicroBatchStream(snap.schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("sourceHandle", "spec_precheck", "maxRowsPerPoll", "10")))
-    val e = intercept[IllegalArgumentException] {
-      stream.planInputPartitions(
-        graft.sources.GraftJdbcOffset(None),
-        graft.sources.GraftJdbcOffset(Some(JdbcOffset(new Timestamp(50000L)))))
-    }
-    assert(e.getMessage.contains("driver cap"), e.getMessage)
-    assert(unbounded == 0,
-      "the cap must fail from the truncated fetch; an unbounded re-read ran first")
+    val snap = table((1L to 50L).map(i => (i, 1000L * i)): _*)
     // the equal-ts boundary run (the documented uncapped contract) still
     // reaches the unbounded read and replays completely
     val run = table((1L to 30L).map(i => (i, 1000L)): _*)
-    val runInner = new SnapshotChunkSource(() => run)
-    GraftJdbcStream.registry.put("spec_precheck_run", runInner)
-    val runStream = new graft.sources.GraftJdbcMicroBatchStream(run.schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("sourceHandle", "spec_precheck_run",
-          "maxRowsPerPoll", "10")))
-    val parts = runStream.planInputPartitions(
-      graft.sources.GraftJdbcOffset(None),
-      graft.sources.GraftJdbcOffset(Some(JdbcOffset(new Timestamp(1000L)))))
-    val factory = runStream.createReaderFactory()
-    val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) buf += r.get().getLong(0)
-      buf
+    for (((kind, src), (_, runSrc)) <- bothKinds(snap).zip(bothKinds(run))) {
+      var unbounded = 0
+      val s = stream(counting(src, () => unbounded += 1), snap.schema,
+        "maxRowsPerPoll" -> "10")
+      val e = intercept[IllegalArgumentException] {
+        s.planInputPartitions(range(50000L)._1, range(50000L)._2)
+      }
+      assert(e.getMessage.contains("driver cap"), s"$kind: ${e.getMessage}")
+      assert(unbounded == 0,
+        s"$kind: the cap must fail from the truncated fetch; an unbounded re-read ran first")
+      val runStream = stream(runSrc, run.schema, "maxRowsPerPoll" -> "10")
+      val (lo, hi) = range(1000L)
+      assert(drain(runStream, runStream.planInputPartitions(lo, hi)) == (1L to 30L), kind)
     }
-    assert(got.sorted.toSeq == (1L to 30L))
   }
 
-  test("stash replay cap counts only the committed range (round-11 advisory)") {
-    def drain(stream: graft.sources.GraftJdbcMicroBatchStream,
-              parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Long] = {
-      val factory = stream.createReaderFactory()
-      parts.flatMap { p =>
-        val r = factory.createReader(p)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (r.next()) buf += r.get().getLong(0)
-        buf
-      }.sorted.toSeq
-    }
+  test("key replay cap counts only the committed range, both source kinds") {
     // COMPOSITE: rows appended at the boundary timestamp AFTER the commit
     // (the coarse-ts regime composite mode exists for) land in the ts<=end
     // fetch but are beyond the committed range — they must not trip the
@@ -290,29 +289,84 @@ class GraftJdbcStreamSpec extends SparkSpec {
     // the range is 20 rows (== cap), the fetch is 40.
     val comp = table(((1L to 15L).map(i => (i, 1000L * i)) ++
       (16L to 40L).map(i => (i, 16000L))): _*)
-    val compStream = new graft.sources.GraftJdbcMicroBatchStream(comp.schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("sourceHandle",
-          handle(new SnapshotChunkSource(() => comp, incrementingCol = Some("id"))),
-          "maxRowsPerPoll", "10")))
-    val compParts = compStream.planInputPartitions(
-      graft.sources.GraftJdbcOffset(None),
-      graft.sources.GraftJdbcOffset(
-        Some(JdbcOffset(new Timestamp(16000L), Some(20L)))))
-    assert(drain(compStream, compParts) == (1L to 20L))
     // PURE-TS: an equal-ts run is delivered uncapped by design on the
     // forward path (an offset can only land on a distinct-ts edge), so a
     // committed 30-row run past the 20-row cap must stay replayable.
     val run = table((1L to 30L).map(i => (i, 1000L)): _*)
-    val runStream = new graft.sources.GraftJdbcMicroBatchStream(run.schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("sourceHandle",
-          handle(new SnapshotChunkSource(() => run)),
-          "maxRowsPerPoll", "10")))
-    val runParts = runStream.planInputPartitions(
-      graft.sources.GraftJdbcOffset(None),
-      graft.sources.GraftJdbcOffset(Some(JdbcOffset(new Timestamp(1000L)))))
-    assert(drain(runStream, runParts) == (1L to 30L))
+    for (((kind, compSrc), (_, runSrc)) <- bothKinds(comp, Some("id")).zip(bothKinds(run))) {
+      val compStream = stream(compSrc, comp.schema, "maxRowsPerPoll" -> "10")
+      val (clo, chi) = range(16000L, Some(20L))
+      assert(drain(compStream, compStream.planInputPartitions(clo, chi)) == (1L to 20L), kind)
+      val runStream = stream(runSrc, run.schema, "maxRowsPerPoll" -> "10")
+      val (rlo, rhi) = range(1000L)
+      assert(drain(runStream, runStream.planInputPartitions(rlo, rhi)) == (1L to 30L), kind)
+    }
+  }
+
+  test("fetcher and no-fetcher sources give identical batches and partitions") {
+    // equal-ts runs (cut by the cap and by the split), NULL timestamps,
+    // both modes: only where the rows are read may differ
+    val snap = tableWithNulls(((1L to 9L).map(i => (i, Some(1000L))) ++
+      Seq((10L, None), (11L, Some(2000L)), (12L, None)) ++
+      (13L to 30L).map(i => (i, Some(3000L + i / 4)))): _*)
+    for (mode <- Seq(None, Some("id"))) {
+      val runs = bothKinds(snap, mode).map { case (kind, src) =>
+        val batches = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], Int)]
+        val q = readStream(handle(src), "maxRowsPerPoll" -> "7", "rowsPerPartition" -> "3")
+          .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+            val ids = b.select("id").as[Long].collect().sorted.toSeq
+            if (ids.nonEmpty) batches.synchronized { batches += ids -> b.rdd.getNumPartitions }
+            ()
+          }.start()
+        try q.processAllAvailable() finally q.stop()
+        kind -> batches.toVector
+      }
+      val (_, noFetcher) = runs.head
+      val (_, withFetcher) = runs.last
+      assert(noFetcher == withFetcher, s"mode=$mode")
+      assert(noFetcher.flatMap(_._1).sorted ==
+        ((1L to 9L) ++ Seq(11L) ++ (13L to 30L)), s"mode=$mode: exactly once, no NULL timestamps")
+      assert(noFetcher.size > 1 && noFetcher.exists(_._2 > 1),
+        s"mode=$mode: expected capped multi-partition batches, got $noFetcher")
+    }
+  }
+
+  test("an INTEGER incrementing column reads as a long key: probe, fetch, stream") {
+    // Postgres SERIAL / INTEGER ids arrive as IntegerType
+    val ts = (ms: Long) => new Timestamp(ms)
+    val snap = Seq((1, ts(1000L)), (2, ts(1000L)), (3, ts(2000L)), (4, ts(2000L)))
+      .toDF("id", "dt_update")
+    val src = new SnapshotChunkSource(() => snap, incrementingCol = Some("id"))
+    assert(src.chunkKeys(None, None, None).toSeq ==
+      Seq(1L -> 1000L, 2L -> 1000L, 3L -> 2000L, 4L -> 2000L)
+        .map { case (id, ms) => JdbcOffset(ts(ms), Some(id)) })
+    val sliced = ArrayChunkFetcher(snap.collect().toIndexedSeq).fetch(snap.schema,
+      "dt_update", Some("id"), Some(JdbcOffset(ts(1000L), Some(1L))),
+      JdbcOffset(ts(2000L), Some(3L)))
+    assert(sliced.map(_.getInt(0)).toSeq == Seq(2, 3))
+    for ((kind, s) <- bothKinds(snap, Some("id"))) {
+      val q = graft.streaming.Pipelines.startMemorySink(
+        readStream(handle(s), "maxRowsPerPoll" -> "3"), s"gjs_int_${kind.replace(' ', '_')}")
+      try {
+        q.processAllAvailable()
+        assert(spark.table(s"gjs_int_${kind.replace(' ', '_')}").select("id").as[Int]
+          .collect().sorted.toSeq == Seq(1, 2, 3, 4), kind)
+      } finally q.stop()
+    }
+  }
+
+  test("the stream rejects a non-integral id column and non-positive row counts") {
+    val snap = table((1L, 1000L))
+    val src = new SnapshotChunkSource(() => snap)
+    for ((opt, v) <- Seq("maxRowsPerPoll" -> "0", "maxRowsPerPoll" -> "-1",
+                         "rowsPerPartition" -> "0", "rowsPerPartition" -> "-1")) {
+      val e = intercept[IllegalArgumentException](stream(src, snap.schema, opt -> v))
+      assert(e.getMessage.contains(s"'$opt'") && e.getMessage.contains(v), e.getMessage)
+    }
+    val named = Seq(("a", new Timestamp(1000L))).toDF("id", "dt_update")
+    val e = intercept[IllegalArgumentException](stream(
+      new SnapshotChunkSource(() => named, incrementingCol = Some("id")), named.schema))
+    assert(e.getMessage.contains("'id'") && e.getMessage.contains("STRING"), e.getMessage)
   }
 
   test("offset json round-trips both modes") {

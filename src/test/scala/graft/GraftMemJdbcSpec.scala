@@ -348,20 +348,21 @@ class GraftMemJdbcSpec extends SparkSpec {
   }
 
   test("jdbcChunkSource polls through spark.read.jdbc against the in-process driver") {
-    // the PRODUCTION driver-side path: every chunk is one remote
+    // the PRODUCTION driver-side probe: every chunk is one remote
     // statement (bounds + ORDER BY + LIMIT inlined as a dbtable
     // subquery), resolved through Spark's V1 JDBC relation — schema
     // probe (WHERE 1=0 + ResultSetMetaData) and scan both execute
     // against the in-process driver
     val src = IncrementalJdbc.jdbcChunkSource(spark, url, "customers",
       new Properties(), "dt_update", Some("id"))
-    val inc = new IncrementalJdbc(src, maxRowsPerPoll = 2)
-    // chunked backfill: 2 + 2 + 1 rows in (ts, id) order, NULL ts absent
-    val polls = Iterator.continually(inc.poll().collect().map(_.getLong(0)).toSeq)
-      .takeWhile(_.nonEmpty).toVector
-    assert(polls == Vector(Seq(1L, 2L), Seq(3L, 4L), Seq(6L)),
+    // chunked backfill: 2 + 2 + 1 keys in (ts, id) order, NULL ts absent
+    val polls = Iterator.unfold(Option.empty[JdbcOffset]) { pos =>
+      val (keys, next) = IncrementalJdbc.chunkKeysProbe(src, pos, None, 2)
+      if (keys.isEmpty) None else Some((keys.toSeq, next))
+    }.toVector
+    assert(polls.map(_.flatMap(_.id)) == Vector(Seq(1L, 2L), Seq(3L, 4L), Seq(6L)),
       s"polls=$polls")
-    assert(inc.currentOffset.contains(JdbcOffset(ts(40), Some(6L))))
+    assert(polls.last.last == JdbcOffset(ts(40), Some(6L)))
     // schema came through the JDBC metadata probe, not a guess
     val schemaGot = src.chunk(None, None, Some(1)).schema
     assert(schemaGot.fieldNames.toSeq == Seq("id", "nome", "dt_update"))

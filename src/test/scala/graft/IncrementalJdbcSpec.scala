@@ -3,8 +3,12 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import graft.sources.{IncrementalJdbc, JdbcOffset, SnapshotChunkSource}
+import graft.sources.{ChunkSource, IncrementalJdbc, JdbcOffset, SnapshotChunkSource}
 
+/** Chunk probing ([[IncrementalJdbc.chunkKeysProbe]]) and the remote SQL
+  * it ships. Each "poll" is one probe resuming at the previous probe's
+  * offset — what the `graft-jdbc` stream does once per micro-batch.
+  */
 class IncrementalJdbcSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,135 +20,124 @@ class IncrementalJdbcSpec extends SparkSpec {
     rows.map { case (id, ms) => (id, ms.map(new Timestamp(_)).orNull) }
       .toDF("id", "dt_update")
 
-  private def ids(df: DataFrame): Seq[Long] =
-    df.select("id").as[Long].collect().toSeq
+  private def source(df: DataFrame, incrementingCol: Option[String] = None) =
+    new SnapshotChunkSource(() => df, incrementingCol = incrementingCol)
+
+  /** Successive probes from `from` until one comes back empty: each
+    * chunk's keys and the offset it advanced to.
+    */
+  private def polls(src: ChunkSource, maxRows: Int = Int.MaxValue,
+                    from: Option[JdbcOffset] = None)
+      : Vector[(Seq[JdbcOffset], JdbcOffset)] =
+    Iterator.unfold(from) { pos =>
+      val (keys, next) = IncrementalJdbc.chunkKeysProbe(src, pos, None, maxRows)
+      if (keys.isEmpty) { assert(next.isEmpty); None }
+      else Some(((keys.toSeq, next.get), next))
+    }.toVector
+
+  private def ms(keys: Seq[JdbcOffset]): Seq[Long] = keys.map(_.ts.getTime)
+  private def ids(keys: Seq[JdbcOffset]): Seq[Long] = keys.flatMap(_.id)
+  private def at(millis: Long, id: Option[Long] = None) = JdbcOffset(new Timestamp(millis), id)
 
   test("timestamp-mode polling: first poll full snapshot, then strict increments") {
     @volatile var snap = table((1L, 1000L), (2L, 2000L))
-    val src = IncrementalJdbc.ofSnapshot(() => snap)
-
-    val b1 = src.poll()
-    assert(b1.count() == 2)
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(2000L))))
-
-    // nothing new → empty batch, offset unchanged
-    assert(src.poll().isEmpty)
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(2000L))))
-
-    // an insert and a *backdated* update: only the insert is captured
-    // (reference README.md:136 — timestamp mode misses non-advancing rows)
+    val src = new SnapshotChunkSource(() => snap)
+    val chunks = polls(src)
+    assert(chunks.map(c => ms(c._1)) == Vector(Seq(1000L, 2000L)))
+    val offset = chunks.head._2
+    assert(offset == at(2000L))
+    // nothing new → an empty probe, no offset advance
+    assert(polls(src, from = Some(offset)).isEmpty)
+    // an insert arrives, and only the insert
     snap = table((1L, 1000L), (2L, 2000L), (3L, 3000L))
-    assert(ids(src.poll()) == Seq(3L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(3000L))))
-  }
-
-  test("run loop drains batches into the sink and stops") {
-    @volatile var snap = table((1L, 1000L))
-    val src = IncrementalJdbc.ofSnapshot(() => snap)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    src.run(intervalMs = 1L, maxPolls = 3) { b =>
-      seen ++= ids(b)
-      snap = table((1L, 1000L), (2L, 2000L)) // next poll sees an insert
-    }
-    assert(seen.take(2) == Seq(1L, 2L))
+    assert(polls(src, from = Some(offset)) == Vector((Seq(at(3000L)), at(3000L))))
   }
 
   test("capped backfill reassembles a large table across polls, offsets strictly advance") {
-    val snap = table((1L to 25L).map(i => (i, i * 1000L)): _*)
-    val src = IncrementalJdbc.ofSnapshot(() => snap, maxRowsPerPoll = 10)
-    var offsets = Vector.empty[Timestamp]
-    var all = Vector.empty[Seq[Long]]
-    for (_ <- 1 to 3) {
-      all :+= ids(src.poll())
-      offsets :+= src.currentOffset.get.ts
-    }
-    assert(all.map(_.size) == Vector(10, 10, 5))
-    // lossless reassembly: the union of chunks IS the table, no dup/loss
-    assert(all.flatten.sorted == (1L to 25L))
-    // each chunk is the next ascending slice (ordered delivery)
-    assert(all.flatten == (1L to 25L))
-    // offsets strictly advance chunk over chunk
-    assert(offsets.sliding(2).forall { case Seq(a, b) => b.after(a) })
-    // backfill done: further polls are empty and do not move the offset
-    assert(src.poll().isEmpty)
-    assert(src.currentOffset.get.ts == offsets.last)
+    val src = source(table((1L to 25L).map(i => (i, i * 1000L)): _*))
+    val chunks = polls(src, maxRows = 10)
+    assert(chunks.map(_._1.size) == Vector(10, 10, 5))
+    // lossless, ordered reassembly: the chunks in sequence ARE the table
+    assert(chunks.flatMap(c => ms(c._1)) == (1L to 25L).map(_ * 1000L))
+    // each chunk's offset is its last key, and offsets strictly advance
+    assert(chunks.forall { case (keys, o) => keys.last == o })
+    val offsets = chunks.map(_._2.ts)
+    assert(offsets.zip(offsets.tail).forall { case (a, b) => b.after(a) })
+    // backfill done: a further probe is empty
+    assert(polls(src, 10, Some(chunks.last._2)).isEmpty)
   }
 
   test("pure timestamp mode: an equal-ts run larger than the cap is delivered whole") {
-    val snap = table((1L to 12L).map(i => (i, 5000L)): _*)
-    val src = IncrementalJdbc.ofSnapshot(() => snap, maxRowsPerPoll = 5)
+    val src = source(table((1L to 12L).map(i => (i, 5000L)): _*))
     // the strictly-greater resume filter cannot split the run, so the
     // whole run arrives in one chunk even though it exceeds the cap
-    assert(ids(src.poll()).sorted == (1L to 12L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(5000L))))
-    assert(src.poll().isEmpty)
+    val chunks = polls(src, maxRows = 5)
+    assert(chunks.map(_._1.size) == Vector(12))
+    assert(chunks.head._2 == at(5000L))
   }
 
   test("pure timestamp mode: a cap cutting mid-run backs off to the previous distinct ts") {
-    val snap = table((1L, 1000L), (2L, 1000L), (3L, 1000L), (4L, 2000L), (5L, 2000L))
-    val src = IncrementalJdbc.ofSnapshot(() => snap, maxRowsPerPoll = 4)
-    // 4 fetched rows would split the ts=2000 run → back off to ts=1000
-    assert(ids(src.poll()).sorted == Seq(1L, 2L, 3L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(1000L))))
-    assert(ids(src.poll()).sorted == Seq(4L, 5L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(2000L))))
+    val src = source(table((1L, 1000L), (2L, 1000L), (3L, 1000L), (4L, 2000L), (5L, 2000L)))
+    // 4 fetched keys would split the ts=2000 run → back off to ts=1000
+    val chunks = polls(src, maxRows = 4)
+    assert(chunks.map(c => ms(c._1)) ==
+      Vector(Seq(1000L, 1000L, 1000L), Seq(2000L, 2000L)))
+    assert(chunks.map(_._2) == Vector(at(1000L), at(2000L)))
   }
 
   test("composite timestamp+incrementing mode: equal-ts runs split losslessly at the cap") {
-    val snap = table((1L to 12L).map(i => (i, 5000L)): _*)
-    val src = IncrementalJdbc.ofSnapshot(() => snap,
-      incrementingCol = Some("id"), maxRowsPerPoll = 5)
-    val c1 = ids(src.poll())
-    assert(c1 == (1L to 5L))
+    val src = source(table((1L to 12L).map(i => (i, 5000L)): _*), Some("id"))
+    val chunks = polls(src, maxRows = 5)
+    assert(chunks.map(c => ids(c._1)) == Vector(1L to 5L, 6L to 10L, 11L to 12L))
     // the offset carries the id tiebreak, so the run resumes MID-timestamp
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(5000L), Some(5L))))
-    val c2 = ids(src.poll())
-    val c3 = ids(src.poll())
-    assert(c2 == (6L to 10L) && c3 == (11L to 12L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(5000L), Some(12L))))
-    assert(src.poll().isEmpty)
+    assert(chunks.map(_._2) ==
+      Vector(at(5000L, Some(5L)), at(5000L, Some(10L)), at(5000L, Some(12L))))
   }
 
   test("composite mode also chunks across distinct timestamps") {
-    val snap = table((1L, 1000L), (2L, 1000L), (3L, 2000L), (4L, 2000L), (5L, 3000L))
-    val src = IncrementalJdbc.ofSnapshot(() => snap,
-      incrementingCol = Some("id"), maxRowsPerPoll = 2)
-    assert(ids(src.poll()) == Seq(1L, 2L))
-    assert(ids(src.poll()) == Seq(3L, 4L))
-    assert(ids(src.poll()) == Seq(5L))
-    assert(src.currentOffset.contains(JdbcOffset(new Timestamp(3000L), Some(5L))))
-  }
-
-  test("initialOffset skips rows at or before the seed, delivers the rest") {
-    val snap = table((1L, 1000L), (2L, 2000L), (3L, 3000L), (4L, 4000L))
-    val src = IncrementalJdbc.ofSnapshot(() => snap,
-      initialOffset = Some(JdbcOffset(new Timestamp(2000L))))
-    // rows at (2000) or before (1000) never appear — Connect's
-    // timestamp.initial semantics
-    assert(ids(src.poll()).sorted == Seq(3L, 4L))
-    assert(src.poll().isEmpty)
+    val src = source(table((1L, 1000L), (2L, 1000L), (3L, 2000L), (4L, 2000L), (5L, 3000L)),
+      Some("id"))
+    val chunks = polls(src, maxRows = 2)
+    assert(chunks.map(c => ids(c._1)) == Vector(Seq(1L, 2L), Seq(3L, 4L), Seq(5L)))
+    assert(chunks.last._2 == at(3000L, Some(5L)))
   }
 
   test("NULL-timestamp rows are never delivered, capped or not") {
     val snap = tableWithNulls(
       (1L, Some(1000L)), (2L, None), (3L, Some(2000L)), (4L, None))
-    val uncapped = IncrementalJdbc.ofSnapshot(() => snap)
-    assert(ids(uncapped.poll()).sorted == Seq(1L, 3L))
-    assert(uncapped.poll().isEmpty) // NULL rows don't re-deliver either
-
-    val capped = IncrementalJdbc.ofSnapshot(() => snap, maxRowsPerPoll = 1)
-    assert((ids(capped.poll()) ++ ids(capped.poll())).sorted == Seq(1L, 3L))
-    assert(capped.poll().isEmpty)
+    for (mode <- Seq(None, Some("id")); cap <- Seq(Int.MaxValue, 1)) {
+      val got = polls(source(snap, mode), cap).flatMap(_._1)
+      assert(ms(got) == Seq(1000L, 2000L), s"mode=$mode cap=$cap")
+      mode.foreach(_ => assert(ids(got) == Seq(1L, 3L)))
+    }
   }
 
   test("delay interval holds back rows newer than now - delay") {
-    val snap = table((1L, 1000L), (2L, 2000L), (3L, 3000L))
-    @volatile var now = 2500L
-    val src = IncrementalJdbc.ofSnapshot(() => snap,
-      delayIntervalMs = 500L, nowMillis = () => now)
-    assert(ids(src.poll()).sorted == Seq(1L, 2L)) // 3000 > 2500-500
-    now = 4000L
-    assert(ids(src.poll()) == Seq(3L))
+    // the stream bounds each probe by the driver's wall clock minus the
+    // delay, so rows are dated relative to now: one due in a few seconds
+    // (arrives once the clock passes it + delay) and one an hour ahead
+    // (held back throughout; without a delay it would be read at once)
+    val now = System.currentTimeMillis()
+    val snap = table((1L, now - 3600000L), (2L, now - 60000L),
+      (3L, now + 3000L), (4L, now + 3600000L))
+    val key = "incremental_delay_spec"
+    graft.sources.GraftJdbcStream.registry.put(key, source(snap))
+    val q = graft.streaming.Pipelines.startMemorySink(
+      spark.readStream.format("graft-jdbc").option("sourceHandle", key)
+        .option("delayIntervalMs", "1000").load(), "incremental_delay_t")
+    def seen() = spark.table("incremental_delay_t").select("id").as[Long]
+      .collect().sorted.toSeq
+    try {
+      q.processAllAvailable()
+      assert(seen().take(2) == Seq(1L, 2L))
+      assert(!seen().contains(4L))
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!seen().contains(3L) && System.currentTimeMillis() < deadline) {
+        Thread.sleep(200L)
+        q.processAllAvailable()
+      }
+      assert(seen() == Seq(1L, 2L, 3L)) // each once; row 4 still held back
+    } finally q.stop()
   }
 
   test("chunkSql inlines bounds, order and limit into the remote statement") {
