@@ -1,840 +1,129 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — TWO protocols over the same child machinery.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
+
+/** Benchmark main: one in-session pass over the registry.
   *
-  * Round 10 proved (BENCH_DRIFT.md) that a JVM hosting many plan
-  * executions accumulates state whose tax inflates every later
-  * measurement. Round 11 sharded the registry into 4 fresh JVMs; round
-  * 12 first tried 12 — and measured that THE TAX SATURATES DURING THE
-  * SHARD'S OWN COLD PASS: the fixed Spark calibration probe doubles
-  * (0.17 → 0.43 s) after as few as ~13 first executions and never
-  * recovers, because each generated whole-stage-codegen class pollutes
-  * the JIT profiles of the shared Spark runtime paths it calls into
-  * (inline caches at UnsafeRow/writer call sites go megamorphic). No
-  * shard size fixes that — only a JVM whose profile holds a single
-  * query's code measures that query at full speed.
+  * One `local[SPARK_GRAFT_CPUS]` session (default: the host's available
+  * processors) warms up, runs a cold pass over [[SparkEntry.queries]]
+  * (codegen compilation and first reads land there; reported as
+  * `cold_total`, never in `value`), then one warm pass. Each query is
+  * timed as `fn(spark, sfDir).count()`, construction included.
   *
-  * FULL protocol (`SPARK_GRAFT_BENCH_FULL=1` — the committed-artifact
-  * run): one fresh child JVM per query, sequential (cold + convergence-
-  * gated warm passes, min wins), then ONE shared drain JVM (cold pass +
-  * pool-6 concurrent drain of the whole registry — the pre-round-11
-  * semantics), then the streaming micro-bench. ~60–75 min for the full
-  * registry; writes BENCH_HEADLINE.json + BENCH_DETAIL.json.
+  * Output: two JSON lines on stdout, the full record and then the
+  * compact line. The compact line is the output contract: it is the last
+  * stdout line and stays within [[MaxLineChars]] characters, because
+  * callers that parse it keep only a tail of that length. Its keys: `metric` =
+  * "total", `value` = `seq_total` = the sum of the warm pass's
+  * per-query seconds (failed queries excluded), `unit` = "sec",
+  * `queries` (the [[SlowestKept]] slowest warm times), `cold_total`,
+  * `n_queries`, `failed` (at most [[MaxFailedListed]] names), `protocol`
+  * = "in_session", `host` {cores, mem_gb} and `sf`. The full line has
+  * the same keys with every query's warm time in `queries`, every cold
+  * time in `queries_cold` and every failed name in `failed`.
   *
-  * BUDGETED protocol (the DEFAULT — what the round driver runs): round
-  * 12's full-isolation run exceeded the driver's timebox (BENCH_r12 is
-  * rc=124/parsed-null), so the default now fits a wall-clock budget
-  * (`SPARK_GRAFT_BENCH_BUDGET_S`, default 1200 s — sized under the
-  * timebox round 11's ~25 min run fit) and DEGRADES PASSES BEFORE
-  * COMPLETENESS:
-  *
-  *   1. ANCHORS (round 15): a fixed 20% sub-budget always runs the
-  *      slowest affordable queries as per-query-isolated children first,
-  *      so the driver artifact carries fresh-JVM numbers comparable to
-  *      BENCH_DETAIL for drift detection even when full isolation can't
-  *      fit (r14's run admitted zero singles — the full-coverage gate
-  *      was strictest at the slowest-first queue's head); then more
-  *      per-query-isolated children (the full protocol's numbers, 3
-  *      passes) while the remaining budget still covers the rest of the
-  *      registry grouped plus the drain child, scanning past
-  *      unaffordable heads to the most expensive query that fits;
-  *   2. then grouped children of ≤13 queries per fresh JVM (under the
-  *      measured megamorphic-saturation onset) with budget-chosen warm
-  *      passes (3 → 2 → 1);
-  *   3. then drain-only: queries never covered by a warm child take
-  *      their number from the drain child's SECOND sequential pass
-  *      (shared-JVM warm — round 16: r15 reported 27 queries from the
-  *      drain child's cold pass, so those headline values were 1.5-3×
-  *      their warm minima and round-over-round comparisons on them were
-  *      noise by construction; the pass is RESTRICTED to the
-  *      fallthrough set — by construction the cheap tail — so its cost
-  *      tracks the degradation that produced it and the planner's
-  *      drain reserve stays at the r15 level: charging a full-registry
-  *      warm pass up front displaced two grouped chunks in the first
-  *      dry run), flagged per-query in `warm_srcs` as `drain_warm`;
-  *      `drain_cold` remains only as the last-resort fill for a query
-  *      whose warm pass failed.
-  *
-  *   The drain child always runs (its drain total is the compact line's
-  *   "value") under a hard timeout inside the remaining budget; the
-  *   streaming micro-bench is skipped (STREAM_METRICS.json is refreshed
-  *   by full runs). The LAST stdout line is ALWAYS one compact JSON
-  *   object — on any internal failure it carries an "error" field
-  *   instead of going missing — and the budgeted run writes its detail
-  *   to BENCH_DRIVER_DETAIL.json so the committed isolated artifacts
-  *   are never overwritten by a degraded run.
-  *
-  * Children never run concurrently — timing runs never share the box —
-  * and child stderr goes to the per-child log file, never to the
-  * parent's captured streams (round 12's INHERIT flooded the driver's
-  * 2000-char tail with Spark startup INFO).
-  *
-  * Child mode is selected by SPARK_GRAFT_BENCH_SHARD="i/K" (set only
-  * by the orchestrator): the child runs the queries whose sorted index
-  * ≡ i (mod K), optionally narrowed by the SPARK_GRAFT_BENCH_ONLY name
-  * list (how grouped children get their chunk). SPARK_GRAFT_BENCH_PHASE
-  * picks the protocol: "warm" (cold + warm passes, no drain), "drain"
-  * (cold + ONE shared-JVM warm pass + drain — the warm pass is what the
-  * fallthrough tier reports), "full" (all phases — the default, for
-  * direct local invocations).
+  * A query that throws is reported as -1 and listed in `failed`; the
+  * pass goes on. End-to-end and per-layer performance is measured by
+  * `perfbench/`, not here.
   */
 object Bench {
 
-  def main(args: Array[String]): Unit =
-    sys.env.get("SPARK_GRAFT_BENCH_SHARD") match {
-      case Some(spec) =>
-        val Array(i, k) = spec.split("/").map(_.toInt)
-        runShard(i, k, sys.env.getOrElse("SPARK_GRAFT_BENCH_PHASE", "full"))
-      case None => orchestrate()
-    }
+  /** Longest compact line: callers keep only this much of stdout's tail. */
+  val MaxLineChars = 2000
 
-  /** Pure anchor selection (spec-pinned): the first queue entry — the
-    * queue is slowest-first, so the most expensive — whose isolated
-    * child fits the remaining anchor sub-budget AND leaves room for the
-    * always-run drain child. Scanning (rather than testing only the
-    * head) is the r14 advisory: an unaffordable head must not abandon
-    * affordable singles further down.
-    *
-    * `worstSingle` is the child's hard kill bound (the orchestrator's
-    * per-child timeout) — the r15 advisory: Phase A accumulates ACTUAL
-    * child durations into anchorSpent, so a single whose real runtime
-    * far exceeds its estimate could overshoot the sub-budget before the
-    * next iteration's check. Bounding each pick by its timeout caps the
-    * worst-case anchor spend at 2× the sub-budget and keeps the drain
-    * child affordable even if the pick runs to its kill bound.
-    */
-  private[graft] def pickAnchor(queue: Seq[String],
-                                estSingle: String => Double,
-                                worstSingle: String => Double,
-                                anchorSpent: Double, anchorBudget: Double,
-                                remaining: Double,
-                                estDrain: Double): Option[String] =
-    queue.find(nm => anchorSpent + estSingle(nm) <= anchorBudget &&
-      anchorSpent + worstSingle(nm) <= 2.0 * anchorBudget &&
-      remaining > estDrain + worstSingle(nm))
+  /** Per-query times the compact line keeps, slowest first. */
+  val SlowestKept = 25
 
-  /** Pure Phase-W selection (spec-pinned): the most expensive queue
-    * entry whose isolated child still leaves FULL warm coverage
-    * affordable — everything else grouped plus the drain child. Same
-    * scan-down rule as [[pickAnchor]].
-    */
-  private[graft] def pickSingle(queue: Seq[String],
-                                estSingle: String => Double,
-                                estGroupedRest: Seq[String] => Double,
-                                remaining: Double,
-                                estDrain: Double): Option[String] =
-    queue.find(nm => remaining > estDrain + estSingle(nm) +
-      estGroupedRest(queue.filterNot(_ == nm)))
+  /** Failed names the compact line lists; the full line lists all. */
+  val MaxFailedListed = 10
 
-  // ------------------------------------------------------------ orchestrator
-
-  private def orchestrate(): Unit = {
-    val fullMode = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    val budgetS =
-      if (fullMode) Double.MaxValue
-      else sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1200").toDouble
-    val t0 = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    def remaining: Double = budgetS - elapsed
-    try orchestrateBody(fullMode, budgetS, () => remaining)
-    catch { case e: Throwable =>
-      // the handoff contract: the last stdout line parses NO MATTER WHAT
-      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        .replaceAll("[\"\\\\\n\r]", " ").take(300)
-      println(s"""{"metric":"total","value":-1,"unit":"sec","queries":{},"error":"$msg","protocol":${if (fullMode) "\"full\"" else "\"budgeted\""},"sf":"${sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")}"}""")
-        System.out.flush()
-    }
-  }
-
-  private def orchestrateBody(fullMode: Boolean, budgetS: Double,
-                              remaining: () => Double): Unit = {
+  def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bench_singles")
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      .filterNot(_.startsWith("-agentlib")) // no debugger hand-me-downs
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-
-    // the same sorted+filtered list the children compute — the index a
-    // warm child selects by is the position in THIS list
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val n = names.size
-
-    import org.json4s._
-    implicit val fmts: Formats = DefaultFormats
-    def mapOf(j: JValue, field: String): Map[String, Double] =
-      (j \ field) match {
-        case JObject(fs) => fs.map { case (k, v) => k -> v.extract[Double] }.toMap
-        case _ => Map.empty
-      }
-    def num(j: JValue, field: String): Double =
-      (j \ field).extractOpt[Double].getOrElse(0.0)
-
-    // PER-QUERY RUNTIME ESTIMATES feed the budget planner: the committed
-    // headline's warm map when present (it tracks the registry across
-    // rounds), 1 s for anything unknown. Estimates only schedule —
-    // measurements are always real.
-    val priorEst: Map[String, Double] =
-      (try {
-        val p = java.nio.file.Paths.get("BENCH_HEADLINE.json")
-        if (java.nio.file.Files.exists(p))
-          mapOf(org.json4s.jackson.JsonMethods.parse(
-            new String(java.nio.file.Files.readAllBytes(p), "UTF-8")), "queries")
-        else Map.empty[String, Double]
-      } catch { case _: Throwable => Map.empty[String, Double] })
-    def est(name: String): Double = math.max(0.1, priorEst.getOrElse(name, 1.0))
-    val sumEstAll = names.map(est).sum
-    // drain child: startup/warmup + sequential cold pass (~1.8× warm) +
-    // pool-6 drain (~0.5× warm sum, floor 60 s) + quiesce. The round-16
-    // shared-JVM warm pass over the FALLTHROUGH tier is deliberately NOT
-    // charged here: in the planned state every query is covered by a
-    // warm child (the fallthrough set is empty), and when budget
-    // degradation produces one it is the cheap tail by construction
-    // (slowest-first queue) — charging a full-registry warm pass up
-    // front displaced two grouped chunks in the first dry run (52
-    // grouped vs r15's 130) for a pass that mostly re-times already-
-    // covered queries.
-    def estDrain: Double = 30 + 1.8 * sumEstAll + math.max(60, 0.5 * sumEstAll) + 25
-    var childOverhead = 25.0 // startup + warmup + calib; adapted from observed
-
-    // children run SEQUENTIALLY — concurrent children would contend for
-    // the box and the per-pass load/calibration gates would replace
-    // every pass. Returns None on child failure/timeout (budgeted mode
-    // degrades instead of dying; full mode still fails loudly).
-    var degradedNotes = Vector.empty[String]
-    def runChild(env: Map[String, String], detailPath: String,
-                 logPath: String, what: String,
-                 timeoutS: Double): Option[org.json4s.JValue] = {
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
-      val pb = new ProcessBuilder(cmd.asJava)
-      env.foreach { case (k, v) => pb.environment().put(k, v) }
-      pb.environment().put("SPARK_GRAFT_BENCH_DETAIL", detailPath)
-      // neither child stream may pollute the parent's captured output:
-      // stdout would break the last-line contract, stderr (r12's
-      // INHERIT) flooded the driver's tail capture with Spark INFO
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(new java.io.File(logPath))
-      System.err.println(s"[bench] $what starting (timeout ${timeoutS.toInt}s)")
-      val proc = pb.start()
-      val finished = proc.waitFor(
-        math.max(30, timeoutS).toLong, java.util.concurrent.TimeUnit.SECONDS)
-      def readDetail(): Option[org.json4s.JValue] =
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(detailPath)))
-          None
-        else try Some(org.json4s.jackson.JsonMethods.parse(new String(
-          java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(detailPath)), "UTF-8")))
-        catch { case _: Throwable => None }
-      // children write their detail PROGRESSIVELY (after every pass,
-      // rename-atomic), so a killed or crashed child still contributes
-      // every measurement it completed — a budgeted run salvages the
-      // partial file instead of losing the whole child (r16: one drain
-      // timeout cost 68 queries' numbers before this)
-      if (!finished) {
-        proc.destroyForcibly(); proc.waitFor()
-        degradedNotes :+= s"child '$what' exceeded ${timeoutS.toInt}s and was killed"
-        if (fullMode) throw new IllegalStateException(
-          s"bench child $what timed out; log: $logPath")
-        val d = readDetail()
-        if (d.isDefined) degradedNotes :+=
-          s"salvaged '$what' partial detail (progressive writes)"
-        d
-      } else if (proc.exitValue() != 0) {
-        degradedNotes :+= s"child '$what' failed rc=${proc.exitValue()}"
-        if (fullMode) throw new IllegalStateException(
-          s"bench child $what failed (rc=${proc.exitValue()}); log: $logPath")
-        val d = readDetail()
-        if (d.isDefined) degradedNotes :+=
-          s"salvaged '$what' partial detail (progressive writes)"
-        d
-      } else {
-        val d = readDetail()
-        if (d.isEmpty) degradedNotes :+= s"child '$what' left no detail file"
-        if (d.isEmpty && fullMode) throw new IllegalStateException(
-          s"bench child $what wrote no detail; log: $logPath")
-        d
-      }
-    }
-
-    // ---- PLAN: how many warm passes can the grouped tier afford?
-    val groupSize = 13 // under the measured megamorphic-saturation onset
-    def estGrouped(queue: Seq[String], passes: Int): Double = {
-      if (queue.isEmpty) 0.0
-      else math.ceil(queue.size.toDouble / groupSize) * childOverhead +
-        (1.8 + passes) * queue.map(est).sum // cold (~1.8× warm) + warm passes
-    }
-    val groupPasses =
-      if (fullMode) 3
-      else Seq(3, 2, 1).find(p =>
-        estGrouped(names, p) + estDrain < budgetS * 0.9).getOrElse(1)
-    def estSingle(name: String): Double = childOverhead + (1.8 + 3) * est(name)
-    // the single child's hard kill bound — what pickAnchor's worst-case
-    // guard charges a pick (the r15 advisory's overshoot bound)
-    def worstSingle(name: String): Double = math.max(120, 4 * estSingle(name))
-
-    // ---- PHASE A + W: per-query isolated children
-    val singlePasses = if (fullMode) "6" else "3"
-    val extras = if (fullMode) "2" else "0"
-    var singleDetails = Vector.empty[(String, org.json4s.JValue)]
-    // SLOWEST FIRST (prior-round warm estimate, name-tiebroken): when the
-    // budget degrades, what falls through to the drain child's cold pass
-    // must be the cheap tail — r13's alphabetical order left the 25
-    // slowest queries (the dedup family the 2× bar cares most about) on
-    // drain-cold numbers while 117 sub-second queries got warm children
-    var queue: Seq[String] = names.sortBy(n => (-est(n), n))
-    var singleObs = Vector.empty[Double] // observed single-child durations
-    def runSingle(name: String): Double = {
-      val i = names.indexOf(name)
-      val c0 = System.nanoTime()
-      runChild(
-        Map("SPARK_GRAFT_BENCH_SHARD" -> s"$i/$n",
-            "SPARK_GRAFT_BENCH_PHASE" -> "warm",
-            "SPARK_GRAFT_BENCH_PASSES" -> singlePasses,
-            "SPARK_GRAFT_BENCH_EXTRAS" -> extras),
-        s"$tmp/single_$i.json", s"$tmp/single_$i.log",
-        s"warm ${singleDetails.size + 1}/$n $name",
-        timeoutS = if (fullMode) 14400 else worstSingle(name))
-        .foreach { j => singleDetails :+= (name -> j) }
-      val dur = (System.nanoTime() - c0) / 1e9
-      singleObs :+= math.max(5.0, dur - (1.8 + 3) * est(name))
-      childOverhead = singleObs.sum / singleObs.size // adapt the planner
-      queue = queue.filterNot(_ == name)
-      dur
-    }
-
-    // ---- PHASE A (budgeted only): ANCHORS. The r14 driver run admitted
-    // ZERO isolated children — the slowest-first queue makes Phase W's
-    // full-coverage affordability gate strictest at its very first step
-    // (estSingle(head) is the largest single estimate while estDrain +
-    // estGrouped(rest) already ~fills the 1200 s budget), so the driver
-    // artifact carried no fresh-JVM numbers comparable to BENCH_DETAIL
-    // for drift anchoring. A fixed 20% sub-budget now ALWAYS runs the
-    // slowest affordable queries as isolated children FIRST; the planned
-    // trade is coverage degradation later (fewer grouped passes, a cheap
-    // tail on drain-cold), bounded by the sub-budget. Scan-down on an
-    // unaffordable head (the r14 advisory): the most expensive query
-    // that still fits runs instead of the phase exiting outright.
-    val anchorBudget = if (fullMode) 0.0 else budgetS * 0.2
-    var anchorSpent = 0.0
-    var anchorCount = 0
-    while (!fullMode && {
-      pickAnchor(queue, estSingle, worstSingle, anchorSpent, anchorBudget,
-        remaining(), estDrain) match {
-        case Some(nm) =>
-          anchorSpent += runSingle(nm)
-          anchorCount += 1
-          true
-        case None => false
-      }
-    }) ()
-
-    // ---- PHASE W: more isolation while FULL coverage still fits. The
-    // gate reserves room for everything left to run grouped plus the
-    // drain child; on an unaffordable candidate the scan continues down
-    // the queue (r14 advisory) instead of abandoning affordable singles.
-    var scanning = true
-    while (queue.nonEmpty && (fullMode || scanning)) {
-      if (fullMode) runSingle(queue.head)
-      else pickSingle(queue, estSingle,
-          rest => estGrouped(rest, groupPasses), remaining(), estDrain) match {
-        case Some(nm) => runSingle(nm)
-        case None => scanning = false
-      }
-    }
-
-    // ---- PHASE G: grouped ≤13-query children for what's left
-    var groupDetails = Vector.empty[org.json4s.JValue]
-    var groupedNames = Vector.empty[String]
-    if (!fullMode) {
-      var chunks = queue.grouped(groupSize).toVector
-      var gi = 0
-      while (chunks.nonEmpty &&
-        remaining() > estDrain + estGrouped(chunks.head, groupPasses)) {
-        val chunk = chunks.head
-        runChild(
-          Map("SPARK_GRAFT_BENCH_SHARD" -> "0/1",
-              "SPARK_GRAFT_BENCH_ONLY" -> chunk.mkString(","),
-              "SPARK_GRAFT_BENCH_PHASE" -> "warm",
-              "SPARK_GRAFT_BENCH_PASSES" -> groupPasses.toString,
-              "SPARK_GRAFT_BENCH_EXTRAS" -> "0"),
-          s"$tmp/group_$gi.json", s"$tmp/group_$gi.log",
-          s"warm-group ${gi + 1} (${chunk.size} queries, $groupPasses passes)",
-          timeoutS = math.max(120, 3 * estGrouped(chunk, groupPasses)))
-          .foreach { j => groupDetails :+= j; groupedNames ++= chunk }
-        chunks = chunks.tail
-        gi += 1
-      }
-      val uncovered = chunks.flatten
-      if (uncovered.nonEmpty) degradedNotes :+=
-        s"${uncovered.size} queries fell through to the drain child's shared-JVM warm pass"
-      queue = uncovered
-    }
-
-    // ---- PHASE D: the shared drain JVM (always attempted — "value").
-    // The child's sequential warm pass (pass 2, between cold and drain)
-    // is restricted to the UNCOVERED fallthrough set so its cost tracks
-    // the degradation that produced it, not the registry; an empty list
-    // means "no warm pass", absent means "warm everything" (full-mode
-    // direct child invocations).
-    val drainTimeout = if (fullMode) 14400.0 else math.max(120, remaining() - 15)
-    val drainDetail = runChild(
-      Map("SPARK_GRAFT_BENCH_SHARD" -> "0/1",
-          "SPARK_GRAFT_BENCH_PHASE" -> "drain",
-          "SPARK_GRAFT_BENCH_WARM_ONLY" -> queue.mkString(","),
-          "SPARK_GRAFT_BENCH_CHILD_BUDGET_S" -> drainTimeout.toInt.toString),
-      s"$tmp/drain.json", s"$tmp/drain.log", "drain full-registry",
-      timeoutS = drainTimeout)
-
-    val allDetails = singleDetails.map(_._2) ++ groupDetails ++ drainDetail
-    val warmSingle = singleDetails.map(s => mapOf(s._2, "queries_warm"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _)
-    val warmGroup = groupDetails.map(mapOf(_, "queries_warm"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _)
-    val drainCold = drainDetail.map(mapOf(_, "queries_cold")).getOrElse(Map.empty)
-    // round 16: the drain child's second sequential pass gives every
-    // fallthrough query WARM shared-JVM semantics — its cold pass only
-    // ever fills a hole left by a query that failed the warm pass
-    val drainWarm = drainDetail.map(mapOf(_, "queries_warm"))
-      .getOrElse(Map.empty).filter(_._2 >= 0)
-    // merged per-query map, best-protocol-wins; drain tiers only fill holes
-    val warm = (drainCold ++ drainWarm ++ warmGroup ++ warmSingle).toSeq.sortBy(_._1)
-    val warmSrcs = Map(
-      "single" -> warmSingle.size,
-      "group" -> (warmGroup.keySet -- warmSingle.keySet).size,
-      "drain_warm" -> (drainWarm.keySet -- warmGroup.keySet -- warmSingle.keySet).size,
-      "drain_cold" -> (drainCold.keySet -- drainWarm.keySet -- warmGroup.keySet
-        -- warmSingle.keySet).size)
-    val cold = (singleDetails.map(s => mapOf(s._2, "queries_cold"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _) ++ Map.empty).toSeq.sortBy(_._1)
-    // round 17: merged noop-sink map for the pure-projection set (child
-    // `queries_noop`) — detail artifacts only, headline untouched
-    val noop = (singleDetails.map(s => mapOf(s._2, "queries_noop")) ++
-      groupDetails.map(mapOf(_, "queries_noop")))
-      .foldLeft(Map.empty[String, Double])(_ ++ _).toSeq.sortBy(_._1)
-    val drain = drainDetail.map(mapOf(_, "queries_drain")).getOrElse(Map.empty)
-      .toSeq.sortBy(_._1)
-    val seqTotal = warm.map(_._2).filter(_ >= 0).sum
-    val drainTotal = drainDetail.map(num(_, "drain_total")).getOrElse(-1.0)
-    if (drainDetail.isEmpty) degradedNotes :+=
-      "drain child unavailable; value falls back to the warm sum"
-    val headlineValue = if (drainTotal > 0) drainTotal else seqTotal
-    val calibJvmBest = if (allDetails.isEmpty) -1.0
-      else allDetails.map(num(_, "calib_jvm_best_s")).min
-    val calibSparkBest = if (allDetails.isEmpty) -1.0
-      else allDetails.map(num(_, "calib_spark_best_s")).min
-    // max over children (ADVICE r11): the first child's pre-run load
-    // alone would hide the load later children started under
-    val loadStart = if (allDetails.isEmpty) -1.0
-      else allDetails.map(num(_, "load_avg_start")).max
-
-    def jsonMap(m: Seq[(String, Double)], f: Double => Double = identity) = m
-      .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    val singlesJson = singleDetails.map { case (name, j) =>
-      s""""$name":${org.json4s.jackson.JsonMethods.compact(j)}"""
-    }.mkString(",")
-    val groupsJson = groupDetails.zipWithIndex.map { case (j, i) =>
-      s""""group_$i":${org.json4s.jackson.JsonMethods.compact(j)}"""
-    }.mkString(",")
-    val drainJson = drainDetail
-      .map(org.json4s.jackson.JsonMethods.compact).getOrElse("null")
-    val protocol = if (fullMode) "full" else "budgeted"
-    val degraded =
-      if (degradedNotes.isEmpty && queue.isEmpty && !fullMode &&
-          warmSrcs("single") < n) Vector("passes degraded to fit the budget")
-      else degradedNotes
-    val degradedJson =
-      if (degraded.isEmpty) "null"
-      else "\"" + degraded.mkString("; ").replaceAll("[\"\\\\]", " ") + "\""
-    val srcsJson = warmSrcs.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    val detail =
-      s"""{"sf":"$sfDir","protocol":"$protocol","budget_s":${if (fullMode) -1 else budgetS},"anchor_singles":$anchorCount,"anchor_budget_s":${if (fullMode) 0 else math.rint(anchorBudget)},"isolation":"${warmSrcs("single")} isolated (${anchorCount} anchor-reserved) + ${warmSrcs("group")} grouped(<=13, $groupPasses passes) + ${warmSrcs("drain_warm")} drain-warm + ${warmSrcs("drain_cold")} drain-cold, sequential children","drain_total":$drainTotal,"seq_total":$seqTotal,
-         |"protocol_degraded":$degradedJson,"warm_srcs":$srcsJson,
-         |"calib_jvm_best_s":$calibJvmBest,"calib_spark_best_s":$calibSparkBest,
-         |"queries_warm":${jsonMap(warm)},
-         |"queries_noop":${jsonMap(noop)},
-         |"queries_cold":${jsonMap(cold)},
-         |"queries_drain":${jsonMap(drain)},
-         |"singles":{$singlesJson},"groups":{$groupsJson},
-         |"drain_shard":$drainJson}""".stripMargin
-    // a budgeted (possibly degraded) run must never overwrite the
-    // committed full-isolation artifacts
-    val detailFile =
-      if (fullMode) "BENCH_DETAIL.json" else "BENCH_DRIVER_DETAIL.json"
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(detailFile), detail.getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-
-    // streaming micro-bench once, in this process's own session, AFTER
-    // every timed child has exited (never concurrent with timing).
-    // Budgeted runs skip it: STREAM_METRICS.json is refreshed by the
-    // full committed runs, and the window is better spent inside the
-    // driver's timebox.
-    if (fullMode) {
+    val spark = localSession()
+    try {
       try {
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-        try {
-          // the orchestrator's session is COLD (the children did the query
-          // work in their own JVMs), so the first streaming trigger pays
-          // 2-3 s of codegen and a 4 s capture window would record empty
-          // batches. One discarded warm-up invocation compiles the
-          // pipelines; the recorded run then measures warm per-batch
-          // latency like the pre-sharding bench did.
-          try graft.streaming.StreamMetrics.microBench(spark,
-            outPath = s"$tmp/stream_warmup.json")
-          catch { case _: Throwable => () }
-          graft.streaming.StreamMetrics.microBench(spark)
-        } finally {
-          spark.sparkContext.setLogLevel("OFF")
-          spark.stop()
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream micro-bench failed: ${e.getMessage}") }
-    }
-
-    def ms(v: Double) = math.rint(v * 100) / 100
-    val calib = s""""calib_jvm_s":${ms(calibJvmBest)},"calib_spark_s":${ms(calibSparkBest)}"""
-    val shared = s""""seq_total":${ms(seqTotal)},"n_queries":${warm.size},"protocol":"$protocol","protocol_degraded":$degradedJson,"warm_srcs":$srcsJson,"load_avg":${ms(loadStart)},$calib,"sf":"$sfDir""""
-    val headline = s"""{"metric":"total","value":${ms(headlineValue)},"unit":"sec","queries":${jsonMap(warm, ms)},"headline":"warm min per query (srcs in warm_srcs: fresh-JVM isolated, grouped <=13/JVM, or the drain child's shared-JVM warm pass; drain-cold only fills warm-pass failures); seq_total = sum of warm minima; value = pool-6 concurrent drain of the full registry in one shared JVM (detail in $detailFile)",$shared}"""
-    val slowest = warm.sortBy(-_._2).take(25).sortBy(_._1)
-    val compact = s"""{"metric":"total","value":${ms(headlineValue)},"unit":"sec","queries":${jsonMap(slowest, ms)},"queries_note":"${slowest.size} slowest of ${warm.size}; full map in $detailFile",$shared}"""
-    if (fullMode)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_HEADLINE.json"), headline.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    println(headline)
-    println(compact)
-    System.out.flush()
+        spark.range(1000000).selectExpr("sum(id)").collect()
+        Tables.load(spark, sfDir, "lineitem").count()
+      } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
+      run(spark, sfDir, SparkEntry.queries).foreach(println)
+      System.out.flush()
+    } finally spark.stop()
   }
 
-  // ------------------------------------------------------------ child
-
-  /** True iff `df`'s optimized plan is a pure projection pipeline —
-    * only Project/Filter/Union over leaves. For exactly these plans the
-    * bench's `count()` action lets Catalyst prune the projected
-    * expressions, so the count-based seconds under-measure the real
-    * compute (guide §1.4; measured 3-5× on dedup_minhash_sigs /
-    * text_bpe_token_counts in round 16). Aggregates, joins, generators
-    * and windows — the rest of the registry — are count-exact.
+  /** The session every measurement main builds: `local[n]` with `n`
+    * shuffle partitions, where `n` is `SPARK_GRAFT_CPUS` or, unset, the
+    * host's available processors.
     */
-  private[graft] def countPrunable(df: org.apache.spark.sql.DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
-      RepartitionOperation, Sort, Union}
-    df.queryExecution.optimizedPlan.find {
-      // row-count-preserving nodes count() sees straight through:
-      // column pruning strips projected expressions below them, and
-      // EliminateSorts drops a sort under the count aggregate outright
-      case _: Project | _: Filter | _: Union | _: RepartitionOperation |
-           _: Sort => false
-      case leaf if leaf.children.isEmpty => false
-      case _ => true
-    }.isEmpty
-  }
-
-  private def runShard(shardIdx: Int, shardCount: Int, phase: String): Unit = {
-    val doWarm = phase != "drain"
-    val doDrain = phase != "warm"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  private[graft] def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warm up JVM/codegen/scheduler so the first timed query isn't charged
-    // 3-5 s of session startup
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      Tables.load(spark, sfDir, "lineitem").count()
-    } catch { case _: Throwable => () }
+    spark
+  }
 
-    // optional comma-separated name filter — how the orchestrator hands a
-    // grouped child its chunk, and a local-iteration knob
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .zipWithIndex
-      .filter { case (_, i) => i % shardCount == shardIdx }
-      .map(_._1)
-    // failed queries report -1, not a healthy-looking fast duration
+  /** Runs the cold pass, then the warm pass, over `queries` in name
+    * order and returns the output lines, the compact line last.
+    */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+                         queries: Map[String, SparkEntry.Q]): Seq[String] = {
+    val named = queries.toSeq.sortBy(_._1)
     def timed(name: String, fn: SparkEntry.Q): Double = {
-      val q0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - q0) / 1e9 }
-      catch { case e: Throwable =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
     }
+    def pass(): Seq[(String, Double)] =
+      named.map { case (name, fn) => name -> timed(name, fn) }
+    val cold = pass()
+    val warm = pass()
+    lines(sfDir, cold, warm)
+  }
 
-    def loadAvg: Double =
-      java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-    val loadStart = loadAvg
-
-    // CALIBRATION probes (round-9 verdict): two fixed workloads run
-    // before every pass whose ONLY variable is the environment —
-    // calib_jvm (single-thread xorshift: per-core speed) and calib_spark
-    // (fixed 64-partition range-sum: scheduler + JVM-internal drift).
-    def calibJvm(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0
-      while (i < 200000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; acc += x; i += 1
-      }
-      if (acc == 42L) println("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calibSpark(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 200000000L, 1, 64)
-        .selectExpr("sum(id * 3 % 1000)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibJvm(); calibSpark() // JIT/codegen warm-up, untimed
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime.max(0L)).sum
-    }
-    def heapMb: Long = {
-      val r = Runtime.getRuntime
-      (r.totalMemory() - r.freeMemory()) / (1024 * 1024)
-    }
-    case class PassMeta(label: String, load: Double, cj: Double, cs: Double,
-                        gc: Long, heap: Long, quiesceS: Double)
-    def meta(label: String, quiesceS: Double = 0.0) =
-      PassMeta(label, loadAvg, calibJvm(), calibSpark(), gcMs, heapMb, quiesceS)
-
-    // LOAD-DECAY QUIESCE between phases: only meaningful when THIS JVM
-    // ran a previous heavy phase (full/drain protocol) — gc() pulls
-    // ContextCleaner work forward and the bounded wait lets writeback
-    // drain. A warm child is a fresh JVM whose predecessors are dead
-    // processes: its 1-minute load average is stale information, so it
-    // gc()s but never waits on load.
-    val quiesceTarget = math.max(2.0, cpus.toInt / 4.0)
-    val quiesceMaxMs =
-      if (doWarm && !doDrain) 0L
-      else sys.env.getOrElse("SPARK_GRAFT_QUIESCE_MS", "20000").toLong
-    def quiesce(): Double = {
-      val t0 = System.nanoTime()
-      System.gc()
-      var waited = 0L
-      while (loadAvg > quiesceTarget && waited < quiesceMaxMs) {
-        Thread.sleep(2000); waited += 2000
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // pass 1: cold sequential (codegen compile included — reported apart)
-    val coldMeta = meta("cold")
-    val cold = named.map { case (name, fn) => name -> timed(name, fn) }
-
-    // warm sequential passes — headline = per-query MIN; contended passes
-    // (pre-pass load over the gate, or calibration >1.5× best) get up to
-    // SPARK_GRAFT_BENCH_EXTRAS replacements (budgeted children set 0 so
-    // their wall-clock stays plannable)
-    val loadGate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE",
-      (cpus.toInt / 2).toString).toDouble
-    def contended(m: PassMeta, bestCj: Double, bestCs: Double): Boolean =
-      m.load > loadGate || m.cj > bestCj * 1.5 || m.cs > bestCs * 1.5
-    var passes = Vector.empty[(PassMeta, Seq[(String, Double)], Double)]
-    def runPass(label: String,
-                subset: Option[Set[String]] = None,
-                keepGoing: () => Boolean = () => true): Unit = {
-      val q = quiesce()
-      val m = meta(label, q)
-      val s0 = System.nanoTime()
-      // outside the subset (or past the budget gate): -1 (the
-      // failed-query sentinel) so the pass rows stay index-aligned with
-      // `named` and the warm-min fold simply skips them
-      val run = named.map { case (name, fn) =>
-        name -> (if (subset.forall(_.contains(name)) && keepGoing())
-          timed(name, fn) else -1.0)
-      }
-      passes :+= ((m, run, (System.nanoTime() - s0) / 1e9))
-    }
-    // A fresh single-query JVM is still JIT-compiling ITS OWN hot paths
-    // well past the third execution (first full run: 94/145 children had
-    // warm_3 fastest, 81 strictly declining), so 3 passes under-measures
-    // fast queries. Full-protocol default: 6 passes with early exit once
-    // a pass stops improving the min by >2% — converged children stop at
-    // ~4, slow movers get their tail measured. Budgeted children get
-    // their pass count from the orchestrator's planner (3 → 2 → 1).
-    val warmPassTarget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "6").toInt.max(1)
-    val maxExtras = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRAS", "2").toInt
-    // sum of per-query minima so far — the quantity the headline commits
-    // (a plain min over one query for the orchestrator's warm children)
-    def bestWarm: Double = named.indices.map { i =>
-      val ts = passes.map(_._2(i)._2).filter(_ >= 0)
-      if (ts.isEmpty) Double.MaxValue else ts.min
-    }.sum
-    // PROGRESSIVE DETAIL WRITES (round 16): the detail file is rewritten
-    // after the cold pass, after every warm pass, and after the drain —
-    // a child killed at its wall timeout leaves its latest completed
-    // measurements on disk instead of a hole, and the orchestrator
-    // salvages whatever is there (the r16 second dry run lost 68
-    // queries' numbers AND the drain value to one timeout; with
-    // progressive writes the same kill costs only the unfinished pass).
-    def jsonMap(m: Seq[(String, Double)]) = m
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def metaJson(m: PassMeta) =
-      s""""load_pre":${m.load},"quiesce_wait_s":${m.quiesceS},"calib_jvm_s":${m.cj},"calib_spark_s":${m.cs},"gc_total_ms":${m.gc},"heap_used_mb":${m.heap}"""
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    // round 17 (verdict #4): noop-sink seconds for the count-prunable
-    // (pure-projection) queries, measured by warm children AFTER their
-    // count-based passes and reported ALONGSIDE them — the count-based
-    // series stays the 16-round-comparable headline methodology; this
-    // closes its known under-measurement gap without forking the series.
-    var noopTimes = Seq.empty[(String, Double)]
-    def writeDetail(drain: Seq[(String, Double)], drainTotal: Double,
-                    drainQuiesce: Double): Unit = {
-      val warmPasses = passes.map(p => (p._2, p._3))
-      val seq = named.indices.map { i =>
-        val ts = warmPasses.map(_._1(i)._2).filter(_ >= 0)
-        named(i)._1 -> (if (ts.isEmpty) -1.0 else ts.min)
-      }
-      val seqTotal =
-        if (warmPasses.isEmpty) 0.0 else warmPasses.map(_._2).min
-      val calibBest =
-        if (passes.isEmpty) (coldMeta.cj, coldMeta.cs)
-        else ((passes.map(_._1.cj) :+ coldMeta.cj).min,
-              (passes.map(_._1.cs) :+ coldMeta.cs).min)
-      val warmRuns = passes
-        .map { case (m, run, total) =>
-          s""""${m.label}":{"total":$total,${metaJson(m)},"queries":${jsonMap(run)}}""" }
-        .mkString(",")
-      val extraPasses = (passes.size - 3).max(0)
-      val detail =
-        s"""{"sf":"$sfDir","shard":"$shardIdx/$shardCount","phase":"$phase","drain_total":$drainTotal,"seq_total":$seqTotal,
-           |"load_avg_start":$loadStart,"load_avg_end":$loadAvg,"drain_quiesce_s":$drainQuiesce,
-           |"load_gate":$loadGate,"extra_passes":$extraPasses,"quiesce_target":$quiesceTarget,
-           |"calib_jvm_best_s":${calibBest._1},"calib_spark_best_s":${calibBest._2},
-           |"cold_meta":{${metaJson(coldMeta)}},
-           |"queries_warm":${jsonMap(seq)},
-           |"queries_noop":${jsonMap(noopTimes)},
-           |${if (warmRuns.nonEmpty) warmRuns + "," else ""}
-           |"queries_cold":${jsonMap(cold)},
-           |"queries_drain":${jsonMap(drain)}}""".stripMargin
-      // write-then-rename so a kill mid-write never leaves a torn file
-      val p = java.nio.file.Paths.get(detailPath)
-      val tmp = java.nio.file.Paths.get(detailPath + ".tmp")
-      java.nio.file.Files.write(tmp, detail.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    writeDetail(Seq.empty, 0.0, 0.0) // cold numbers are salvageable now
-
-    // the child's own wall budget (the orchestrator passes its kill
-    // timeout): phases self-truncate at 90% so the LAST completed
-    // measurement set is always on disk before the kill would land
-    val childBudgetS = sys.env.get("SPARK_GRAFT_BENCH_CHILD_BUDGET_S")
-      .map(_.toDouble)
-    def childElapsed: Double =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
-    def budgetLeft: Boolean = childBudgetS.forall(b => childElapsed < 0.9 * b)
-
-    if (doWarm) {
-      (1 to math.min(3, warmPassTarget)).foreach { i =>
-        runPass(s"warm_$i"); writeDetail(Seq.empty, 0.0, 0.0)
-      }
-      var i = math.min(3, warmPassTarget)
-      while (i < warmPassTarget && {
-        val before = bestWarm
-        runPass(s"warm_${i + 1}")
-        writeDetail(Seq.empty, 0.0, 0.0)
-        i += 1
-        bestWarm < before * 0.98
-      }) ()
-      var extras = 0
-      while (extras < maxExtras && {
-        val bestCj = passes.map(_._1.cj).min
-        val bestCs = passes.map(_._1.cs).min
-        passes.count(p => !contended(p._1, bestCj, bestCs)) < 2
-      }) { extras += 1; runPass(s"warm_extra_$extras")
-           writeDetail(Seq.empty, 0.0, 0.0) }
-      // noop-sink pass for pure projections (see noopTimes above): one
-      // warm execution per prunable query, fn + noop save so the number
-      // is action-for-action comparable with timed()'s fn + count. The
-      // prunability probe builds the frame once untimed (plan analysis
-      // only for lazy queries; loop-bearing constructions are re-run
-      // inside the timed window exactly as timed() re-runs them).
-      noopTimes = named.flatMap { case (name, fn) =>
-        if (!budgetLeft) None
-        else try {
-          if (!countPrunable(fn(spark, sfDir))) None
-          else {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some(name -> (System.nanoTime() - t0) / 1e9)
-          }
-        } catch { case _: Throwable => None }
-      }
-      if (noopTimes.nonEmpty) writeDetail(Seq.empty, 0.0, 0.0)
-    }
-
-    // concurrent drain (plans/codegen warm from the cold pass, so this
-    // measures scheduling + execution throughput, not compilation). Runs
-    // BEFORE the drain-phase warm pass: the drain total is the headline
-    // "value", so it gets the budget priority and the warm tail takes
-    // the leftover.
-    val (drain, drainTotal, drainQuiesce) =
-      if (!doDrain) (Seq.empty[(String, Double)], 0.0, 0.0)
-      else {
-        val dq = quiesce()
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_POOL", "6").toInt)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val t0 = System.nanoTime()
-        val futures = named.map { case (name, fn) => Future(name -> timed(name, fn)) }
-        val d = Await.result(Future.sequence(futures), Duration.Inf)
-        val total = (System.nanoTime() - t0) / 1e9
-        pool.shutdown()
-        (d, total, dq)
-      }
-    if (doDrain) writeDetail(drain, drainTotal, drainQuiesce)
-
-    if (doDrain && !doWarm) {
-      // drain-phase pass 2 (round 16): ONE sequential warm pass so the
-      // budgeted protocol's fallthrough tier reports shared-JVM WARM
-      // numbers instead of cold-pass ones (r15 shipped 27 cold values in
-      // the headline map — 1.5-3× their warm minima, round-over-round
-      // noise by construction). Shared-JVM warm is not fresh-JVM warm
-      // (the megamorphic tax applies), but it strips codegen compilation
-      // and cold-IO, the two biggest cold-pass terms. The orchestrator
-      // narrows the pass to the actual fallthrough set via
-      // SPARK_GRAFT_BENCH_WARM_ONLY ("" = none — planned full coverage;
-      // absent = warm everything, for direct child invocations), and the
-      // pass self-truncates at 90% of the child budget — a truncated
-      // query keeps its drain-cold fill instead of costing the child
-      // its life.
-      val warmOnly = sys.env.get("SPARK_GRAFT_BENCH_WARM_ONLY")
-        .map(_.split(",").filter(_.nonEmpty).toSet)
-      if (warmOnly.forall(_.nonEmpty) && budgetLeft) {
-        runPass("drain_warm", warmOnly, () => budgetLeft)
-        writeDetail(drain, drainTotal, drainQuiesce)
-      }
-    }
-
-    if (!doDrain) writeDetail(Seq.empty, 0.0, 0.0)
-    try {
-      spark.sparkContext.setLogLevel("OFF")
-      spark.stop()
-    } catch { case _: Throwable => () }
-    ()
+  /** The full and the compact line for one cold and one warm pass
+    * (name → seconds, -1 for a failed run). A query is failed when
+    * either of its runs failed.
+    */
+  private[graft] def lines(sfDir: String, cold: Seq[(String, Double)],
+                           warm: Seq[(String, Double)]): Seq[String] = {
+    def ms(v: Double): Double = if (v < 0) -1.0 else math.rint(v * 1000) / 1000
+    def total(pass: Seq[(String, Double)]): Double =
+      ms(pass.map(p => ms(p._2)).filter(_ >= 0).sum)
+    def times(pass: Seq[(String, Double)]): JObject =
+      JObject(pass.sortBy(_._1).map { case (n, v) => n -> JDouble(ms(v)) }.toList)
+    def names(ns: Seq[String]): JArray = JArray(ns.map(JString(_)).toList)
+    val failed = (cold ++ warm).collect { case (n, v) if v < 0 => n }.distinct.sorted
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val host = JObject(
+      "cores" -> JInt(Runtime.getRuntime.availableProcessors),
+      "mem_gb" -> JDouble(math.rint(osBean.getTotalMemorySize * 10.0 / (1L << 30)) / 10))
+    def line(qs: Seq[(String, Double)], failedShown: Seq[String],
+             extra: List[JField]): String =
+      compact(JObject(List[JField](
+        "metric" -> JString("total"),
+        "value" -> JDouble(total(warm)),
+        "unit" -> JString("sec"),
+        "queries" -> times(qs),
+        "seq_total" -> JDouble(total(warm)),
+        "cold_total" -> JDouble(total(cold)),
+        "n_queries" -> JInt(warm.size),
+        "failed" -> names(failedShown),
+        "protocol" -> JString("in_session"),
+        "host" -> host,
+        "sf" -> JString(sfDir)) ++ extra))
+    val slowest = warm.sortBy(-_._2).take(SlowestKept)
+    Seq(
+      line(warm, failed, List("queries_cold" -> times(cold))),
+      line(slowest, failed.take(MaxFailedListed), Nil))
   }
 }

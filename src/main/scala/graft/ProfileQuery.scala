@@ -3,7 +3,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Round-16 measurement harness (guide §1: measure first) — NOT part of
@@ -28,26 +27,20 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * round's before/after plan artifacts are generated.
   *
   * Usage:
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=... \
   *     sbt "runMain graft.ProfileQuery q1_pricing_summary dedup_clusters"
-  * No args = the 25 slowest from the committed BENCH_DETAIL ordering is
-  * NOT assumed; it profiles every registered query (slow — name what you
-  * need).
+  * With no args it profiles every registered query (slow — name what
+  * you need).
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // session + codegen warm-up (same as the bench child)
+    // session + codegen warm-up (same as Bench)
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       Tables.load(spark, sfDir, "lineitem").count()

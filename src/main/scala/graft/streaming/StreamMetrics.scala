@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
@@ -126,97 +125,4 @@ object StreamMetrics {
                                 meanTriggerMs: Double, maxTriggerMs: Long,
                                 meanProcessedRowsPerSec: Double,
                                 lastStateRows: Long)
-
-  /** The per-round streaming micro-bench (invoked from [[graft.Bench]]):
-    * drives the reference's two pipeline shapes — the stateless `jovens`
-    * derivation and the stateful windowed `idadecont` changelog — from
-    * the rate-source generator at the reference's 500 ms poll cadence,
-    * captures every micro-batch, and writes the artifact. Memory sinks:
-    * the subject is per-batch engine latency, not file-format overhead.
-    */
-  def microBench(spark: SparkSession, outPath: String = "STREAM_METRICS.json",
-                 rowsPerSecond: Int = 5000, runMs: Long = 4000L): Unit = {
-    val listener = new StreamMetrics
-    spark.streams.addListener(listener)
-    try {
-      val src = graft.sources.FakeData.customerStream(spark, rowsPerSecond)
-      val q1 = Pipelines.jovens(src).writeStream
-        .queryName("sm_jovens")
-        .format("memory")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-        .start()
-      val q2 = Pipelines.idadecont(
-        graft.sources.FakeData.customerStream(spark, rowsPerSecond)).writeStream
-        .queryName("sm_idadecont")
-        .format("memory")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-        .start()
-      // third topology: the composed reference-topology analog
-      // ([[Pipelines.startReferenceTopology]]) — evolving Avro decode →
-      // curation gates → CDC COW snapshot + manifest — driven from the
-      // rate source through a REAL Avro encode, so the per-batch rows
-      // here include the whole write path (snapshot merge + manifest),
-      // not just in-memory transforms
-      import org.apache.spark.sql.types._
-      import org.apache.spark.sql.functions._
-      val docWire = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("source", StringType),
-        StructField("dt_update", LongType)))
-      val reader = docWire.add(StructField("lang", StringType))
-      val registry = graft.functions.StaticRegistry(Map(7 -> docWire))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("sm_reftopo").toString
-      // a tenth of the in-memory pipelines' rate: every micro-batch here
-      // pays real parquet writes (dead letter + manifest + snapshot COW),
-      // and the point is per-batch write-path latency at a sustainable
-      // rate (still 250x the reference's 2 rows/s design load), not
-      // backlog growth that outruns the capture window
-      val docs = spark.readStream.format("rate")
-        .option("rowsPerSecond", math.max(1, rowsPerSecond / 10).toString).load()
-        .select(graft.functions.AvroCodec.avroEncode(
-          struct(
-            col("value").as("doc_id"),
-            concat(repeat(lit("the quick brown fox jumps over the lazy dog "), 8),
-              lit("and this is document "), col("value").cast("string"))
-              .as("text"),
-            concat(lit("src_"), pmod(col("value"), lit(4)).cast("string"))
-              .as("source"),
-            unix_millis(col("timestamp")).as("dt_update")),
-          docWire, Some(7)).as("value"))
-      val q3 = Pipelines.startReferenceTopology(
-        docs, reader, registry, Seq(7), tmp, s"$tmp/ckpt",
-        buckets = 8, queryName = "sm_reference_topology",
-        trigger = org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("500 milliseconds"))
-      Thread.sleep(runMs)
-      q1.stop(); q2.stop()
-      // the composed topology's batch 0 is the rate source's empty
-      // immediate trigger and still pays full codegen + empty writes
-      // (~3-6 s); keep it running until a real cold batch AND a warm
-      // batch are captured (bounded), so the artifact carries the number
-      // that matters — warm per-batch write-path latency
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (listener.batches.count(_.query == "sm_reference_topology") < 3 &&
-          System.nanoTime() < deadline)
-        Thread.sleep(200)
-      q3.stop()
-      listener.awaitBatches("sm_jovens", 2)
-      listener.awaitBatches("sm_idadecont", 2)
-      // batch 0 is the rate source's empty immediate trigger; wait for a
-      // real warm batch too (events land async after q3.stop())
-      listener.awaitBatches("sm_reference_topology", 2)
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        listener.toJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    } finally {
-      spark.streams.removeListener(listener)
-      // memory-sink tables would otherwise accumulate across invocations
-      Seq("sm_jovens", "sm_idadecont").foreach { t =>
-        try spark.catalog.dropTempView(t) catch { case _: Exception => () }
-      }
-    }
-  }
 }

@@ -51,167 +51,6 @@ class ScaleGateSpec extends AnyFunSuite {
     assert(ScaleBench.gateViolations(Seq(("x", t + 0.01))) == Seq("x"))
   }
 
-  test("every 100x frontier panel name is a registered query") {
-    val known = SparkEntry.queries.keySet ++ ScaleBench.Extras.keySet
-    val missing = ScaleBench100.Panel.filterNot(known)
-    assert(missing.isEmpty, s"100x panel names not in the registry: $missing")
-  }
-
-  test("a timeboxed 100x row needs a notes justification like any over-gate factor") {
-    // hitting the cap (130 x small > the 120 gate) IS an over-threshold
-    // measurement — it must be allowlisted by notes, and an unnoted cap
-    // hit is a violation, not a crash
-    assert(ScaleBench100.timeboxViolations(Seq("dedup_semantic_pairs")).isEmpty)
-    assert(ScaleBench100.timeboxViolations(Seq("totally_new_op")) == Seq("totally_new_op"))
-  }
-
-  test("a capped incremental row is ALWAYS a timebox violation — notes never excuse it") {
-    // r15 advisory: an incremental op's cap IS its flatness bound
-    // (capForRow), so hitting it means the ∝-batch contract was blown —
-    // and the flatness contract is notes-independent by design. Three
-    // IncrementalBatch names carry notes entries for their raw-factor
-    // shape; before this rule a hard flatness breach on those became a
-    // silently-excused timeboxed row that never reached
-    // incrementalFlatViolations (which needs a completed big pass).
-    val noted = ScaleBench100.IncrementalBatch.filter(ScaleBench.notes.contains)
-    assert(noted.nonEmpty, "fixture rot: no incremental name is noted anymore")
-    noted.foreach { n =>
-      assert(ScaleBench100.timeboxViolations(Seq(n)) == Seq(n),
-        s"notes entry excused a flatness-cap timebox on $n")
-    }
-    // every contract op violates when capped, noted or not
-    val all = ScaleBench100.IncrementalBatch.toSeq.sorted
-    assert(ScaleBench100.timeboxViolations(all) == all)
-  }
-
-  test("the 100x cap is gate-derived: always past the threshold, floored for tiny queries") {
-    // cap/small >= 130 > GateThreshold for any small time above the floor
-    assert(ScaleBench100.capSeconds(2.0) == 260.0)
-    assert(ScaleBench100.capSeconds(0.1) == 120.0) // floor: sub-second smalls aren't capped at 13 s
-    assert(ScaleBench100.capSeconds(1.0) / 1.0 > ScaleBench100.GateThreshold)
-  }
-
-  test("the drive script's panel matches ScaleBench100.Panel exactly") {
-    // the one-query-per-JVM driver hardcodes the panel; a drift means a
-    // probe run silently skips (or measures a stale) query set
-    val sh = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("tools/scale100_drive.sh")), "UTF-8")
-    val m = "(?s)PANEL=\"([^\"]+)\"".r.findFirstMatchIn(sh)
-    assert(m.isDefined, "PANEL block missing from tools/scale100_drive.sh")
-    val names = m.get.group(1).split("\\s+").filter(_.nonEmpty).toSeq
-    assert(names == ScaleBench100.Panel,
-      s"drive script panel drifted:\n script=$names\n code=${ScaleBench100.Panel}")
-  }
-
-  test("committed BENCH_SCALE100.json (if present) is gate- and crash-clean, timeboxes noted") {
-    val f = new java.io.File("BENCH_SCALE100.json")
-    if (f.exists()) {
-      val json = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      Seq("gate_violations", "failed_at_scale").foreach { k =>
-        s""""$k":\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(json).foreach { g =>
-          assert(g.group(1).trim.isEmpty, s"BENCH_SCALE100.json $k: ${g.group(1)}")
-        }
-      }
-      // a committed artifact may carry timeboxed or disk-capped rows only
-      // when each is notes-justified (the probe folds unnoted ones into
-      // gate_violations; this re-checks the committed file independently)
-      Seq("timeboxed", "disk_capped").foreach { k =>
-        s""""$k":\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(json).foreach { g =>
-          val names = g.group(1).split(',').map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty).toSeq
-          val unnoted = ScaleBench100.timeboxViolations(names)
-          assert(unnoted.isEmpty, s"BENCH_SCALE100.json $k without notes: $unnoted")
-        }
-      }
-      // and the probe must have covered the whole panel
-      """"panel_remaining":\s*\[([^\]]*)\]""".r.findFirstMatchIn(json).foreach { g =>
-        assert(g.group(1).trim.isEmpty,
-          s"BENCH_SCALE100.json is a partial run: remaining ${g.group(1)}")
-      }
-    }
-  }
-
-  test("the incremental flatness gate: ∝-batch cost passes at any raw factor, blown per-doc cost violates") {
-    // dedup_containment_incremental's committed 100x row: factor 104 with
-    // the batch itself grown 100x — per-batch-doc cost ~flat (1.04x),
-    // clean even though 104 is near the 120 raw gate. The same op at the
-    // same raw factor with a batch that only grew 10x would be ~10x per
-    // batch doc — a corpus-proportional term hiding in the batch, flagged
-    // REGARDLESS of its notes entry (the raw-factor allowlist must not
-    // excuse a broken ∝-batch contract).
-    val n = "dedup_containment_incremental"
-    def bm(v: Long) = Map(n -> v)
-    val flat = Seq((n, 4.0, 416.0)) // 104x
-    assert(ScaleBench100.incrementalFlatViolations(flat, bm(1000L), bm(100000L)).isEmpty)
-    assert(ScaleBench100.incrementalFlatViolations(flat, bm(1000L), bm(10000L)) == Seq(n))
-    // non-incremental names never reach this gate
-    assert(ScaleBench100.incrementalFlatViolations(
-      Seq(("dedup_containment_report", 4.0, 416.0)), bm(1000L), bm(10000L)).isEmpty)
-    // boundary: exactly the bound passes, epsilon above fails
-    val b = ScaleBench100.IncrementalFlatBound
-    val ci = "dedup_clusters_incremental"
-    assert(ScaleBench100.incrementalFlatViolations(
-      Seq((ci, 1.0, b * 100)), Map(ci -> 1000L), Map(ci -> 100000L)).isEmpty)
-    assert(ScaleBench100.incrementalFlatViolations(
-      Seq((ci, 1.0, b * 100 + 1)), Map(ci -> 1000L), Map(ci -> 100000L)) == Seq(ci))
-    // the unit itself: 416 s over 100k batch docs = 4.16 ms/doc
-    assert(math.abs(ScaleBench100.perBatchDocMs(416.0, 100000L) - 4.16) < 1e-9)
-    // r13 advisory: an UNMEASURABLE denominator (empty/misread batch
-    // slice → count <= 0, or a missing per-op entry) is a violation for
-    // a completed incremental row, never a silent clean grade off
-    // perBatchDocMs' -1 sentinel
-    assert(ScaleBench100.incrementalFlatViolations(flat, bm(0L), bm(100000L)) == Seq(n))
-    assert(ScaleBench100.incrementalFlatViolations(flat, bm(1000L), bm(0L)) == Seq(n))
-    assert(ScaleBench100.incrementalFlatViolations(flat, bm(-1L), bm(-1L)) == Seq(n))
-    assert(ScaleBench100.incrementalFlatViolations(flat, Map.empty, Map.empty) == Seq(n))
-    // r15: denominators are PER-OP — one op's healthy batch must never
-    // stand in for another's missing one
-    assert(ScaleBench100.incrementalFlatViolations(
-      flat, Map(ci -> 1000L), Map(ci -> 100000L)) == Seq(n))
-  }
-
-  test("every incremental-contract name is on the 100x panel and a registered query") {
-    // the flatness gate only fires on measured rows — an IncrementalBatch
-    // name missing from the panel would silently skip its ∝-batch check
-    val off = ScaleBench100.IncrementalBatch.filterNot(ScaleBench100.Panel.contains)
-    assert(off.isEmpty, s"incremental-contract names not on the 100x panel: $off")
-    val unregistered = ScaleBench100.IncrementalBatch.filterNot(SparkEntry.queries.contains)
-    assert(unregistered.isEmpty, s"not registered queries: $unregistered")
-  }
-
-  test("incremental-contract rows cap at the flatness bound, not the raw-factor cap") {
-    // a compliant ∝-batch op's raw factor IS ~batch growth (~100x), so
-    // the 130x-small cap would leave it 30% headroom; the contract cap
-    // is FlatBound x small x measured growth — hitting it means the
-    // per-item cost definitively blew the bound
-    val b = ScaleBench100.IncrementalFlatBound
-    assert(ScaleBench100.capForRow("dedup_containment_incremental", 4.0, 100.0)
-      == b * 4.0 * 100.0)
-    // unmeasurable growth falls back to the nominal replication factor
-    assert(ScaleBench100.capForRow("dedup_containment_incremental", 4.0, -1.0)
-      == b * 4.0 * ScaleBench100.Factor)
-    // the 120 s floor still holds for sub-second smalls
-    assert(ScaleBench100.capForRow("dedup_incremental", 0.1, 100.0) == 120.0)
-    // everything else keeps the gate-derived cap
-    assert(ScaleBench100.capForRow("dedup_containment_report", 4.0, 100.0)
-      == ScaleBench100.capSeconds(4.0))
-  }
-
-  test("the incremental contract is EXHAUSTIVE: every *_incremental registered query is flatness-gated") {
-    // r14 verdict directive: any op claiming "∝ batch, not corpus" in its
-    // name must carry the machine-checked contract — registering a new
-    // *_incremental query without a BatchCount denominator fails here,
-    // not in a prose review
-    val claimed = SparkEntry.queries.keySet.filter(_.contains("incremental"))
-    val ungated = claimed -- ScaleBench100.IncrementalBatch
-    assert(ungated.isEmpty,
-      s"*_incremental queries without a per-op batch denominator: $ungated")
-    // and the map carries no stale names for queries that no longer exist
-    val stale = ScaleBench100.BatchCount.keySet -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"BatchCount names not in the registry: $stale")
-  }
-
   test("adjudicated rows are graded against their expectation band, not the binary notes allowlist") {
     // r14 verdict directive: join_revenue_by_status brushed the 12x
     // threshold three rounds (10.2/11.6/11.85x) with the adjudication in
@@ -257,29 +96,6 @@ class ScaleGateSpec extends AnyFunSuite {
           (row \ "scale_x").extractOpt[Double].foreach { x =>
             assert(x <= a.bandX,
               s"$name measured ${x}x — past its documented ${a.bandX}x expectation band")
-          }
-        }
-      }
-    }
-  }
-
-  test("committed BENCH_SCALE100.json (if present) carries the per-batch-doc fields for incremental rows") {
-    val f = new java.io.File("BENCH_SCALE100.json")
-    if (f.exists()) {
-      val json = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      import org.json4s._
-      implicit val fmts: Formats = DefaultFormats
-      val parsed = org.json4s.jackson.JsonMethods.parse(json)
-      val queries = (parsed \ "queries").extract[Map[String, JValue]]
-      ScaleBench100.IncrementalBatch.foreach { n =>
-        queries.get(n).foreach { row =>
-          // a COMPLETED incremental row must carry the machine-checkable
-          // ∝-batch fields and be inside the bound
-          if ((row \ "scale_x").extractOpt[Double].exists(_ > 0)) {
-            val flat = (row \ "per_batch_doc_flat_x").extractOpt[Double]
-            assert(flat.isDefined, s"$n row lacks per_batch_doc_flat_x")
-            assert(flat.get <= ScaleBench100.IncrementalFlatBound,
-              s"$n per-batch-doc cost grew ${flat.get}x (> ${ScaleBench100.IncrementalFlatBound})")
           }
         }
       }

@@ -98,20 +98,28 @@ class SkewAndBucketSpec extends SparkSpec {
 
   test("ensurePersisted rebuilds when the catalog entry's files are gone") {
     import graft.operators.Similarity
-    val idx = Similarity.partitionedAnnIndex(spark, sf)
+    // a 3-plane index: no other suite reads it, so deleting its files
+    // cannot pull data out from under a query in the same test JVM (the
+    // default 4-plane index backs StreamingSpec's ANN-alerts stream)
+    val idx = Similarity.partitionedAnnIndex(spark, sf, planes = 3)
     val n = idx.count()
     assert(n > 0)
     // simulate a cleaned tmpdir under a persistent metastore: the catalog
-    // entry survives but its data directory is gone
+    // entry survives but its data directory is gone, and the table is
+    // listed afresh, as a new session would list it (a stale cached
+    // listing would only make the health probe's tasks fail on the
+    // deleted files before the same rebuild)
     val tag = java.lang.Long.toHexString(
       graft.functions.DetHash.base60(sf) & 0xffffffffL)
-    val loc = s"${Tables.persistedTableRoot(spark)}/graft_ann_p4_$tag"
+    val name = s"graft_ann_p3_$tag"
+    val loc = s"${Tables.persistedTableRoot(spark)}/$name"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }
     assert(new java.io.File(loc).isDirectory, s"expected index data at $loc")
     rm(new java.io.File(loc))
-    val rebuilt = Similarity.partitionedAnnIndex(spark, sf)
+    spark.catalog.refreshTable(name)
+    val rebuilt = Similarity.partitionedAnnIndex(spark, sf, planes = 3)
     assert(rebuilt.count() == n, "missing files must trigger a rebuild")
   }
 }

@@ -8,7 +8,7 @@ import graft.streaming.{Pipelines, StreamMetrics}
 
 /** [[graft.streaming.StreamMetrics]] — the streaming twin of PlanMetrics:
   * per-batch latency/rate capture off the progress bus, summaries, and
-  * the JSON artifact shape `Bench` writes per round.
+  * the JSON rendering.
   */
 class StreamMetricsSpec extends SparkSpec {
   import spark.implicits._
@@ -59,16 +59,5 @@ class StreamMetricsSpec extends SparkSpec {
       try spark.catalog.dropTempView("smspec_counts")
       catch { case _: Exception => () }
     }
-  }
-
-  test("microBench writes the per-round artifact with both pipelines") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sm")
-      .resolve("STREAM_METRICS.json")
-    StreamMetrics.microBench(spark, out.toString,
-      rowsPerSecond = 500, runMs = 1500L)
-    val json = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-    assert(json.contains("\"sm_jovens\"") && json.contains("\"sm_idadecont\""))
-    val parsed = spark.read.json(Seq(json).toDS())
-    assert(parsed.columns.toSet == Set("pipelines", "batches"))
   }
 }
