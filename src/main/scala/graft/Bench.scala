@@ -19,15 +19,18 @@ import org.json4s.jackson.JsonMethods.compact
   * stdout line and stays within [[MaxLineChars]] characters, because
   * callers that parse it keep only a tail of that length. Its keys: `metric` =
   * "total", `value` = `seq_total` = the sum of the warm pass's
-  * per-query seconds (failed queries excluded), `unit` = "sec",
+  * successful per-query seconds, `unit` = "sec",
   * `queries` (the [[SlowestKept]] slowest warm times), `cold_total`,
   * `n_queries`, `failed` (at most [[MaxFailedListed]] names), `protocol`
   * = "in_session", `host` {cores, mem_gb} and `sf`. The full line has
   * the same keys with every query's warm time in `queries`, every cold
   * time in `queries_cold` and every failed name in `failed`.
   *
-  * A query that throws is reported as -1 and listed in `failed`; the
-  * pass goes on. End-to-end and per-layer performance is measured by
+  * A query that throws reads -1 in the pass where it threw and is listed
+  * in `failed`; the pass goes on. A query that failed only in the cold
+  * pass keeps its warm time, in `queries` and in `value`. If the run
+  * itself fails, the last line is an error line instead: `value` -1 and
+  * an `error` message. End-to-end and per-layer performance is measured by
   * `perfbench/`, not here.
   */
 object Bench {
@@ -41,18 +44,42 @@ object Bench {
   /** Failed names the compact line lists; the full line lists all. */
   val MaxFailedListed = 10
 
+  /** Characters of the exception message an error line keeps. */
+  val MaxErrorChars = 250
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = localSession()
-    try {
+    guarded(sfDir) {
+      val spark = localSession()
       try {
-        spark.range(1000000).selectExpr("sum(id)").collect()
-        Tables.load(spark, sfDir, "lineitem").count()
-      } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
-      run(spark, sfDir, SparkEntry.queries).foreach(println)
-      System.out.flush()
-    } finally spark.stop()
+        try {
+          spark.range(1000000).selectExpr("sum(id)").collect()
+          Tables.load(spark, sfDir, "lineitem").count()
+        } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
+        run(spark, sfDir, SparkEntry.queries)
+      } finally spark.stop()
+    }.foreach(println)
+    System.out.flush()
   }
+
+  /** `body`'s output lines or, if it throws, one compact error line with
+    * `value` -1, so the last stdout line parses whatever fails.
+    */
+  private[graft] def guarded(sfDir: String)(body: => Seq[String]): Seq[String] =
+    try body
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] failed: $e")
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(MaxErrorChars)
+      Seq(compact(JObject(List[JField](
+        "metric" -> JString("total"),
+        "value" -> JDouble(-1.0),
+        "unit" -> JString("sec"),
+        "queries" -> JObject(Nil),
+        "n_queries" -> JInt(0),
+        "error" -> JString(msg),
+        "protocol" -> JString("in_session"),
+        "sf" -> JString(sfDir)))))
+    }
 
   /** The session every measurement main builds: `local[n]` with `n`
     * shuffle partitions, where `n` is `SPARK_GRAFT_CPUS` or, unset, the
@@ -91,7 +118,8 @@ object Bench {
 
   /** The full and the compact line for one cold and one warm pass
     * (name → seconds, -1 for a failed run). A query is failed when
-    * either of its runs failed.
+    * either of its runs failed; the totals sum each pass's successful
+    * runs.
     */
   private[graft] def lines(sfDir: String, cold: Seq[(String, Double)],
                            warm: Seq[(String, Double)]): Seq[String] = {

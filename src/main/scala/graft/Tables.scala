@@ -181,13 +181,26 @@ object Tables {
     * metastore can outlive a cleaned tmpdir, leaving an entry whose files
     * are gone — that must trigger a rebuild, not an empty scan). Our
     * derived tables are never legitimately empty, so `limit(1)` doubles
-    * as the files-exist probe while reading at most one row.
+    * as the files-exist probe while reading at most one row. Files
+    * deleted under a live session stay in its cached listing, so the
+    * driver first checks that every listed file still exists: the probe
+    * never launches tasks on deleted files. Files that exist but cannot
+    * be read make the probe throw, which also triggers the rebuild.
     */
   def ensurePersisted(spark: SparkSession, name: String)
                      (write: String => Unit): DataFrame = {
+    def listedFilesExist(t: DataFrame): Boolean = {
+      val conf = spark.sessionState.newHadoopConf()
+      t.inputFiles.forall { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(conf).exists(p)
+      }
+    }
     val healthy = spark.catalog.tableExists(name) &&
-      (try spark.table(name).limit(1).count() == 1
-       catch { case _: Exception => false })
+      (try {
+        val t = spark.table(name)
+        listedFilesExist(t) && t.limit(1).count() == 1
+      } catch { case _: Exception => false })
     if (!healthy) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       write(s"${persistedTableRoot(spark)}/$name")

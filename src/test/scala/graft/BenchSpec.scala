@@ -67,4 +67,34 @@ class BenchSpec extends SparkSpec {
         (if (t < 0) names.size else 0))
     }
   }
+
+  test("a query that fails only in the cold pass is listed as failed and keeps its warm time") {
+    val cold = Seq("a" -> -1.0, "b" -> 1.0)
+    val warm = Seq("a" -> 2.0, "b" -> 1.0)
+    val out = Bench.lines(sf, cold, warm)
+    val j = parse(out.last)
+    assert((j \ "failed").extract[Seq[String]] == Seq("a"))
+    assert(times(j, "queries") == Map("a" -> 2.0, "b" -> 1.0))
+    assert((j \ "seq_total").extract[Double] == 3.0)
+    assert((j \ "value").extract[Double] == 3.0)
+    assert((j \ "cold_total").extract[Double] == 1.0)
+    assert(times(parse(out.head), "queries_cold")("a") == -1.0)
+  }
+
+  test("a run that throws still ends with one parseable compact error line") {
+    assert(Bench.guarded(sf)(Seq("x", "y")) == Seq("x", "y"))
+    // quotes, newlines and control characters all grow when escaped
+    val msg = "\"\n\u0001" * 3000
+    val out = Bench.guarded(sf)(throw new IllegalStateException(msg))
+    assert(out.size == 1)
+    val last = out.last
+    assert(last.length <= Bench.MaxLineChars, s"${last.length} chars")
+    val j = parse(last)
+    assert((j \ "metric").extract[String] == "total")
+    assert((j \ "value").extract[Double] == -1.0)
+    assert((j \ "unit").extract[String] == "sec")
+    assert((j \ "protocol").extract[String] == "in_session")
+    assert(j \ "queries" != JNothing && j \ "n_queries" != JNothing)
+    assert((j \ "error").extract[String].nonEmpty)
+  }
 }

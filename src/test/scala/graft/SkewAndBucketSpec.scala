@@ -96,6 +96,55 @@ class SkewAndBucketSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS ord_b")
   }
 
+  /** Failed or killed tasks of the Spark jobs `body` starts on this
+    * thread. Listener events arrive asynchronously but in order, so once
+    * a sentinel job run after `body` has been seen, every task of
+    * `body`'s jobs has been counted.
+    */
+  private def failedTasksOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val key = "graft.spec.tag"
+    val tag = s"tasks-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var sentinelSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
+          if (t == tag) j.stageIds.foreach(stages.add(_))
+          if (t == s"$tag-end") sentinelSeen = true
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.reason != org.apache.spark.Success) {
+          failed.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"$tag-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "the listener never saw the sentinel job")
+      (out, failed.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The data directory of the `planes`-plane ANN index over `sf`. */
+  private def annIndexDir(planes: Int): java.io.File = {
+    val tag = java.lang.Long.toHexString(
+      graft.functions.DetHash.base60(sf) & 0xffffffffL)
+    new java.io.File(s"${Tables.persistedTableRoot(spark)}/graft_ann_p${planes}_$tag")
+  }
+
+  private def parquetFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles.toSeq.flatMap(parquetFiles)
+    else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+
   test("ensurePersisted rebuilds when the catalog entry's files are gone") {
     import graft.operators.Similarity
     // a 3-plane index: no other suite reads it, so deleting its files
@@ -105,21 +154,29 @@ class SkewAndBucketSpec extends SparkSpec {
     val n = idx.count()
     assert(n > 0)
     // simulate a cleaned tmpdir under a persistent metastore: the catalog
-    // entry survives but its data directory is gone, and the table is
-    // listed afresh, as a new session would list it (a stale cached
-    // listing would only make the health probe's tasks fail on the
-    // deleted files before the same rebuild)
-    val tag = java.lang.Long.toHexString(
-      graft.functions.DetHash.base60(sf) & 0xffffffffL)
-    val name = s"graft_ann_p3_$tag"
-    val loc = s"${Tables.persistedTableRoot(spark)}/$name"
+    // entry survives, and so does the session's cached file listing, but
+    // the data directory is gone
+    val loc = annIndexDir(planes = 3)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
     }
-    assert(new java.io.File(loc).isDirectory, s"expected index data at $loc")
-    rm(new java.io.File(loc))
-    spark.catalog.refreshTable(name)
-    val rebuilt = Similarity.partitionedAnnIndex(spark, sf, planes = 3)
+    assert(loc.isDirectory, s"expected index data at $loc")
+    rm(loc)
+    val (rebuilt, failed) = failedTasksOf(Similarity.partitionedAnnIndex(spark, sf, planes = 3))
+    assert(failed == 0, "the health check must not launch tasks on the deleted files")
     assert(rebuilt.count() == n, "missing files must trigger a rebuild")
+  }
+
+  test("ensurePersisted rebuilds when the catalog entry's files are unreadable") {
+    import graft.operators.Similarity
+    // a 2-plane index, likewise read by no other suite
+    val n = Similarity.partitionedAnnIndex(spark, sf, planes = 2).count()
+    assert(n > 0)
+    val files = parquetFiles(annIndexDir(planes = 2))
+    assert(files.nonEmpty, "expected index data files")
+    // the files are still listed and still exist, but none is parquet
+    files.foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+    val rebuilt = Similarity.partitionedAnnIndex(spark, sf, planes = 2)
+    assert(rebuilt.count() == n, "unreadable files must trigger a rebuild")
   }
 }
