@@ -18,7 +18,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * `batchId·10⁶ + index-of-first-record` — monotonic within a batch and
   * DETERMINISTIC under micro-batch replay (a replayed batch regenerates
   * the same object names and overwrites, mirroring how the real sink's
-  * offset-derived names make S3 writes idempotent).
+  * offset-derived names make S3 writes idempotent). A batch therefore
+  * owns the names `[batchId·10⁶, (batchId+1)·10⁶)`: both writers throw
+  * before naming an object past that range, because the next batch's
+  * replay-overwrite would delete it.
   *
   * How objects reach the file system: every read, write, `mkdirs`,
   * `rename` and `delete` goes through [[sinkConf]], the session's Hadoop
@@ -38,10 +41,22 @@ object ConnectLayout {
     * cache is off for `file:` because `FileSystem.get` caches one
     * instance per scheme and user, whatever the conf asks for: a stock
     * local file system cached earlier in the JVM would be handed back.
+    * [[Pipelines.startCheckpointed]] sets the same keys around a
+    * streaming query's `start()`.
     */
-  private val FileOverlay: Map[String, String] = Map(
+  private[streaming] val FileOverlay: Map[String, String] = Map(
     "fs.file.impl" -> classOf[PosixLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
+
+  /** The object name of a batch's record `offset`, refused once it leaves
+    * the batch's name range.
+    */
+  private def startOffset(batchId: Long, offset: Long): Long = {
+    if (offset >= OffsetStride)
+      throw new IOException(s"Connect sink batch $batchId: record offset $offset reaches the " +
+        s"next batch's object names (stride $OffsetStride records per batch)")
+    batchId * OffsetStride + offset
+  }
 
   /** The session's Hadoop conf with [[FileOverlay]] applied. */
   def sinkConf(spark: SparkSession): Configuration = {
@@ -74,7 +89,7 @@ object ConnectLayout {
     def flush(p: Int): Unit = bufs.get(p).foreach { case (buf, start) =>
       if (buf.nonEmpty) {
         val dir = new Path(s"$baseDir/partition=$p")
-        val name = s"$topic+$p+${batchId * OffsetStride + start}"
+        val name = s"$topic+$p+${startOffset(batchId, start)}"
         put(new Path(dir, s"$name.json"), buf.iterator.map(_._2))
         put(new Path(dir, s"$name.keys.json"), buf.iterator.map(_._1))
         bufs(p) = (buf.empty, start + buf.length)
@@ -118,8 +133,8 @@ object ConnectLayout {
     val parts = fs.listStatus(new Path(scratch))
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       .sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (src, i) =>
-      val offset = batchId * OffsetStride + i.toLong * flushSize
+    val offsets = parts.indices.map(i => startOffset(batchId, i.toLong * flushSize))
+    parts.zip(offsets).foreach { case (src, offset) =>
       val dst = new Path(dir, s"$topic+0+$offset.parquet")
       if (fs.exists(dst)) fs.delete(dst, false) // replayed batch overwrites
       if (!fs.rename(src, dst))

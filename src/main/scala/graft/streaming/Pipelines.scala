@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -68,19 +69,72 @@ object Pipelines {
 
   // ------------------------------------------------------------- sinks
 
+  /** What a `file:` checkpoint's `start()` runs with: [[ConnectLayout.FileOverlay]]
+    * plus the checkpoint file manager that writes through `FileSystem`,
+    * and so through `fs.file.impl`, where the stock one writes through
+    * `FileContext`.
+    */
+  private val CheckpointKeys: Map[String, String] = ConnectLayout.FileOverlay +
+    ("spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
+  /** Held while the session conf carries the checkpoint keys, so no
+    * other query started through [[startCheckpointed]] sees them.
+    */
+  private val StartLock = new Object
+
+  /** Starts `build(ds.writeStream)` with `checkpoint` as its checkpoint
+    * location; every `start*` below that takes a checkpoint starts here.
+    *
+    * A query captures its session's conf at `start()`: the session is
+    * cloned there, and the offset, commit and metadata logs and the HDFS
+    * or RocksDB state-store files are all written through the clone's
+    * Hadoop conf. When `checkpoint` resolves to the `file:` scheme (a
+    * path without a scheme takes the session's default file system),
+    * `start()` runs with [[CheckpointKeys]] set on `spark.conf`. The
+    * checkpoint and state files then go through [[PosixLocalFileSystem]]
+    * and set their modes with `chmod(2)` instead of one spawned `chmod`
+    * process each; names, modes and `.crc` sidecars are the stock ones,
+    * so checkpoints written by a plain `start()` restart here and back.
+    *
+    * The keys are set, `start()` runs and, in a `finally`, each key gets
+    * back its prior value (or is unset if it had none), all under one
+    * lock: a query started through here concurrently never sees another
+    * start's keys, whatever its scheme. A plain `writeStream.start()` on
+    * the same session does not take the lock. Checkpoints on any other
+    * scheme start with the session conf as it is.
+    */
+  private[graft] def startCheckpointed[T](ds: Dataset[T], checkpoint: String)(
+      build: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val writer = build(ds.writeStream).option("checkpointLocation", checkpoint)
+    val spark = ds.sparkSession
+    val scheme = Option(new Path(checkpoint).toUri.getScheme).getOrElse(
+      FileSystem.getDefaultUri(spark.sessionState.newHadoopConf()).getScheme)
+    StartLock.synchronized {
+      if (scheme != "file") writer.start()
+      else {
+        val prior = CheckpointKeys.keys.map(k => k -> spark.conf.getOption(k))
+        try {
+          CheckpointKeys.foreach { case (k, v) => spark.conf.set(k, v) }
+          writer.start()
+        } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
+    }
+  }
+
   /** K3: append-mode parquet sink (`jovens` → data lake), 10-record files
-    * like the reference's flush.size.
+    * like the reference's flush.size. Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startParquetSink(df: DataFrame, path: String, checkpoint: String,
                        trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    df.writeStream
+    startCheckpointed(df, checkpoint)(_
       .format("parquet")
       .option("path", path)
-      .option("checkpointLocation", checkpoint)
       .option("maxRecordsPerFile", 10)
       .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
   /** K4: update-mode windowed-count changelog → JSON-lines files.
     * File sinks are append-only, so each micro-batch's updated rows land
@@ -88,18 +142,18 @@ object Pipelines {
     * OVERWRITES its own `batch_id=N` partition directory, so a replayed
     * micro-batch after a failure rewrites identical files instead of
     * double-appending — the sink is idempotent per batch (exactly-once
-    * directory contents, not merely at-least-once appends).
+    * directory contents, not merely at-least-once appends). Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startJsonChangelogSink(agg: DataFrame, path: String, checkpoint: String,
                              trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    agg.writeStream
+    startCheckpointed(agg, checkpoint)(_
       .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").json(s"$path/batch_id=$batchId")
-      }
-      .start()
+      })
 
   // ----------------------------- Connect S3 object-layout sinks (K3/K4)
 
@@ -117,20 +171,30 @@ object Pipelines {
     * writer (flush.size via maxRecordsPerFile) and moved to their object
     * names — a metadata op on HDFS/local, a copy on S3 (the real sink
     * writes objects directly; the rename is the off-broker analog).
+    * `flushSize` must be positive: `maxRecordsPerFile` ≤ 0 means no limit,
+    * and every object of a batch would get the same name. Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startConnectParquetSink(df: DataFrame, s3Dir: String, topic: String,
                               checkpoint: String, flushSize: Int = 10,
                               topicsDir: String = "raw-data/kafka",
-                              trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
+                              trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+    require(flushSize > 0, s"flushSize must be > 0, got $flushSize")
+    startCheckpointed(df, checkpoint)(
+      connectParquetWriter(s3Dir, topic, flushSize, topicsDir, trigger))
+  }
+
+  /** [[startConnectParquetSink]]'s query, without its checkpoint. */
+  private[graft] def connectParquetWriter(s3Dir: String, topic: String, flushSize: Int,
+                                          topicsDir: String, trigger: Trigger)(
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ConnectLayout.writeParquetObjects(
           batch, s"$s3Dir/$topicsDir/$topic", topic, flushSize, batchId)
       }
-      .start()
 
   /** K4 with the reference's layout AND sidecar key objects
     * (`connect_s3_sink_count.config`: JsonFormat, `store.kafka.keys=true`,
@@ -143,16 +207,28 @@ object Pipelines {
     * deterministic, so results are reproducible). Objects are written
     * executor-side per partition group — no driver collect at any scale —
     * through the session's Hadoop conf, shipped to the tasks
-    * ([[ConnectLayout.sinkConf]]).
+    * ([[ConnectLayout.sinkConf]]). `numPartitions` and `flushSize` must
+    * be positive. Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startConnectJsonSink(agg: DataFrame, s3Dir: String, topic: String,
                            keyCols: Seq[String], checkpoint: String,
                            numPartitions: Int = 1, flushSize: Int = 10,
                            topicsDir: String = "raw-data/kafka",
-                           trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    agg.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
+                           trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+    require(numPartitions > 0, s"numPartitions must be > 0, got $numPartitions")
+    require(flushSize > 0, s"flushSize must be > 0, got $flushSize")
+    startCheckpointed(agg, checkpoint)(
+      connectJsonWriter(s3Dir, topic, keyCols, numPartitions, flushSize, topicsDir, trigger))
+  }
+
+  /** [[startConnectJsonSink]]'s query, without its checkpoint. */
+  private[graft] def connectJsonWriter(s3Dir: String, topic: String, keyCols: Seq[String],
+                                       numPartitions: Int, flushSize: Int,
+                                       topicsDir: String, trigger: Trigger)(
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+    w.outputMode(OutputMode.Update)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val keyed = batch.select(
@@ -168,7 +244,6 @@ object Pipelines {
             ConnectLayout.writeJsonObjects(it, conf.value, base, topic, flushSize, batchId)
           }
       }
-      .start()
 
   /** S4/P3: console push-query (`select * ... emit changes` /
     * `print <topic>`, reference README.md:180,204).
@@ -789,7 +864,8 @@ object Pipelines {
     * Scale shape: scoring and the guard are per-row projections fused
     * into the source scan; the ONLY stateful exchange is the dedup's
     * key-hash shuffle, whose state is watermark-bounded. The sink writes
-    * executor-side objects per micro-batch.
+    * executor-side objects per micro-batch; the query starts through
+    * [[startConnectParquetSink]], and so through [[startCheckpointed]].
     */
   def startStreamingCuration(docs: DataFrame, s3Dir: String, topic: String,
                              checkpoint: String,
@@ -1207,7 +1283,9 @@ object Pipelines {
     * it should be.
     *
     * `records` must carry the Kafka wire column `value: binary`
-    * ([[kafkaAvroSourceEvolving]]'s input shape, MemoryStream in tests).
+    * ([[kafkaAvroSourceEvolving]]'s input shape, MemoryStream in tests). Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startEvolvingIngestSink(records: DataFrame,
                               readerSchema: org.apache.spark.sql.types.StructType,
@@ -1215,12 +1293,10 @@ object Pipelines {
                               ids: Seq[Int], path: String,
                               deadLetterPath: String, checkpoint: String,
                               trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    records
+    startCheckpointed(records
       .select(col("value"), graft.functions.AvroCodec.avroDecodeEvolving(
-        col("value"), readerSchema, registry, ids).as("r"))
-      .writeStream
+        col("value"), readerSchema, registry, ids).as("r")), checkpoint)(_
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val staged = batch.persist()
@@ -1232,8 +1308,7 @@ object Pipelines {
             dead.write.mode("overwrite")
               .parquet(s"$deadLetterPath/batch_id=$batchId")
         } finally { staged.unpersist(); () }
-      }
-      .start()
+      })
 
   /** The FULL reference-topology analog composed as ONE driven pipeline —
     * every tier the reference wires through Kafka/Connect/ksqlDB,
@@ -1278,7 +1353,9 @@ object Pipelines {
     * dt_update long` (epoch ms — the Avro wire primitive for timestamps,
     * as in [[graft.functions.AvroCodec.customerWireSchema]]); extra
     * reader fields (e.g. `lang`) ride along and old writer versions
-    * without them decode to null there.
+    * without them decode to null there. Starts
+    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
+    * a `file:` checkpoint, session conf restored even if `start()` throws.
     */
   def startReferenceTopology(records: DataFrame,
                              readerSchema: org.apache.spark.sql.types.StructType,
@@ -1292,19 +1369,16 @@ object Pipelines {
     val snapshotDir = s"$outDir/snapshot"
     requireNoLegacyStage(records.sparkSession, outDir, checkpoint)
     val sid = streamInstanceId(records.sparkSession, checkpoint)
-    records
+    startCheckpointed(records
       .select(col("value"), graft.functions.AvroCodec.avroDecodeEvolving(
-        col("value"), readerSchema, registry, ids).as("r"))
-      .writeStream
+        col("value"), readerSchema, registry, ids).as("r")), checkpoint)(_
       .queryName(queryName)
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         referenceTopologyBatch(batch, batchId, outDir, snapshotDir,
           buckets, lang, minQuality, streamId = sid)
-      }
-      .start()
+      })
   }
 
   /** UPGRADE GUARD: pre-namespace layouts wrote `stage/batch_id=N`

@@ -225,6 +225,53 @@ class ConnectLayoutSpec extends SparkSpec {
     }
   }
 
+  test("connect sinks refuse a non-positive flushSize or numPartitions, naming it") {
+    val mem = MemoryStream[Cust]
+    def refused(start: => StreamingQuery): String =
+      intercept[IllegalArgumentException](start).getMessage
+    assert(refused(Pipelines.startConnectParquetSink(Pipelines.jovens(mem.toDF()),
+      tmpDir("graft_s3z_"), "jovens", tmpDir("graft_ckpz_"), flushSize = 0)).contains("flushSize"))
+    val agg = Pipelines.idadecont(mem.toDF())
+    assert(refused(Pipelines.startConnectJsonSink(agg, tmpDir("graft_s3z_"), "idadecont",
+      Seq("idadecat"), tmpDir("graft_ckpz_"), flushSize = -1)).contains("flushSize"))
+    assert(refused(Pipelines.startConnectJsonSink(agg, tmpDir("graft_s3z_"), "idadecont",
+      Seq("idadecat"), tmpDir("graft_ckpz_"), numPartitions = 0)).contains("numPartitions"))
+  }
+
+  /** The refusal of an object name in the next batch's range. */
+  private def assertStrideRefusal(e: java.io.IOException, batchId: Long): Unit = {
+    assert(e.getMessage.contains(s"batch $batchId"), e.getMessage)
+    assert(e.getMessage.contains("stride 1000000"), e.getMessage)
+  }
+
+  test("parquet objects: a batch whose names reach the next batch's range throws before moving any") {
+    // two one-row files at flushSize 10^6: the second is named batch 1's first object
+    val topicDir = tmpDir("graft_s3r_") + "/jovens"
+    val batch = spark.range(2).repartition(2).toDF("id")
+    val e = intercept[java.io.IOException](
+      ConnectLayout.writeParquetObjects(batch, topicDir, "jovens", flushSize = 1000000, batchId = 0))
+    assertStrideRefusal(e, 0)
+    val part0 = Paths.get(topicDir, "partition=0")
+    assert(!Files.exists(part0) || Files.list(part0).iterator().asScala.isEmpty)
+  }
+
+  test("json objects: a partition whose offsets reach the next batch's range throws") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("__partition", IntegerType),
+      StructField("__key", StringType), StructField("__value", StringType)))
+    val row: org.apache.spark.sql.Row = new GenericRowWithSchema(Array[Any](0, "k", "v"), schema)
+    val base = tmpDir("graft_s3r_") + "/idadecont"
+    // 10^6 + 1 records in one partition: the last starts at offset 10^6, batch 4's first name
+    val e = intercept[java.io.IOException](ConnectLayout.writeJsonObjects(
+      Iterator.fill(1000001)(row), ConnectLayout.sinkConf(spark), base, "idadecont",
+      flushSize = 1000000, batchId = 3))
+    assertStrideRefusal(e, 3)
+    val names = Files.list(Paths.get(base, "partition=0")).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
+    assert(names == Set("idadecont+0+3000000.json", "idadecont+0+3000000.keys.json"))
+  }
+
   test("PosixLocalFileSystem matches chmod(1) on sticky modes and in setgid directories") {
     val conf = spark.sessionState.newHadoopConf()
     val posix = new PosixLocalFileSystem
