@@ -431,7 +431,7 @@ object SparkEntry {
     // adversarial long-chain component (diameter ~N/4) on the O(log d)
     // pointer-jumping loop — the plain O(d) loop would take ~60 rounds
     // at sf0.01 where this takes ~8
-    "dedup_clusters_chain" -> q((s, d) => Dedup.clustersPointerJump(Dedup.chainedDocs(Tables.load(s, d, "documents")), 3, 0.8)),
+    "dedup_clusters_chain" -> q((s, d) => Dedup.clusters(Dedup.chainedDocs(Tables.load(s, d, "documents")), 3, 0.8)),
     // one surviving doc per near-dup cluster, chosen by token count
     // (RefinedWeb keep-the-longest policy), not min id
     "dedup_cluster_reps" -> q((s, d) => Dedup.clusterRepresentatives(Tables.load(s, d, "documents"), 3, 0.8)),

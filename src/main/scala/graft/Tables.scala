@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Loaders for the driver's parquet testdata tables (TESTDATA.md).
@@ -207,4 +207,30 @@ object Tables {
     }
     spark.table(name)
   }
+
+  /** The hex tag that keeps one source's persisted tables apart from
+    * another's (sf0.001 / sf0.01 / sf0.1): the low 32 bits of
+    * [[graft.functions.DetHash.base60]] of `key`, usually the corpus dir.
+    */
+  def persistTag(key: String): String =
+    java.lang.Long.toHexString(graft.functions.DetHash.base60(key) & 0xffffffffL)
+
+  private object PersistLock
+
+  /** The persisted derived table `prefix + persistTag(key)`, built once
+    * per session through [[ensurePersisted]]: `build` is written with
+    * `layout` (bucketing, partitioning) at the table's per-session path,
+    * mode overwrite, `saveAsTable`. Every check and build runs under one
+    * lock, so two queries never build the same table at once; a build
+    * may ensure another table inside `build` (the lock is re-entrant).
+    */
+  def persisted(spark: SparkSession, key: String, prefix: String,
+                layout: DataFrameWriter[Row] => DataFrameWriter[Row] = w => w)
+               (build: => Dataset[_]): DataFrame =
+    PersistLock.synchronized {
+      val name = prefix + persistTag(key)
+      ensurePersisted(spark, name) { path =>
+        layout(build.toDF().write).option("path", path).mode("overwrite").saveAsTable(name)
+      }
+    }
 }

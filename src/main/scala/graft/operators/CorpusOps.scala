@@ -259,9 +259,8 @@ object CorpusOps {
     */
   def smallFileDocs(spark: org.apache.spark.sql.SparkSession,
                     dir: String): String = CorpusOps.synchronized {
-    val tag = java.lang.Long.toHexString(
-      graft.functions.DetHash.base60(dir) & 0xffffffffL)
-    val path = s"${graft.Tables.persistedTableRoot(spark)}/graft_smallfiles_$tag"
+    val path = s"${graft.Tables.persistedTableRoot(spark)}/graft_smallfiles_" +
+      graft.Tables.persistTag(dir)
     // resolve the FS from the path's own scheme, not the default FS —
     // on a cluster the persisted root may be s3a:// while default is hdfs://
     val done = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
@@ -801,14 +800,8 @@ object CorpusOps {
     */
   def bigramModelTable(spark: org.apache.spark.sql.SparkSession,
                        dir: String, dims: Int = 1024): DataFrame =
-    CorpusOps.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_bigram_${dims}_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        bigramBucketModel(graft.Tables.load(spark, dir, "documents"), dims)
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_bigram_${dims}_") {
+      bigramBucketModel(graft.Tables.load(spark, dir, "documents"), dims)
     }
 
   /** The three corpus constants the scaled-KL identity needs —

@@ -4,20 +4,39 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.functions.DetHash
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Deduplication operators over a document corpus — the LLM-training-data
   * pipeline surface (north-star extension; the reference has no dedup,
   * SURVEY.md §2.8).
   *
+  * The near-dup chains are compositions of four stages, each written once:
+  *  1. grams: [[shingled]] (word n-grams) or [[charShingled]] (char n-gram
+  *     hash keys), entered through [[gramEntry]] (`isnotnull(doc_id)` and
+  *     one `repartition(doc_id)`), so all of an operator's gram consumers
+  *     read one exchange and the gram pass runs once;
+  *  2. signatures and bands: [[withSignature]] (hs → MinHashSlots → sig,
+  *     for string or long grams), [[bandKey]] (with the empty-set guard
+  *     inside the generator), [[slotMatches]], and [[pigeonhole]] (the
+  *     containment probe budget (m, plen));
+  *  3. verify: [[countIntersections]] (count-based |A∩B|) and
+  *     [[bothDirections]] (both containment directions from one count);
+  *     [[jaccardPairsOver]] keeps its bitmap/array verify, picked from the
+  *     measured vocabulary;
+  *  4. emit: [[collapsedClusters]] (exact-value collapse, rep pairs plus
+  *     member edges, [[componentLabels]]).
+  *
   * Scale design:
   *  - Exact dedup: one hash-shuffle on the fingerprint. The md5 fingerprint
   *    (not the raw text) is what shuffles — 32 bytes/row regardless of
   *    document size.
-  *  - MinHash-LSH: the 100 TB path. Per-doc cost is one md5 per shingle +
-  *    integer math for all permutations (see [[DetHash]]); the only wide
-  *    exchanges are (band-key → candidates) and the signature re-join for
-  *    verification. Candidate volume is controlled by (bands × rows), not
-  *    corpus size².
+  *  - MinHash-LSH: the 100 TB path. Per-doc cost is one md5 per word
+  *    shingle (char grams are already hash keys) + integer math for all
+  *    permutations (see [[DetHash]]). Candidates come from the band-key
+  *    self-join; word LSH verifies by exact count-based jaccard over the
+  *    gram exchange, char LSH by the signature estimate, the signatures
+  *    riding each band row through the join. Candidate volume is
+  *    controlled by (bands × rows), not corpus size².
   *  - Inverted-index jaccard: exact semantics; candidate generation via
   *    explode(shingle) self-join. Correct but super-linear in shared-shingle
   *    frequency — documented as the small/medium-corpus exact baseline;
@@ -28,7 +47,9 @@ import graft.functions.DetHash
   *    sign-random-projection buckets ([[Similarity]] shares the machinery).
   *
   * All outputs are deterministic and oracle-checkable (md5-derived hashing,
-  * double-widened float math — no Murmur3, no rand()).
+  * double-widened float math, no rand()). Murmur3 appears once, as the
+  * second key hash of [[collapseByValue]]: it only groups identical
+  * values, so it never reaches an output value.
   */
 object Dedup {
 
@@ -94,18 +115,11 @@ object Dedup {
     */
   def fingerprintIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_fpidx_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        graft.Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 10 < 8)
-          .select(fingerprint(col("text")).as("fp")).distinct()
-          .write.bucketBy(buckets, "fp").sortBy("fp")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_fpidx_b",
+        _.bucketBy(buckets, "fp").sortBy("fp")) {
+      graft.Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 10 < 8)
+        .select(fingerprint(col("text")).as("fp")).distinct()
     }
 
   /** Incremental ingest: dedup TODAY'S batch (doc_id % 10 >= 8) against
@@ -145,53 +159,106 @@ object Dedup {
   val Bands = 4
   val RowsPerBand: Int = NumHashes / Bands
 
-  /** Min-permuted hash for permutation i over a materialized base-hash
-    * array column. Empty shingle set → P sentinel (never collides with
-    * real docs because real minhash < P).
-    */
-  private def minSlot(hs: Column, i: Int): Column = {
-    val (a, b) = (DetHash.minhashA(i), DetHash.minhashB(i))
-    coalesce(array_min(transform(hs, h => pmod(h * a + b, lit(DetHash.P)))),
-      lit(DetHash.P))
-  }
-
-  /** MinHash signature: array of NumHashes min-permuted shingle hashes.
+  /** MinHash signature: array of NumHashes min-permuted shingle hashes,
+    * one array_min(transform(...)) per permutation — the reference form
+    * [[withSignature]]'s fused slots are spec-checked against. An empty
+    * shingle set gets the P sentinel in every slot (real minhash < P).
     *
     * NOTE: the md5-derived base hash is inlined per permutation here — only
     * use this form when the signature is computed once per row. Plans that
     * fan out (LSH) must materialize `hs` first so md5 runs once per shingle,
-    * not NumHashes times (see [[minhashLshPairs]]).
+    * not NumHashes times (see [[withSignature]]).
     */
   def minhashSignature(shingles: Column): Column = {
     val hs = transform(shingles, s => pmod(DetHash.base60(s), lit(DetHash.P)))
-    array((0 until NumHashes).map(minSlot(hs, _)): _*)
+    array((0 until NumHashes).map { i =>
+      val (a, b) = (DetHash.minhashA(i), DetHash.minhashB(i))
+      coalesce(array_min(transform(hs, h => pmod(h * a + b, lit(DetHash.P)))),
+        lit(DetHash.P))
+    }: _*)
   }
 
   private val minhashAs = Array.tabulate(NumHashes)(DetHash.minhashA(_))
   private val minhashBs = Array.tabulate(NumHashes)(DetHash.minhashB(_))
 
-  /** (doc_id, shingles, sig) with the base-hash array materialized as a
-    * real column between the md5 pass and the permutation pass. All
-    * NumHashes slots come from ONE fused [[graft.functions.MinHashSlots]]
-    * scan of the hash array (bit-identical to the per-permutation
-    * [[minSlot]] form — spec-asserted) instead of NumHashes
-    * array_min(transform(...)) scans, each of which re-reads the array
-    * and allocates an intermediate copy per row.
+  /** STAGE 1 entry: an operator's gram relation, `cols` over
+    * [[shingled]] / [[charShingled]] rows, repartitioned by doc_id so
+    * every consumer (df model, ranks, signatures, sizes, posting sides)
+    * reads ONE exchange instead of re-running normalize + tokenize or
+    * gram-hash per consumer. The explicit isnotnull(doc_id) below the
+    * exchange keeps the consumer subtrees canonical: join consumers
+    * infer it from their constraints, aggregate consumers do not, and
+    * the asymmetry split the exchange (r16: the corpus shingled twice).
+    * doc_id is the corpus' non-null key, so the filter drops nothing.
     */
-  private def signaturesOver(sh: DataFrame): DataFrame =
-    sh
-      .withColumn("hs", transform(col("shingles"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .select(col("doc_id"), col("shingles"),
-        graft.functions.MinHashSlots.column(
-          col("hs"), minhashAs, minhashBs, DetHash.P).as("sig"))
+  private def gramEntry(sh: DataFrame, cols: Column*): DataFrame =
+    sh.filter(col("doc_id").isNotNull)
+      .select(col("doc_id") +: cols: _*)
+      .repartition(col("doc_id"))
 
-  private def signatures(docs: DataFrame, n: Int): DataFrame =
-    signaturesOver(shingled(docs, n))
+  /** STAGE 2: adds the minhash signature `sig` of the gram-set column
+    * `grams`, every column kept. The base-hash array is materialized
+    * between the hash pass and ONE fused [[graft.functions.MinHashSlots]]
+    * scan for all NumHashes slots (bit-identical to the per-permutation
+    * [[minhashSignature]] form — spec-asserted). String grams hash by md5 (one
+    * per gram); long grams are already hash keys, taken mod P.
+    */
+  private[graft] def withSignature(sh: DataFrame, grams: String = "shingles"): DataFrame = {
+    val base: Column => Column = sh.schema(grams).dataType match {
+      case ArrayType(StringType, _) => g => pmod(DetHash.base60(g), lit(DetHash.P))
+      case _ => h => pmod(h, lit(DetHash.P))
+    }
+    sh.withColumn("__hs", transform(col(grams), base))
+      .withColumn("sig", graft.functions.MinHashSlots.column(
+        col("__hs"), minhashAs, minhashBs, DetHash.P))
+      .drop("__hs")
+  }
+
+  /** STAGE 2: the exploded band key of `sig` — NumHashes / rowsPerBand
+    * strings "bandIdx:mh_i:mh_j:…"; docs sharing any key are candidates.
+    * A doc whose gram set is EMPTY (`gramCount` 0) yields one null key,
+    * dropped by any equi-join: its signature is all P-sentinels, so two
+    * empty docs would otherwise share every band key (a bogus est_sim
+    * 1.0 where no exact verify follows). The guard lives INSIDE the
+    * generator, never as a Filter node: predicate pushdown substitutes a
+    * filter's column references through every projection, re-inlining
+    * the whole gram pipeline below the scan fan-out (measured 13× on
+    * dedup_char_lsh, again on the containment LSH report). explode_outer
+    * keeps InferFiltersFromGenerate from adding a `size > 0` filter.
+    */
+  private[graft] def bandKey(sig: Column, gramCount: Column,
+                             rowsPerBand: Int = RowsPerBand): Column = {
+    require(NumHashes % rowsPerBand == 0,
+      s"$rowsPerBand-slot bands must tile the $NumHashes-slot signature")
+    explode_outer(when(gramCount > 0, array((0 until NumHashes / rowsPerBand).map { b =>
+      val parts = lit(b) +: (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
+      concat_ws(":", parts.map(_.cast("string")): _*)
+    }: _*)))
+  }
+
+  /** STAGE 2 over a gram frame: [[withSignature]] plus the exploded band
+    * key `bk`, every column kept — streaming probes need their event-time
+    * column to ride along (a join-back would be a stream-stream
+    * self-join). Each intermediate column is multi-referenced, so
+    * CollapseProject cannot re-inline the gram pass into per-gram lambdas.
+    */
+  private[graft] def banded(sh: DataFrame, grams: String = "shingles",
+                            rowsPerBand: Int = RowsPerBand): DataFrame =
+    withSignature(sh, grams)
+      .withColumn("bk", bandKey(col("sig"), size(col(grams)), rowsPerBand))
+
+  /** The band-key self-join: (a, b) for every band collision with
+    * a < b, plus each `carry` column of both sides as `<c>_a` / `<c>_b`.
+    */
+  private def bandCollisions(bands: DataFrame, carry: String*): DataFrame =
+    bands.as("x").join(bands.as("y"), col("x.bk") === col("y.bk"))
+      .filter(col("x.doc_id") < col("y.doc_id"))
+      .select(Seq(col("x.doc_id").as("a"), col("y.doc_id").as("b")) ++
+        carry.flatMap(c => Seq(col(s"x.$c").as(s"${c}_a"), col(s"y.$c").as(s"${c}_b"))): _*)
 
   /** Per-doc signatures (oracle-checkable deliverable on its own). */
   def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
-    signatures(docs, n).select(col("doc_id"), col("sig"))
+    withSignature(shingled(docs, n)).select(col("doc_id"), col("sig"))
 
   /** Signature as a comma-joined string — array columns don't hash-compare
     * reliably across engines; a canonical string does.
@@ -200,53 +267,15 @@ object Dedup {
     minhashSignatures(docs, n).select(col("doc_id"),
       concat_ws(",", transform(col("sig"), _.cast("string"))).as("sig"))
 
-  /** Band keys: Bands strings "bandIdx:mh_i:mh_j:..." — docs sharing any
-    * band key are LSH candidates.
-    */
-  private def bandKeys(sig: Column): Column =
-    bandKeysWith(sig, Bands, RowsPerBand)
-
-  /** [[bandKeys]] at an EXPLICIT (bands, rowsPerBand) split of the same
-    * NumHashes-slot signature — the banding knob [[charLshPairsAuto]]
-    * turns with corpus size. bands × rowsPerBand must cover the
-    * signature exactly so every slot keeps contributing to one band.
-    */
-  private def bandKeysWith(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    require(bands * rowsPerBand == NumHashes,
-      s"banding $bands x $rowsPerBand must tile the $NumHashes-slot signature")
-    array((0 until bands).map { b =>
-      val parts = lit(b) +: (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
-      concat_ws(":", parts.map(_.cast("string")): _*)
-    }: _*)
-  }
-
-  /** Adds the minhash `sig` and an exploded band key `bk` while KEEPING
-    * every existing column — streaming probes need their event-time
-    * column to ride along, and a post-hoc join-back would be a
-    * stream-stream self-join. Empty docs produce one null band key,
-    * dropped by any equi-join. The intermediate columns fan out
-    * multi-referenced at each step, so CollapseProject cannot re-inline
-    * the tokenizer into per-shingle lambdas (the measured-10× trap
-    * [[shingled]] documents).
+  /** (doc_id, …, sig, bk) over the word n-grams of `docs`: one row per
+    * band key, the joinable LSH form of a corpus shared by the persisted
+    * band index, the fuzzy decontamination and the streaming near-dup
+    * filter.
     */
   def withBandedSignature(docs: DataFrame, n: Int = 3): DataFrame =
-    docs
-      .withColumn("__tk", tokens(normalizeText(col("text"))))
-      .withColumn("__sh", shinglesFromTokens(col("__tk"), n))
-      .withColumn("__hs", transform(col("__sh"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .withColumn("sig", graft.functions.MinHashSlots.column(
-        col("__hs"), minhashAs, minhashBs, DetHash.P))
-      .withColumn("bk",
-        explode_outer(when(size(col("__sh")) > 0, bandKeys(col("sig")))))
-      .drop("__tk", "__sh", "__hs")
-
-  /** (doc_id, sig, bk) — one row per band key, the joinable LSH form of a
-    * corpus (shared by the persisted band index and the streaming
-    * near-dup filter).
-    */
-  def bandedSignatures(docs: DataFrame, n: Int = 3): DataFrame =
-    withBandedSignature(docs, n).select(col("doc_id"), col("sig"), col("bk"))
+    banded(docs.withColumn("__tk", tokens(normalizeText(col("text"))))
+      .withColumn("__sh", shinglesFromTokens(col("__tk"), n)), "__sh")
+      .drop("__tk", "__sh")
 
   /** The PERSISTED LSH band index: every corpus document's band keys and
     * minhash signature, written `bucketBy(bk)` once per sf-dir — the
@@ -257,17 +286,10 @@ object Dedup {
     */
   def lshBandIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                    n: Int = 3, buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_lshidx_n${n}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        bandedSignatures(graft.Tables.load(spark, dir, "documents"), n)
-          .filter(col("bk").isNotNull)
-          .write.bucketBy(buckets, "bk")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_lshidx_n${n}_b", _.bucketBy(buckets, "bk")) {
+      withBandedSignature(graft.Tables.load(spark, dir, "documents"), n)
+        .select(col("doc_id"), col("sig"), col("bk"))
+        .filter(col("bk").isNotNull)
     }
 
   /** Batch probe of the persisted band index — the near-dup twin of
@@ -305,16 +327,9 @@ object Dedup {
     */
   def shingleIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                    n: Int = 3, buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_shidx_n${n}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        shingled(graft.Tables.load(spark, dir, "documents"), n)
-          .write.bucketBy(buckets, "doc_id").sortBy("doc_id")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_shidx_n${n}_b",
+        _.bucketBy(buckets, "doc_id").sortBy("doc_id")) {
+      shingled(graft.Tables.load(spark, dir, "documents"), n)
     }
 
   /** The PERSISTED CLUSTER-LABEL TABLE for the accumulated corpus slice
@@ -326,20 +341,13 @@ object Dedup {
     */
   def clusterLabelIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                         n: Int = 3, threshold: Double = 0.8): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val t1000 = math.round(threshold * 1000)
-      val name = s"graft_lblidx_n${n}_t${t1000}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        val old = graft.Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 10 < 8)
-        componentLabels(old.select(col("doc_id")),
-          minhashLshPairs(old, n, threshold).select(col("a"), col("b")),
-          "lblidx_cc")._1
-          .write.option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir,
+        s"graft_lblidx_n${n}_t${math.round(threshold * 1000)}_b") {
+      val old = graft.Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 10 < 8)
+      componentLabels(old.select(col("doc_id")),
+        minhashLshPairs(old, n, threshold).select(col("a"), col("b")),
+        "lblidx_cc")._1
     }
 
   /** INCREMENTAL CLUSTER MAINTENANCE — the dedup sibling of
@@ -397,13 +405,10 @@ object Dedup {
     // by exact jaccard against the persisted shingle index (index side
     // pre-bucketed on doc_id). Wire cost: bands × batch probe rows plus
     // candidate-sized (id, id) and per-candidate gram arrays. The band
-    // keys come from the SAME pinned shingles — the identical
-    // hs → MinHashSlots → bandKeys chain (and empty-shingle guard) as
-    // withBandedSignature, so the probe relation is value-unchanged.
-    val cand = signaturesOver(batchSh)
-      .select(col("doc_id").as("new_id"),
-        explode_outer(when(size(col("shingles")) > 0, bandKeys(col("sig"))))
-          .as("bk"))
+    // keys come from the SAME pinned shingles through the shared
+    // [[banded]] stage the persisted band index was built with.
+    val cand = banded(batchSh)
+      .select(col("doc_id").as("new_id"), col("bk"))
       .join(bandIdx.select(col("bk"), col("doc_id").as("old_id")), Seq("bk"))
       .select(col("new_id"), col("old_id")).distinct()
     val newSh = batchSh
@@ -462,10 +467,7 @@ object Dedup {
     */
   def containmentProbeFrame(posting: DataFrame, dfModel: DataFrame,
                             threshold: Double): DataFrame = {
-    val den = 1000000L
-    val num = math.round(threshold * den)
-    val m = col("sz") - ceilRational(num, col("sz"), den)
-    val plen = least(col("sz"), lit(2) * m + 1)
+    val (m, plen) = pigeonhole(col("sz"), threshold)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
     posting
@@ -486,16 +488,9 @@ object Dedup {
   def containmentPostingIndex(spark: org.apache.spark.sql.SparkSession,
                               dir: String, n: Int = 3,
                               buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_cntpost_n${n}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        containmentPostingFrame(graft.Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 10 < 8), n)
-          .write.bucketBy(buckets, "g")
-          .option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_cntpost_n${n}_b", _.bucketBy(buckets, "g")) {
+      containmentPostingFrame(graft.Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 10 < 8), n)
     }
 
   /** Document frequency per gram over the accumulated slice — the
@@ -505,16 +500,9 @@ object Dedup {
   def containmentDfIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, n: Int = 3,
                          buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_cntdf_n${n}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        containmentPostingIndex(spark, dir, n, buckets)
-          .groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .write.bucketBy(buckets, "g")
-          .option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_cntdf_n${n}_b", _.bucketBy(buckets, "g")) {
+      containmentPostingIndex(spark, dir, n, buckets)
+        .groupBy(col("g")).agg(count(lit(1)).as("df"))
     }
 
   /** The df model's top-`k` HOTTEST grams, collected for broadcast into
@@ -555,18 +543,11 @@ object Dedup {
   def containmentProbeIndex(spark: org.apache.spark.sql.SparkSession,
                             dir: String, n: Int = 3, threshold: Double = 0.9,
                             buckets: Int = 32): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val t1000 = math.round(threshold * 1000)
-      val name = s"graft_cntprobe_n${n}_t${t1000}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        containmentProbeFrame(
-          containmentPostingIndex(spark, dir, n, buckets),
-          containmentDfIndex(spark, dir, n, buckets), threshold)
-          .write.bucketBy(buckets, "g")
-          .option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir,
+        s"graft_cntprobe_n${n}_t${math.round(threshold * 1000)}_b", _.bucketBy(buckets, "g")) {
+      containmentProbeFrame(
+        containmentPostingIndex(spark, dir, n, buckets),
+        containmentDfIndex(spark, dir, n, buckets), threshold)
     }
 
   /** [[containmentReport]] built as `slices` SEQUENTIAL container-slice
@@ -581,21 +562,7 @@ object Dedup {
   private[graft] def containmentReportSliced(docs: DataFrame, n: Int,
                                              threshold: Double,
                                              slices: Int): DataFrame =
-    if (slices <= 1) containmentReport(docs, n, threshold)
-    else containmentReportExt(docs, n) { (reps, famKb) =>
-      val spark = docs.sparkSession
-      val famB = famKb.localCheckpoint(true) // one agg, `slices` consumers
-      stagedUnion(spark, "cnt_ext", slices) { s =>
-        containmentPairsSliced(reps, n, threshold, Some((s, slices)))
-          .join(famB, Seq("b"))
-          .groupBy(col("a"))
-          .agg(sum(col("kb")).as("ext_cnt"),
-            min(struct((-col("containment")).as("nc"), col("b").as("bid")))
-              .as("best"))
-      }
-        .groupBy(col("a"))
-        .agg(sum(col("ext_cnt")).as("ext_cnt"), min(col("best")).as("best"))
-    }
+    containmentReportOver(docs, n, slices)(containmentPairsSliced(_, n, threshold, _))
 
   /** Run `slices` SEQUENTIAL jobs, parquet-staging each result, and
     * return their union — the isolation primitive the sliced builds
@@ -640,17 +607,10 @@ object Dedup {
   def containmentReportIndex(spark: org.apache.spark.sql.SparkSession,
                              dir: String, n: Int = 3,
                              threshold: Double = 0.9): DataFrame =
-    Dedup.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val t1000 = math.round(threshold * 1000)
-      val name = s"graft_cntrep_n${n}_t${t1000}_b$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        val old = graft.Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 10 < 8)
-        containmentReportAuto(old, n, threshold)
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir,
+        s"graft_cntrep_n${n}_t${math.round(threshold * 1000)}_b") {
+      containmentReportAuto(graft.Tables.load(spark, dir, "documents")
+        .filter(col("doc_id") % 10 < 8), n, threshold)
     }
 
   /** INCREMENTAL CONTAINMENT-REPORT MAINTENANCE — the directed-overlap
@@ -690,16 +650,11 @@ object Dedup {
     val posting = containmentPostingIndex(spark, dir, n)
     val probeIdx = containmentProbeIndex(spark, dir, n, threshold)
     val dfIdx = containmentDfIndex(spark, dir, n)
-    val den = 1000000L
-    val num = math.round(threshold * den)
     // one shingling pass over the batch; (a) partitioning feeds the
     // probe-ranking window and is reused by the other two consumers
-    val bg = shingled(batch, n)
-      .select(col("doc_id").as("a"), size(col("shingles")).as("sza"),
-        explode(col("shingles")).as("g"))
-      .repartition(col("a"))
-    val mA = col("sza") - ceilRational(num, col("sza"), den)
-    val plenA = least(col("sza"), lit(2) * mA + 1)
+    val bg = gramEntry(shingled(batch, n), size(col("shingles")).as("sza"),
+      explode(col("shingles")).as("g")).withColumnRenamed("doc_id", "a")
+    val (mA, plenA) = pigeonhole(col("sza"), threshold)
     val wA = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a")).orderBy(coalesce(col("df"), lit(0L)), col("g"))
     // direction NEW-contained-in-OLD: the batch doc's rarest plen grams
@@ -726,22 +681,16 @@ object Dedup {
       .select(col("x"), col("a"))
     val cands = cand1.unionByName(cand2).distinct()
     // ONE exact intersection count per candidate; both directions emit
-    // from it (a generator expression, same shape as containmentPairsLsh)
+    // from it ([[bothDirections]], the containmentPairsLsh emit)
     val iv = cands
       .join(bg.select(col("a"), col("sza"), col("g")), Seq("a"))
       .join(posting.select(col("doc_id").as("x"), col("sz").as("szx"),
         col("g")), Seq("x", "g"))
-      .groupBy(col("x"), col("a"), col("sza"), col("szx"))
+      .groupBy(col("x").as("b"), col("a"), col("sza"), col("szx").as("szb"))
       .agg(count(lit(1)).as("inter"))
-    val ca = col("inter").cast("double") / col("sza").cast("double")
-    val cx = col("inter").cast("double") / col("szx").cast("double")
-    val crossEdges = iv
-      .select(explode(filter(array(
-        struct(col("a").as("d"), col("x").as("c"), ca.as("v")),
-        struct(col("x").as("d"), col("a").as("c"), cx.as("v"))),
-        s => s.getField("v") >= threshold)).as("p"))
-      .select(col("p.d").as("contained"), col("p.c").as("container"),
-        round(col("p.v"), 4).as("cv"))
+    val crossEdges = bothDirections(iv, threshold)
+      .select(col("a").as("contained"), col("b").as("container"),
+        col("containment").as("cv"))
     val withinBatch = containmentPairs(batch, n, threshold)
       .select(col("a").as("contained"), col("b").as("container"),
         col("containment").as("cv"))
@@ -884,22 +833,37 @@ object Dedup {
           .as("dup_rate"))
   }
 
+  /** STAGE 2: the number of equal slots of two minhash signatures. */
+  private def slotMatches(sigA: Column, sigB: Column): Column =
+    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, m) => acc + m)
+
   /** Signature-estimate similarity: matching minhash slots / NumHashes —
     * the constant-work candidate verifier shared by [[charLshPairs]] and
     * the streaming near-dup filter.
     */
   def sigEstimate(sigA: Column, sigB: Column): Column =
-    round(
-      aggregate(
-        zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, m) => acc + m).cast("double") / NumHashes, 4)
+    round(slotMatches(sigA, sigB).cast("double") / NumHashes, 4)
+
+  /** STAGE 2: the containment pigeonhole budget of a gram set of size
+    * `sz` at threshold t: it may miss `m = sz − ⌈t·sz⌉` grams, so among
+    * any `plen = min(sz, 2m+1)` of them at least `plen − m` must match.
+    * ⌈t·sz⌉ in INTEGER arithmetic ([[ceilRational]], t as num/10⁶): a
+    * float ceil(0.9·10) rounds 9.0000000000000018 up to 10, shrinking m
+    * below the guarantee and dropping a true pair the exact verify keeps.
+    */
+  private[graft] def pigeonhole(sz: Column, threshold: Double): (Column, Column) = {
+    val den = 1000000L
+    val m = sz - ceilRational(math.round(threshold * den), sz, den)
+    (m, least(sz, lit(2) * m + 1))
+  }
 
   /** LSH candidate pairs (a < b), verified with exact jaccard on the
     * shingle sets; emits pairs with jaccard >= threshold.
     *
-    * Plan shape: shingle+sign once (cached subplan appears twice — Spark
-    * reuses the exchange), explode 4 band keys/doc, self-join on band key,
-    * distinct pairs, re-join signatures for the verify.
+    * Plan shape: one gram exchange feeds the banded signatures, the
+    * sizes and both posting sides; band self-join, distinct pairs, then
+    * the count-based verify ([[countIntersections]]).
     */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame =
     lshPairsOver(shingled(docs, n), threshold)
@@ -911,9 +875,26 @@ object Dedup {
     * unboundedly worse at scale) — so the verify stage compares the 16
     * integer signature slots instead: constant work per candidate, the
     * standard signature-only LSH trade (estimate, not exact jaccard).
+    * `rowsPerBand` is the band width (NumHashes / rowsPerBand bands), the
+    * knob [[charLshPairsAuto]] turns with corpus size.
     */
-  def charLshPairs(docs: DataFrame, n: Int = 5, threshold: Double = 0.8): DataFrame =
-    charLshPairsWith(docs, n, threshold, Bands, RowsPerBand)
+  def charLshPairs(docs: DataFrame, n: Int = 5, threshold: Double = 0.8,
+                   rowsPerBand: Int = RowsPerBand): DataFrame = {
+    // one char-gram pass: the gram exchange feeds both sides of the band
+    // self-join. The signature rides along with each band key (16
+    // longs/row), so the self-join yields BOTH signatures directly — no
+    // signature re-joins, and the estimate filter runs BEFORE the pair
+    // distinct, shrinking that shuffle from every band collision
+    // (millions on dense corpora) to just the passing pairs. There is no
+    // exact verify here, so the empty-set guard inside [[bandKey]] is
+    // what keeps two empty docs from pairing at est_sim 1.0.
+    val bands = banded(gramEntry(charShingled(docs, n), col("shingles")),
+      rowsPerBand = rowsPerBand).select(col("doc_id"), col("sig"), col("bk"))
+    bandCollisions(bands, "sig")
+      .select(col("a"), col("b"), sigEstimate(col("sig_a"), col("sig_b")).as("est_sim"))
+      .filter(col("est_sim") >= threshold)
+      .distinct()
+  }
 
   /** Corpus-size bound past which [[charLshPairsAuto]] doubles the band
     * width: the fixed 4×4 split is measured comfortable through ~65k
@@ -997,9 +978,8 @@ object Dedup {
                        threshold: Double = 0.8,
                        maxRowsPerBand: Int = NumHashes): DataFrame = {
     val (est, fromStats) = Similarity.corpusRows(docs)
-    val rp = cappedRowsPerBand(
-      gateRows(est, fromStats, docs.count()), maxRowsPerBand)
-    charLshPairsWith(docs, n, threshold, NumHashes / rp, rp)
+    charLshPairs(docs, n, threshold,
+      cappedRowsPerBand(gateRows(est, fromStats, docs.count()), maxRowsPerBand))
   }
 
   /** The [[charLshPairsAuto]] boundary rule, factored for its spec: a
@@ -1010,42 +990,6 @@ object Dedup {
   private[graft] def gateRows(est: Long, fromStats: Boolean,
                               exact: => Long): Long =
     if (fromStats && est > RebandAt / 4 && est <= RebandAt * 4) exact else est
-
-  private[graft] def charLshPairsWith(docs: DataFrame, n: Int, threshold: Double,
-                                      nBands: Int, rowsPerBand: Int): DataFrame = {
-    // the signature rides along with each band key (16 longs/row), so the
-    // band self-join yields BOTH signatures directly — no signature
-    // re-joins, and the estimate filter runs BEFORE the pair distinct,
-    // shrinking that shuffle from every band collision (millions on dense
-    // corpora) to just the passing pairs
-    // docs with EMPTY shingle sets must not band: their signatures are all
-    // P-sentinels, so two empty docs would share every band key and emit a
-    // bogus est_sim=1.0 pair (there is no exact-verify stage here to catch
-    // it — the word-LSH path survives the same collision because its
-    // jaccard verify returns 0.0 for empty sets). The guard lives INSIDE
-    // the generator expression (null array → one null band key → dropped
-    // by the equi-join), NOT as a Filter node: predicate pushdown
-    // substitutes a filter's column references through every projection
-    // unconditionally, which would re-inline the whole shingling pipeline
-    // below the scan fan-out (measured 13× on this query).
-    val bands = signaturesOverHashes(charShingled(docs, n))
-      .select(col("doc_id"), col("sig"),
-        explode_outer(when(size(col("shingles")) > 0,
-          bandKeysWith(col("sig"), nBands, rowsPerBand)))
-          .as("bk"))
-    val matches = aggregate(
-      zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, m) => acc + m)
-    bands.as("x").join(bands.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
-      .select(col("a"), col("b"),
-        round(matches.cast("double") / NumHashes, 4).as("est_sim"))
-      .filter(col("est_sim") >= threshold)
-      .distinct()
-  }
 
   /** CONTAINMENT pairs — the DIRECTED set-overlap measure jaccard can't
     * express: `C(A→B) = |A∩B| / |A|` ≥ t finds documents mostly
@@ -1088,48 +1032,17 @@ object Dedup {
   private[graft] def containmentPairsSliced(
       docs: DataFrame, n: Int, threshold: Double,
       containerSlice: Option[(Int, Int)]): DataFrame = {
-    // repartition at operator entry: five consumers (df model, probe
-    // ranking, both verify posting sides) read ONE ReusedExchange of the
-    // shingled grams instead of re-tokenizing the corpus five times —
-    // the same single-evaluation discipline as embeddingNearDupPairs
-    // (measured ~2× on the sf1 probe); the (doc_id) partitioning also
-    // feeds the ranking windows directly. Round-16 fixes, both measured
-    // on the executed plan:
-    //  - explicit isnotnull(doc_id) BELOW the exchange: the probe/verify
-    //    consumers infer it from their join constraints, the df-model
-    //    consumer does not — the asymmetry made the subtrees
-    //    non-canonical and the corpus was shingled TWICE (doc_id is a
-    //    non-null key, so the df model is value-unchanged);
-    //  - the two-step token materialization shinglesFromTokens'
-    //    scaladoc prescribes: the inline form re-ran tokenization per
-    //    shingle inside the transform lambda.
-    // OPERATOR CONTRACT (ADVICE r16): doc_id is a non-null key — the
-    // corpus schema's primary key, asserted nowhere weaker than here.
-    // The filter is a value-no-op under that contract (it exists only
-    // to keep the five consumer subtrees canonical for exchange reuse);
-    // if a caller ever fed null doc_ids, those rows would previously
-    // have flowed into the df model via explode_outer and now would
-    // not — the oracle-checked corpus has none.
-    val grams = docs
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), tokens(normalizeText(col("text"))).as("tk"))
-      .select(col("doc_id"),
-        explode_outer(shinglesFromTokens(col("tk"), n)).as("g"))
-      .repartition(col("doc_id"))
+    // five consumers (df model, probe ranking, both verify posting
+    // sides) read ONE exchange of the exploded grams ([[gramEntry]]);
+    // the (doc_id) partitioning also feeds the ranking windows directly
+    // (measured ~2× on the sf1 probe against re-tokenizing per consumer)
+    val grams = gramEntry(shingled(docs, n), explode_outer(col("shingles")).as("g"))
     val gramsB = containerSlice.fold(grams) { case (s, of) =>
       grams.filter(pmod(col("doc_id"), lit(of)) === s)
     }
     val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    // ceil(threshold·sz) in INTEGER arithmetic ([[ceilRational]]):
-    // threshold as the rational num/10⁶. A float ceil(0.9·sz) can round
-    // UP at exactly-integer products (0.9·10 → 9.0000000000002 → ceil
-    // 10), shrinking the pigeonhole slack m below the guarantee and
-    // dropping a true pair the exact verify would keep.
-    val den = 1000000L
-    val num = math.round(threshold * den)
-    val m = col("sz") - ceilRational(num, col("sz"), den)
-    val probeLen = least(col("sz"), lit(2) * m + 1)
+    val (m, probeLen) = pigeonhole(col("sz"), threshold)
     val ranked = grams.join(df, "g")
       .withColumn("rn", row_number().over(w.orderBy(col("df"), col("g"))))
       .withColumn("sz", count(lit(1)).over(w))
@@ -1188,7 +1101,7 @@ object Dedup {
     */
   def containmentReport(docs: DataFrame, n: Int = 3,
                         threshold: Double = 0.9): DataFrame =
-    containmentReportOver(docs, n)(containmentPairs(_, n, threshold))
+    containmentReportSliced(docs, n, threshold, 1)
 
   /** [[containmentReport]] with the build AUTO-SLICED past the corpus
     * bound ([[RebandAt]] — the same 65k knee every other size dispatch
@@ -1202,10 +1115,14 @@ object Dedup {
     * never the rows the oracle hashes — no exact-count fallback needed.
     */
   def containmentReportAuto(docs: DataFrame, n: Int = 3,
-                            threshold: Double = 0.9): DataFrame = {
-    val slices = if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
-    containmentReportSliced(docs, n, threshold, slices)
-  }
+                            threshold: Double = 0.9): DataFrame =
+    containmentReportSliced(docs, n, threshold, autoSlices(docs))
+
+  /** Build slices of the exact ops' AUTO forms: one plan up to
+    * [[RebandAt]] rows, 8 sequential container slices past it.
+    */
+  private def autoSlices(docs: DataFrame): Int =
+    if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
 
   /** The AT-SCALE twin of [[containmentReport]]: same bounded output and
     * counting-algebra expansion, but the rep-level pair relation is
@@ -1232,36 +1149,24 @@ object Dedup {
     */
   def containmentReportLsh(docs: DataFrame, n: Int = 3,
                            threshold: Double = 0.9): DataFrame =
-    containmentReportOver(docs, n)(containmentPairsLsh(_, n, threshold))
+    containmentReportOver(docs, n, 1)((reps, _) => containmentPairsLsh(reps, n, threshold))
 
   /** The collapse + counting-algebra expansion shared by
-    * [[containmentReport]] and [[containmentReportLsh]]: `pairsOf`
-    * produces the DIRECTED (a, b, containment) relation over the
-    * collapsed representatives; the expansion to members is exact for
-    * any relation that is a pure function of the normalized text on
-    * both sides and contains every identical-text pair at 1.0 (see
-    * [[containmentReport]]'s algebra notes).
+    * [[containmentReport]] and [[containmentReportLsh]]: `pairsOf(reps,
+    * slice)` produces the DIRECTED (a, b, containment) relation over the
+    * collapsed representatives, restricted to container slice `slice`
+    * when one is given; the expansion to members is exact for any
+    * relation that is a pure function of the normalized text on both
+    * sides and contains every identical-text pair at 1.0 (see
+    * [[containmentReport]]'s algebra notes). Each representative's ext
+    * aggregate (`ext_cnt` = containing DOCS, i.e. family sizes summed;
+    * `best` = min (−containment, container-rep) struct) is decomposable,
+    * so with `slices` > 1 it is computed per container slice in
+    * sequential staged jobs ([[stagedUnion]]) and merged: one box never
+    * holds the whole candidate shuffle at once.
     */
-  private def containmentReportOver(docs: DataFrame, n: Int)
-                                   (pairsOf: DataFrame => DataFrame): DataFrame =
-    containmentReportExt(docs, n) { (reps, famKb) =>
-      pairsOf(reps)
-        .join(famKb, Seq("b"))
-        .groupBy(col("a"))
-        .agg(sum(col("kb")).as("ext_cnt"),
-          min(struct((-col("containment")).as("nc"), col("b").as("bid"))).as("best"))
-    }
-
-  /** The collapse + expansion with the EXT aggregation pluggable:
-    * `extOf(reps, famKb)` must return one row per contained
-    * representative `a` with `ext_cnt` (containing DOCS, i.e. family
-    * sizes summed) and `best` (min (−containment, container-rep) struct)
-    * — [[containmentReportIndexState]] computes it as a union of
-    * sequential container-slice jobs so one box never holds the whole
-    * candidate shuffle at once.
-    */
-  private def containmentReportExt(docs: DataFrame, n: Int)
-      (extOf: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  private def containmentReportOver(docs: DataFrame, n: Int, slices: Int)
+      (pairsOf: (DataFrame, Option[(Int, Int)]) => DataFrame): DataFrame = {
     val norm = docs.select(col("doc_id"), normalizeText(col("text")).as("text"))
     val (reps0, members0) = collapseByValue(norm)
     // Fan the checkpointed collapse out before handing it to the pair
@@ -1285,7 +1190,18 @@ object Dedup {
     val famInfo = fam
       .join(reps.select(col("doc_id").as("rep"),
         (size(tokens(col("text"))) >= n).as("has_grams")), Seq("rep"))
-    val ext = extOf(reps, fam.select(col("rep").as("b"), col("k").as("kb")))
+    val famKb = fam.select(col("rep").as("b"), col("k").as("kb"))
+    def extOf(pairs: DataFrame, fk: DataFrame): DataFrame = pairs
+      .join(fk, Seq("b"))
+      .groupBy(col("a"))
+      .agg(sum(col("kb")).as("ext_cnt"),
+        min(struct((-col("containment")).as("nc"), col("b").as("bid"))).as("best"))
+    val ext = if (slices <= 1) extOf(pairsOf(reps, None), famKb) else {
+      val famB = famKb.localCheckpoint(true) // one agg, `slices` consumers
+      stagedUnion(docs.sparkSession, "cnt_ext", slices) { s =>
+        extOf(pairsOf(reps, Some((s, slices))), famB)
+      }.groupBy(col("a")).agg(sum(col("ext_cnt")).as("ext_cnt"), min(col("best")).as("best"))
+    }
     val rows = members
       .join(famInfo, Seq("rep"))
       .join(ext.select(col("a").as("rep"), col("ext_cnt"), col("best")),
@@ -1326,15 +1242,6 @@ object Dedup {
     */
   val MaxStratumDistance = 3
 
-  /** Gram-set size stratum: position of the highest set bit of `sz`
-    * (⌊log2 sz⌋ for sz ≥ 1) — computed on the BINARY STRING so the
-    * DuckDB oracle mirrors it with identical integer semantics
-    * (`length(bin(sz)) − 1` in both engines; a float log2 could round a
-    * power-of-two boundary differently across libms).
-    */
-  private def sizeStratum(sz: Column): Column =
-    (length(bin(sz.cast("long"))) - 1).cast("int")
-
   /** DIRECTED containment pairs gated by BANDED MINHASH instead of the
     * pigeonhole prefix filter — the at-scale candidate gate
     * ([[fuzzyDecontaminate]]'s shape) with [[containmentPairs]]' exact
@@ -1373,10 +1280,9 @@ object Dedup {
     */
   def containmentPairsLsh(docs: DataFrame, n: Int = 3,
                           threshold: Double = 0.9,
-                          maxStratumDistance: Int = MaxStratumDistance): DataFrame = {
-    val cand = containmentLshCandidates(docs, n, maxStratumDistance)
-    containmentVerify(docs, n, threshold, cand)
-  }
+                          maxStratumDistance: Int = MaxStratumDistance): DataFrame =
+    bothDirections(countIntersections(containmentLshCandidates(docs, n, maxStratumDistance),
+      gramEntry(shingled(docs, n), col("shingles"))), threshold)
 
   /** The CANDIDATE GATE of [[containmentPairsLsh]] — factored
     * `private[graft]` so the recall spec can measure the asymmetric
@@ -1389,39 +1295,27 @@ object Dedup {
       maxStratumDistance: Int = MaxStratumDistance): DataFrame = {
     // signature + gram-set size computed once; one exchange feeds the
     // symmetric self-join's two sides and the asymmetric tier's probe
-    // and container sides (ReusedExchange). The empty-doc guard lives
-    // INSIDE each generator expression (null key → dropped by the
-    // equi-joins), NEVER as a Filter node: predicate pushdown would
-    // substitute the whole shingling pipeline into the scan's data
-    // filter and re-evaluate it per branch — the measured-13× trap
-    // [[charLshPairsWith]] documents (re-measured here in round 16:
-    // a `.filter(sz > 0)` on this relation put tokenize+shingle+distinct
-    // into BOTH sym-side FileScans and quadrupled the registered
-    // report's sf0.1 time).
-    val sigd = docs
-      .withColumn("__tk", tokens(normalizeText(col("text"))))
-      .withColumn("__sh", shinglesFromTokens(col("__tk"), n))
-      .withColumn("__hs", transform(col("__sh"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .withColumn("sig", graft.functions.MinHashSlots.column(
-        col("__hs"), minhashAs, minhashBs, DetHash.P))
-      .withColumn("sz", size(col("__sh")))
-      .select(col("doc_id"), col("sig"), col("sz"))
+    // and container sides (ReusedExchange). The empty-doc guard is the
+    // one inside [[bandKey]] (a `.filter(sz > 0)` here put
+    // tokenize+shingle+distinct into BOTH sym-side FileScans and
+    // quadrupled the registered report's sf0.1 time in round 16).
+    val sigd = withSignature(shingled(docs, n))
+      .select(col("doc_id"), col("sig"), size(col("shingles")).as("sz"))
       .repartition(col("doc_id"))
-    val banded = sigd.select(col("doc_id"),
-      explode_outer(when(col("sz") > 0, bandKeys(col("sig")))).as("bk"))
-    val symCand = banded.as("x").join(banded.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+    val symCand = bandCollisions(
+      sigd.select(col("doc_id"), bandKey(col("sig"), col("sz")).as("bk")))
     (if (maxStratumDistance <= 0) symCand else {
       val asymBanded = sigd.select(col("doc_id"), col("sig"), col("sz"),
-        explode_outer(when(col("sz") > 0,
-          bandKeysWith(col("sig"), AsymBands, AsymRowsPerBand))).as("abk"),
-        sizeStratum(col("sz")).as("st"))
+        bandKey(col("sig"), col("sz"), AsymRowsPerBand).as("abk"),
+        // gram-set size stratum: the highest set bit of sz (⌊log2 sz⌋),
+        // on the BINARY STRING so the DuckDB oracle mirrors it with
+        // identical integer semantics (a float log2 could round a
+        // power-of-two boundary differently across libms)
+        (length(bin(col("sz").cast("long"))) - 1).cast("int").as("st"))
       // concat (not concat_ws): a null band key — the empty-doc guard —
       // must propagate to a null join key, never degrade to a bare
       // stratum string. Signature and gram count RIDE each band row
-      // (the [[charLshPairsWith]] discipline), so the estimate gate
+      // (the [[charLshPairs]] discipline), so the estimate gate
       // below runs on the join's output stream BEFORE any pair row is
       // shuffled — the narrow 2-row buckets' noise collisions cost 16
       // slot comparisons each, never a distinct-exchange row or a
@@ -1447,8 +1341,7 @@ object Dedup {
       // ratios ≤ 3 (binomial over 16 slots), while background pairs
       // (j ≈ 0.05) are cut ~99% at adjacent strata — the measured curve
       // in ContainmentLshRecallSpec carries the net effect.
-      val m = aggregate(zip_with(col("siga"), col("sigb"),
-        (x, y) => when(x === y, 1L).otherwise(0L)), lit(0L), (a, b) => a + b)
+      val m = slotMatches(col("siga"), col("sigb"))
       // strata differ ⇒ ca ≠ cb; normalized unordered so the one verify
       // and the distinct-union with the symmetric tier stay unchanged
       val asymCand = probes.join(containers, Seq("k"))
@@ -1461,34 +1354,42 @@ object Dedup {
     }).distinct()
   }
 
-  /** The exact count-based containment verify over an unordered
-    * candidate relation — [[containmentPairsLsh]]'s second half, kept
-    * separate from the gate so both are testable on their own.
+  /** STAGE 3: |A∩B| for every candidate (a, b) by posting expansion over
+    * `gs`, a [[gramEntry]] (doc_id, shingles) relation: each candidate is
+    * expanded by a's postings and matched against b's on (b, gram), the
+    * group-count is |A∩B| (gram sets are distinct by construction).
+    * Output (a, b, sza, szb, inter). Nothing wider than (doc id, doc id,
+    * one gram) shuffles — no gram ARRAYS move through a join (the
+    * array_intersect verify this replaced shipped two per candidate,
+    * unbounded row width on long docs). The sizes and `a`-postings
+    * consumers ride the gram exchange's (doc_id) distribution. A
+    * zero-overlap or empty-set candidate matches no posting and drops
+    * out — for any threshold > 0 its exact score is 0 anyway.
     */
-  private def containmentVerify(docs: DataFrame, n: Int, threshold: Double,
-                                cand: DataFrame): DataFrame = {
-    // one ReusedExchange feeds the three gram consumers (sizes + both
-    // posting sides) — the containmentPairs single-evaluation discipline
-    val grams = shingled(docs, n).repartition(col("doc_id"))
-    val sizes = grams.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val pa = grams.select(col("doc_id").as("a"),
-      explode_outer(col("shingles")).as("g"))
-    val pb = grams.select(col("doc_id").as("b"),
-      explode_outer(col("shingles")).as("g"))
-    val inter = cand
+  private def countIntersections(cand: DataFrame, gs: DataFrame): DataFrame = {
+    val sizes = gs.select(col("doc_id"), size(col("shingles")).as("sz"))
+    def posting(id: String) =
+      gs.select(col("doc_id").as(id), explode_outer(col("shingles")).as("g"))
+    cand
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
       .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-      .join(pa, "a").join(pb, Seq("b", "g"))
+      .join(posting("a"), "a").join(posting("b"), Seq("b", "g"))
       .groupBy(col("a"), col("b"), col("sza"), col("szb"))
       .agg(count(lit(1)).as("inter"))
-    // both directions emit from ONE pass over the intersection counts —
-    // a generator expression, not a union of two copies of the verify
-    val ca = col("inter").cast("double") / col("sza").cast("double")
-    val cb = col("inter").cast("double") / col("szb").cast("double")
+  }
+
+  /** STAGE 3: both containment directions from ONE intersection count
+    * per unordered pair — a generator expression over (a, b, sza, szb,
+    * inter), not a union of two copies of the verify. Output (a, b,
+    * containment): a is contained in b at `inter / sza` ≥ threshold,
+    * rounded to 4 places.
+    */
+  private def bothDirections(inter: DataFrame, threshold: Double): DataFrame = {
+    def c(sz: String) = col("inter").cast("double") / col(sz).cast("double")
     inter
       .select(explode(filter(array(
-        struct(col("a").as("x"), col("b").as("y"), ca.as("c")),
-        struct(col("b").as("x"), col("a").as("y"), cb.as("c"))),
+        struct(col("a").as("x"), col("b").as("y"), c("sza").as("c")),
+        struct(col("b").as("x"), col("a").as("y"), c("szb").as("c"))),
         s => s.getField("c") >= threshold)).as("p"))
       .select(col("p.x").as("a"), col("p.y").as("b"),
         round(col("p.c"), 4).as("containment"))
@@ -1508,21 +1409,22 @@ object Dedup {
     * exactly as the oracle's closure leaves them.
     */
   def charJaccardClusters(docs: DataFrame, n: Int = 7,
-                          threshold: Double = 0.9): DataFrame = {
-    val norm = docs.select(col("doc_id"), normalizeText(col("text")).as("text"))
-    val (reps, members) = collapseByValue(norm.filter(length(col("text")) >= n))
+                          threshold: Double = 0.9): DataFrame =
     // edges via the AUTO-SLICED pair form: one plan at oracle scales
     // (≤ RebandAt unique texts — identical relation), staged disjoint
     // build-side slices past it, so the edge relation's candidate
     // shuffle divides exactly like the pair op's. The closure runs over
     // the (value-identical) union, so labels are unchanged at any slice
     // count — the same argument as containmentReportAuto's.
-    val repPairs = charJaccardPairsAuto(reps, n, threshold).select(col("a"), col("b"))
-    val memberEdges = members.filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("doc_id").as("b"))
-    componentLabels(docs.select(col("doc_id")),
-      repPairs.union(memberEdges), "charjac_cc")._1
-  }
+    collapsedClusters(docs.select(col("doc_id")), normalizedWithGrams(docs, n),
+      "charjac_cc")(charJaccardPairsAuto(_, n, threshold))
+
+  /** (doc_id, normalized text) of the docs with at least one char
+    * n-gram — the collapse input of the char cluster ops.
+    */
+  private def normalizedWithGrams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), normalizeText(col("text")).as("text"))
+      .filter(length(col("text")) >= n)
 
   /** The AT-SCALE twin of [[charJaccardClusters]]: cluster labels whose
     * edges come from the BANDED char-LSH gate ([[charLshPairsAuto]] —
@@ -1551,15 +1453,9 @@ object Dedup {
     * as the gated relation leaves them.
     */
   def charLshClusters(docs: DataFrame, n: Int = 7,
-                      threshold: Double = 0.9): DataFrame = {
-    val norm = docs.select(col("doc_id"), normalizeText(col("text")).as("text"))
-    val (reps, members) = collapseByValue(norm.filter(length(col("text")) >= n))
-    val repPairs = charLshPairsAuto(reps, n, threshold).select(col("a"), col("b"))
-    val memberEdges = members.filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("doc_id").as("b"))
-    componentLabels(docs.select(col("doc_id")),
-      repPairs.union(memberEdges), "charlsh_cc")._1
-  }
+                      threshold: Double = 0.9): DataFrame =
+    collapsedClusters(docs.select(col("doc_id")), normalizedWithGrams(docs, n),
+      "charlsh_cc")(charLshPairsAuto(_, n, threshold))
 
   /** EDIT-DISTANCE near-dup pairs: the char-LSH candidate chain
     * ([[charLshPairs]] — banded signatures + estimate gate) verified by
@@ -1648,56 +1544,14 @@ object Dedup {
       graft.functions.CharGramHashes.column(
         normalizeText(col("text")), n).as("shingles"))
 
-  /** [[signaturesOver]] for ALREADY-HASHED shingles (array<long> gram keys):
-    * the minhash base hash is the key mod P — no md5 in the loop at all.
-    */
-  private def signaturesOverHashes(sh: DataFrame): DataFrame =
-    sh
-      .withColumn("hs", transform(col("shingles"), h => pmod(h, lit(DetHash.P))))
-      .select(col("doc_id"), col("shingles"),
-        graft.functions.MinHashSlots.column(
-          col("hs"), minhashAs, minhashBs, DetHash.P).as("sig"))
-
   private def lshPairsOver(sh: DataFrame, threshold: Double): DataFrame = {
-    // ONE shingle pass (round 17, same discipline as [[jaccardPairsOver]]):
-    // the (doc_id, shingles) frame is repartitioned by doc_id so its four
-    // consumers — the banded-signature subtree, the per-doc sizes, and
-    // both posting sides of the count-based verify — read one
-    // ReusedExchange of the shingle arrays instead of re-tokenizing the
-    // corpus per consumer (4 evaluations in the r16 plan). isnotnull
-    // below the exchange keeps the subtrees canonical (non-null key);
-    // the sizes/pa consumers then ride the (doc_id) distribution into
-    // their joins with no further exchange.
-    val shP = sh.filter(col("doc_id").isNotNull).repartition(col("doc_id"))
-    // explode_outer for the same InferFiltersFromGenerate reason as in
-    // jaccardPairs — band-key arrays are always exactly Bands elements
-    val bands = signaturesOver(shP)
-      .select(col("doc_id"), explode_outer(bandKeys(col("sig"))).as("bk"))
-    val cand = bands.as("x").join(bands.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    // COUNT-BASED exact verify, same discipline as [[jaccardPairsOver]]:
-    // expand each candidate by a's posting list, match b's postings on
-    // (b, gram), group-count = |A∩B| (shingle sets are distinct by
-    // construction); |A∪B| from the per-doc sizes. Nothing wider than
-    // (doc id, doc id, one gram) shuffles — candidate pairs never pull
-    // full shingle ARRAYS through a join (the array_intersect verify this
-    // replaces shipped two gram arrays per candidate, unbounded row
-    // width on long docs). Zero-overlap or empty-set candidates simply
-    // produce no posting matches — identical output for any threshold>0
-    // (their exact jaccard is 0).
-    val sizes = shP.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val pa = shP.select(col("doc_id").as("a"),
-      explode_outer(col("shingles")).as("g"))
-    val pb = shP.select(col("doc_id").as("b"),
-      explode_outer(col("shingles")).as("g"))
-    cand
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-      .join(pa, "a").join(pb, Seq("b", "g"))
-      .groupBy(col("a"), col("b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
+    // ONE shingle pass (round 17): the banded-signature subtree and the
+    // count-based verify read one [[gramEntry]] exchange instead of
+    // re-tokenizing the corpus per consumer (4 evaluations in the r16
+    // plan)
+    val shP = gramEntry(sh, col("shingles"))
+    val cand = bandCollisions(banded(shP).select(col("doc_id"), col("bk"))).distinct()
+    countIntersections(cand, shP)
       .withColumn("jac", col("inter").cast("double")
         / (col("sza") + col("szb") - col("inter")).cast("double"))
       .filter(col("jac") >= threshold) // unrounded, see jaccardPairsOver
@@ -1746,10 +1600,8 @@ object Dedup {
     * per slice — the same trade [[containmentReportSliced]] accepted.
     */
   def charJaccardPairsAuto(docs: DataFrame, n: Int = 5,
-                           threshold: Double = 0.8): DataFrame = {
-    val slices = if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
-    charJaccardPairsStaged(docs, n, threshold, slices)
-  }
+                           threshold: Double = 0.8): DataFrame =
+    charJaccardPairsStaged(docs, n, threshold, autoSlices(docs))
 
   /** [[charJaccardPairs]] as `slices` sequential staged jobs (see
     * [[charJaccardPairsAuto]] for why the union is value-identical and
@@ -1994,26 +1846,16 @@ object Dedup {
     */
   private def jaccardPairsOver(sh: DataFrame, threshold: Double,
                                buildSlice: Option[(Int, Int)] = None): DataFrame = {
-    // ONE gram pass (round 17, the containmentPairsSliced discipline):
-    // the exploded gram relation is repartitioned by doc_id at operator
-    // entry so its four consumers — the df model, the ranked prefix, the
-    // verify's bitmap-or-array build, and the bitmap dictionary — read a
-    // single ReusedExchange instead of re-running normalize + gram-hash
-    // per consumer (the r16 executed plan carried FOUR char_gram_hashes
-    // sites: two separate scans split by column-pruning asymmetry plus
-    // two recomputations above the fan-out exchanges — ~13 s of the
-    // ~16 s executor CPU on dedup_char_jaccard_pairs at sf0.1 was that
-    // redundancy). The explicit isnotnull(doc_id) below the exchange
-    // keeps every consumer subtree canonical (doc_id is a non-null key;
-    // join-inferred constraints would otherwise split the exchange —
-    // the r16 containment trap). Null grams from empty-shingle docs
-    // (explode_outer) still flow to the df model exactly as before; the
-    // (doc_id, g) rows are 16 bytes, so the exchange ships the posting
-    // relation once — the same rows the candidate join already shuffles.
-    val grams = sh
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), explode_outer(col("shingles")).as("g"))
-      .repartition(col("doc_id"))
+    // ONE gram pass (round 17, [[gramEntry]]): the df model, the ranked
+    // prefix, the verify's bitmap-or-array build and the bitmap
+    // dictionary read a single exchange instead of re-running normalize
+    // + gram-hash per consumer (the r16 executed plan carried FOUR
+    // char_gram_hashes sites — ~13 s of the ~16 s executor CPU on
+    // dedup_char_jaccard_pairs at sf0.1). Null grams from empty-shingle
+    // docs (explode_outer) still flow to the df model; the (doc_id, g)
+    // rows are 16 bytes, so the exchange ships the posting relation
+    // once — the same rows the candidate join already shuffles.
+    val grams = gramEntry(sh, explode_outer(col("shingles")).as("g"))
     val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
     // Per-doc (df, gram)-order RANK + set size as two windows over ONE
     // (doc_id) exchange — NO per-document arrays anywhere. The previous
@@ -2215,7 +2057,8 @@ object Dedup {
     * Bounds, stated plainly: the driver loop is O(log diameter)
     * SEQUENTIAL jobs — each round blocks on its checkpoint action before
     * the next can plan (the [[chainedDocs]] fixture exercises the
-    * adversarial long-chain case; `dedup_clusters_chain` measures it).
+    * adversarial long-chain case; `dedup_clusters_chain` is [[clusters]]
+    * over it).
     * With `checkpointDir` set, the round output is persisted before
     * `checkpoint(true)` so the eager action and the reliable write job
     * share ONE plan execution — without the cache the plan runs twice and
@@ -2252,37 +2095,8 @@ object Dedup {
           j => concat(lit("tok"), j))))
         .otherwise(col("text")))
 
-  /** [[clusters]] with POINTER JUMPING — the O(log diameter) round bound
-    * the plain loop's scaladoc prescribes for adversarial long-chain
-    * components. Each round every node takes
-    * `min(L(v), L(L(v)), min over neighbours' L(u))`: the `L(L(v))`
-    * term (a self-join of the label table on `cluster_id = doc_id`,
-    * well-defined because labels only ever take existing doc_id values)
-    * halves every label-pointer chain per round, so a diameter-d path
-    * converges in O(log d) rounds instead of O(d) — on the
-    * [[chainedDocs]] fixture at 5 000 docs that is ~12 sequential jobs
-    * instead of ~600. Same fixpoint as [[clusters]] (the jump term
-    * only shortcuts toward an already-reachable label, never off the
-    * component), same min-label output, same recursive-CTE oracle.
-    * Round 16: the jump term costs a union branch instead of a join
-    * ([[componentLabels]]), so [[clusters]] now uses the same loop and
-    * this alias remains for the chain-fixture query and its rounds spec.
-    * Convergence rides the checkpoint job as an `observe()` metric
-    * (cached before reliable checkpoint so the metric accumulates once).
-    */
-  def clustersPointerJump(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
-                          checkpointDir: Option[String] = None): DataFrame =
-    clustersPointerJumpWithRounds(docs, n, threshold, checkpointDir)._1
-
-  private[graft] def clustersPointerJumpWithRounds(
-      docs: DataFrame, n: Int, threshold: Double,
-      checkpointDir: Option[String] = None): (DataFrame, Int) =
-    componentLabels(docs.select(col("doc_id")),
-      minhashLshPairs(docs, n, threshold).select(col("a"), col("b")),
-      "clusters_pj", checkpointDir)
-
   /** The pointer-jumping connected-components loop over an ARBITRARY
-    * verified edge set — factored out of [[clustersPointerJump]] so any
+    * verified edge set, so any
     * pair-emitting dedup chain ([[semanticPairs]], [[editDistancePairs]],
     * ...) can emit BOUNDED per-doc cluster labels instead of its
     * quadratically-growing pair list. `nodes` is one `doc_id` per
@@ -2293,7 +2107,10 @@ object Dedup {
     * dropped by a labels join — every current caller passes edges over
     * its own node set; keep it that way).
     * Output: (doc_id, cluster_id = min doc_id of the component), the
-    * same fixpoint/oracle contract as [[clusters]].
+    * same fixpoint/oracle contract as [[clusters]], and the number of
+    * rounds the loop ran — a diameter-d path converges in O(log d)
+    * rounds (~12 sequential jobs on the [[chainedDocs]] fixture at
+    * 5 000 docs, where plain propagation would need ~600).
     */
   private[graft] def componentLabels(
       nodes: DataFrame, edges0: DataFrame, metricPrefix: String,
@@ -2465,24 +2282,6 @@ object Dedup {
   // Embedding-cosine near-dup
   // -------------------------------------------------------------------
 
-  /** Near-dup embedding pairs by exact cosine >= threshold; candidates
-    * from BANDED sign-random-projection, minhash-band style: `bands`
-    * INDEPENDENT sets of `planesPerBand` hyperplanes, one bucket per band
-    * per vector, and any shared band bucket makes a candidate (union
-    * across bands, deduped, then exact-cosine verified).
-    *
-    * Scale shape: a single coarse bucketing (the naive formulation) is
-    * quadratic WITHIN each bucket — with p planes the expected bucket
-    * population is n/2^p, and p cannot grow without collapsing recall
-    * (every plane halves the collision probability of every pair). Banding
-    * decouples the two: planesPerBand=16 keeps each band's buckets tiny
-    * (population ∝ n/65536, so the per-band self-join stays near-linear at
-    * any corpus size), while recall is recovered by the union over bands —
-    * 1-(1-p_sim^16)^bands, tunable by adding bands, each of which is
-    * embarrassingly parallel. The verify stage re-joins embeddings by id:
-    * only (a, b) id pairs and (id, vector) rows shuffle, never vector
-    * pairs per band.
-    */
   /** SEMANTIC near-dup pairs from RAW TEXT — the end-to-end composition
     * of the engine's embedding and LSH halves with no given embedding
     * column: feature-hash counts per document
@@ -2546,13 +2345,8 @@ object Dedup {
     // NULL, so the pair graph leaves them isolated — merging them would
     // invent a component the oracle's closure doesn't have)
     val embC = emb.localCheckpoint(true)
-    val (reps, members) = collapseByValue(embC.filter(!zero))
-    val repPairs = embeddingNearDupPairs(reps, bands, planesPerBand,
-      dims, threshold).select(col("a"), col("b"))
-    val memberEdges = members.filter(col("vec_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("vec_id").as("b"))
-    componentLabels(embC.select(col("vec_id").as("doc_id")),
-      repPairs.union(memberEdges), "semantic_cc")._1
+    collapsedClusters(embC.select(col("vec_id").as("doc_id")), embC.filter(!zero),
+      "semantic_cc")(embeddingNearDupPairs(_, bands, planesPerBand, dims, threshold))
   }
 
   /** BOUNDED-OUTPUT form of [[editDistancePairs]]: per-doc cluster
@@ -2574,14 +2368,27 @@ object Dedup {
     * (id, 12-byte key) rows.
     */
   def editClusters(docs: DataFrame, n: Int = 5, threshold: Double = 0.8,
-                   maxEdits: Int = 2): DataFrame = {
-    val (reps, members) = collapseByValue(docs.select(col("doc_id"), col("text")))
-    val repPairs = editDistancePairs(reps, n, threshold, maxEdits)
-      .select(col("a"), col("b"))
-    val memberEdges = members.filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("doc_id").as("b"))
-    componentLabels(docs.select(col("doc_id")),
-      repPairs.union(memberEdges), "edit_cc")._1
+                   maxEdits: Int = 2): DataFrame =
+    collapsedClusters(docs.select(col("doc_id")), docs.select(col("doc_id"), col("text")),
+      "edit_cc")(editDistancePairs(_, n, threshold, maxEdits))
+
+  /** STAGE 4, the bounded-output emit of the cluster ops: collapse the
+    * 2-column (id, value) `rows` to one representative per distinct
+    * value ([[collapseByValue]]), run the pair chain `pairsOf` on the
+    * representatives only, add one (rep, member) edge per other member,
+    * and label the components over `nodes` ([[componentLabels]]). Exact
+    * whenever identical values always pair at the chain's threshold and
+    * a cross-group pair scores like its rep pair — each caller states
+    * why that holds for its relation.
+    */
+  private def collapsedClusters(nodes: DataFrame, rows: DataFrame, metric: String)
+                               (pairsOf: DataFrame => DataFrame): DataFrame = {
+    val (reps, members) = collapseByValue(rows)
+    val id = rows.columns.head
+    val memberEdges = members.filter(col(id) =!= col("rep"))
+      .select(col("rep").as("a"), col(id).as("b"))
+    componentLabels(nodes, pairsOf(reps).select(col("a"), col("b")).union(memberEdges),
+      metric)._1
   }
 
   /** Probe-then-spread for a CHECKPOINT-BACKED frame feeding a
@@ -2670,6 +2477,24 @@ object Dedup {
     (reps, members)
   }
 
+  /** Near-dup embedding pairs by exact cosine >= threshold; candidates
+    * from BANDED sign-random-projection, minhash-band style: `bands`
+    * INDEPENDENT sets of `planesPerBand` hyperplanes, one bucket per band
+    * per vector, and any shared band bucket makes a candidate (union
+    * across bands, deduped, then exact-cosine verified).
+    *
+    * Scale shape: a single coarse bucketing (the naive formulation) is
+    * quadratic WITHIN each bucket — with p planes the expected bucket
+    * population is n/2^p, and p cannot grow without collapsing recall
+    * (every plane halves the collision probability of every pair). Banding
+    * decouples the two: planesPerBand=16 keeps each band's buckets tiny
+    * (population ∝ n/65536, so the per-band self-join stays near-linear at
+    * any corpus size), while recall is recovered by the union over bands —
+    * 1-(1-p_sim^16)^bands, tunable by adding bands, each of which is
+    * embarrassingly parallel. The verify stage re-joins embeddings by id:
+    * only (a, b) id pairs and (id, vector) rows shuffle, never vector
+    * pairs per band.
+    */
   def embeddingNearDupPairs(emb: DataFrame, bands: Int = 16,
                             planesPerBand: Int = 16, dims: Int = 64,
                             threshold: Double = 0.35): DataFrame = {

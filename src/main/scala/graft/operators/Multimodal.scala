@@ -274,13 +274,8 @@ object Multimodal {
     * not encode+decode.
     */
   def imageAssetsTable(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.synchronized {
-      val tag = java.lang.Long.toHexString(DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_imgassets_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        imageAssets(graft.Tables.load(spark, dir, "documents"))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_imgassets_") {
+      imageAssets(graft.Tables.load(spark, dir, "documents"))
     }
 
   /** The REAL decode pass: `javax.imageio` reads the container format from
@@ -393,14 +388,9 @@ object Multimodal {
     * [[graft.streaming.Pipelines.streamingPerceptualDedup]].
     */
   def dhashIndexTable(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.synchronized {
-      val tag = java.lang.Long.toHexString(DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_dhashidx_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        imageDHash(imageAssetsTable(spark, dir)).toDF()
-          .select(col("dhash")).distinct()
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_dhashidx_") {
+      imageDHash(imageAssetsTable(spark, dir)).toDF()
+        .select(col("dhash")).distinct()
     }
 
   // ---------------------------------------------------- real audio codec
@@ -456,13 +446,8 @@ object Multimodal {
 
   /** The audio fixture PERSISTED per corpus directory (ensure-once). */
   def audioAssetsTable(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.synchronized {
-      val tag = java.lang.Long.toHexString(DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_audassets_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        audioAssets(graft.Tables.load(spark, dir, "documents"))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_audassets_") {
+      audioAssets(graft.Tables.load(spark, dir, "documents"))
     }
 
   /** REAL WAV decode: `AudioSystem` parses the RIFF header (sample rate,
@@ -622,13 +607,8 @@ object Multimodal {
 
   /** The video fixture PERSISTED per corpus directory (ensure-once). */
   def videoAssetsTable(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.synchronized {
-      val tag = java.lang.Long.toHexString(DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_vidassets_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        videoAssets(graft.Tables.load(spark, dir, "documents"))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_vidassets_") {
+      videoAssets(graft.Tables.load(spark, dir, "documents"))
     }
 
   /** Frame-sampled REAL decode: [[Avi.demux]] parses the RIFF structure

@@ -121,23 +121,13 @@ object Relational {
     * (session, dir): tables are written only if absent from the catalog.
     */
   def bucketedFactTables(spark: SparkSession, dir: String,
-                         buckets: Int = 8): (DataFrame, DataFrame) =
-    Relational.synchronized {
-      // deterministic per-dir tag keeps sf0.001/sf0.01/sf0.1 tables apart
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      def ensure(table: String, key: String): DataFrame = {
-        val name = s"graft_${table}_b$tag"
-        // per-session path + readability probe: see Tables.ensurePersisted
-        Tables.ensurePersisted(spark, name) { path =>
-          Tables.load(spark, dir, table).write
-            .bucketBy(buckets, key).sortBy(key)
-            .option("path", path)
-            .mode("overwrite").saveAsTable(name)
-        }
-      }
-      (ensure("lineitem", "l_orderkey"), ensure("orders", "o_orderkey"))
-    }
+                         buckets: Int = 8): (DataFrame, DataFrame) = {
+    // per-session path + readability probe: see Tables.persisted
+    def ensure(table: String, key: String): DataFrame =
+      Tables.persisted(spark, dir, s"graft_${table}_b",
+        _.bucketBy(buckets, key).sortBy(key))(Tables.load(spark, dir, table))
+    (ensure("lineitem", "l_orderkey"), ensure("orders", "o_orderkey"))
+  }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — the batch analog of a streaming
     * CTAS changelog, and the aggregate sibling of
@@ -161,34 +151,29 @@ object Relational {
     * 100 TB with daily batches this turns a full-corpus rollup into a
     * batch-sized job, exactly like a materialized view refresh.
     */
-  def revenueByStatusIncremental(spark: SparkSession, dir: String): DataFrame =
-    Relational.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_aggpart_rev_$tag"
-      val partials = Tables.ensurePersisted(spark, name) { path =>
-        Tables.load(spark, dir, "lineitem")
-          .join(Tables.load(spark, dir, "orders")
-            .filter(col("o_orderkey") % 10 < 8),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_orderstatus"))
-          .agg(sum(revenueTerm("l_extendedprice", "l_discount")).as("rev_part"),
-            count(lit(1)).as("cnt_part"))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
-      val batch = Tables.load(spark, dir, "lineitem")
+  def revenueByStatusIncremental(spark: SparkSession, dir: String): DataFrame = {
+    val partials = Tables.persisted(spark, dir, "graft_aggpart_rev_") {
+      Tables.load(spark, dir, "lineitem")
         .join(Tables.load(spark, dir, "orders")
-          .filter(col("o_orderkey") % 10 >= 8),
+          .filter(col("o_orderkey") % 10 < 8),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderstatus"))
         .agg(sum(revenueTerm("l_extendedprice", "l_discount")).as("rev_part"),
           count(lit(1)).as("cnt_part"))
-      partials.select(col("o_orderstatus"), col("rev_part"), col("cnt_part"))
-        .unionByName(batch)
-        .groupBy(col("o_orderstatus"))
-        .agg(sum(col("rev_part")).cast("double").as("revenue"),
-          sum(col("cnt_part")).as("line_cnt"))
     }
+    val batch = Tables.load(spark, dir, "lineitem")
+      .join(Tables.load(spark, dir, "orders")
+        .filter(col("o_orderkey") % 10 >= 8),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderstatus"))
+      .agg(sum(revenueTerm("l_extendedprice", "l_discount")).as("rev_part"),
+        count(lit(1)).as("cnt_part"))
+    partials.select(col("o_orderstatus"), col("rev_part"), col("cnt_part"))
+      .unionByName(batch)
+      .groupBy(col("o_orderstatus"))
+      .agg(sum(col("rev_part")).cast("double").as("revenue"),
+        sum(col("cnt_part")).as("line_cnt"))
+  }
 
   /** [[revenueByStatus]] over the bucketed tables: identical rows, but the
     * join consumes the tables' bucket distribution — the plan's ONLY hash
@@ -588,14 +573,8 @@ object Relational {
     * anomaly scorers without re-aggregating history.
     */
   def valueStatsTable(spark: SparkSession, dir: String): DataFrame =
-    Relational.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_valuestats_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        valueStats(quantizedValues(graft.Tables.load(spark, dir, "events")))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_valuestats_") {
+      valueStats(quantizedValues(graft.Tables.load(spark, dir, "events")))
     }
 
   /** The cross-multiplied kσ test over a quantized frame joined to a
@@ -684,25 +663,20 @@ object Relational {
     new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
 
   def segmentBloomTable(spark: SparkSession, dir: String,
-                        segment: String): (Int, DataFrame) =
-    Relational.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(s"$dir#$segment") & 0xffffffffL)
-      val name = s"graft_bloom_$tag"
-      val tbl = Tables.ensurePersisted(spark, name) { path =>
-        val cust = Tables.load(spark, dir, "customer")
-          .filter(col("c_mktsegment") === segment)
-          .select(col("c_custkey"))
-        val words = bloomWords(cust.count())
-        bloomBuild(cust, col("c_custkey"), words)
-          .select(lit(words).as("words"), col("bloom"))
-          .coalesce(1)
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
-      val words = bloomWidthMemo.computeIfAbsent((dir, segment),
-        _ => tbl.select(col("words")).first().getInt(0))
-      (words, tbl.select(col("bloom")))
+                        segment: String): (Int, DataFrame) = {
+    val tbl = Tables.persisted(spark, s"$dir#$segment", "graft_bloom_") {
+      val cust = Tables.load(spark, dir, "customer")
+        .filter(col("c_mktsegment") === segment)
+        .select(col("c_custkey"))
+      val words = bloomWords(cust.count())
+      bloomBuild(cust, col("c_custkey"), words)
+        .select(lit(words).as("words"), col("bloom"))
+        .coalesce(1)
     }
+    val words = bloomWidthMemo.computeIfAbsent((dir, segment),
+      _ => tbl.select(col("words")).first().getInt(0))
+    (words, tbl.select(col("bloom")))
+  }
 
   /** Fact-side Bloom pruning ahead of a selective join — runtime
     * row-level filtering made explicit. The segment-filtered customer
@@ -832,35 +806,26 @@ object Relational {
     * not doubles.
     */
   def cdcBucketedLayout(spark: SparkSession, dir: String,
-                        buckets: Int = 32): (DataFrame, DataFrame, DataFrame) =
-    Relational.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val snapName = s"graft_cdcsnap${buckets}_b$tag"
-      val snap = Tables.ensurePersisted(spark, snapName) { path =>
-        Tables.load(spark, dir, "orders")
-          .select(col("o_orderkey").as("key"),
-            col("o_orderstatus").as("status"),
-            col("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(buckets)).cast("int").as("bucket"))
-          .repartition(col("bucket")) // one file per bucket dir, not tasks×buckets
-          .write.partitionBy("bucket")
-          .option("path", path).mode("overwrite").saveAsTable(snapName)
-      }
-      val sumName = s"graft_cdcsum${buckets}_b$tag"
-      val sums = Tables.ensurePersisted(spark, sumName) { path =>
-        snap.groupBy(col("bucket"), col("status"))
-          .agg(count(lit(1)).as("n_orders"), sum(dec("price")).as("tp"))
-          .write.option("path", path).mode("overwrite").saveAsTable(sumName)
-      }
-      val chgName = s"graft_cdcchg${buckets}_b$tag"
-      val staged = Tables.ensurePersisted(spark, chgName) { path =>
-        cdcChangeset(Tables.load(spark, dir, "orders"))
-          .filter(pmod(col("key"), lit(buckets)) < 2)
-          .write.option("path", path).mode("overwrite").saveAsTable(chgName)
-      }
-      (snap, sums, staged)
+                        buckets: Int = 32): (DataFrame, DataFrame, DataFrame) = {
+    val snap = Tables.persisted(spark, dir, s"graft_cdcsnap${buckets}_b",
+        _.partitionBy("bucket")) {
+      Tables.load(spark, dir, "orders")
+        .select(col("o_orderkey").as("key"),
+          col("o_orderstatus").as("status"),
+          col("o_totalprice").as("price"),
+          pmod(col("o_orderkey"), lit(buckets)).cast("int").as("bucket"))
+        .repartition(col("bucket")) // one file per bucket dir, not tasks×buckets
     }
+    val sums = Tables.persisted(spark, dir, s"graft_cdcsum${buckets}_b") {
+      snap.groupBy(col("bucket"), col("status"))
+        .agg(count(lit(1)).as("n_orders"), sum(dec("price")).as("tp"))
+    }
+    val staged = Tables.persisted(spark, dir, s"graft_cdcchg${buckets}_b") {
+      cdcChangeset(Tables.load(spark, dir, "orders"))
+        .filter(pmod(col("key"), lit(buckets)) < 2)
+    }
+    (snap, sums, staged)
+  }
 
   /** BUCKET-PRUNED batch CDC merge — [[cdcMergeApply]]'s at-scale face:
     * the full-outer apply join there rewrites (and rescans) the WHOLE

@@ -291,23 +291,16 @@ object Similarity {
     */
   def partitionedAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                           planes: Int = 4, dims: Int = 64): DataFrame =
-    Similarity.synchronized {
-      val tag = java.lang.Long.toHexString(
-        DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_ann_p${planes}_$tag"
-      // ensurePersisted re-validates that the catalog entry's files are
-      // still readable (and uses a per-session path), so a cleaned tmpdir
-      // or a concurrent JVM can't serve an empty/foreign index
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        graft.Tables.load(spark, dir, "embeddings")
-          // int, not long: partition-column type inference reads the
-          // directory values back as int — keep write and probe aligned
-          .withColumn("bucket", srpBucket(col("embedding"), planes, dims).cast("int"))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    // Tables.persisted re-validates that the catalog entry's files are
+    // still readable (and uses a per-session path), so a cleaned tmpdir
+    // or a concurrent JVM can't serve an empty/foreign index
+    graft.Tables.persisted(spark, dir, s"graft_ann_p${planes}_",
+        _.partitionBy("bucket")) {
+      graft.Tables.load(spark, dir, "embeddings")
+        // int, not long: partition-column type inference reads the
+        // directory values back as int — keep write and probe aligned
+        .withColumn("bucket", srpBucket(col("embedding"), planes, dims).cast("int"))
+        .repartition(col("bucket"))
     }
 
   /** [[annTopK]] over the persisted index — identical rows, but the
@@ -472,20 +465,14 @@ object Similarity {
     */
   def ivfCentroidsTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                         numCentroids: Int = 16, iters: Int = 2): DataFrame =
-    Similarity.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_ivfcents_c${numCentroids}_k${iters}_$tag"
-      val cents = graft.Tables.ensurePersisted(spark, name) { path =>
-        ivfCentroids(graft.Tables.load(spark, dir, "embeddings"),
-          numCentroids, iters)
-          .select(explode(col("cents")).as("c"))
-          .select(col("c.c_id"), col("c.c_emb"))
-          .coalesce(1)
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
-      centsRow(cents)
-    }
+    centsRow(graft.Tables.persisted(spark, dir,
+        s"graft_ivfcents_c${numCentroids}_k${iters}_") {
+      ivfCentroids(graft.Tables.load(spark, dir, "embeddings"),
+        numCentroids, iters)
+        .select(explode(col("cents")).as("c"))
+        .select(col("c.c_id"), col("c.c_emb"))
+        .coalesce(1)
+    })
 
   /** [[ivfAssign]] against an ALREADY-TRAINED one-row centroid frame. */
   def ivfAssignWith(emb: DataFrame, cents: DataFrame): DataFrame =
@@ -509,20 +496,13 @@ object Similarity {
     */
   def partitionedIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                           numCentroids: Int = 16, iters: Int = 2): DataFrame =
-    Similarity.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_ivf_c${numCentroids}_k${iters}_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        ivfAssignWith(graft.Tables.load(spark, dir, "embeddings"),
-          ivfCentroidsTable(spark, dir, numCentroids, iters))
-          // int partition column: directory values read back as int
-          .withColumn("c_id", col("c_id").cast("int"))
-          .repartition(col("c_id"))
-          .write.partitionBy("c_id")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, s"graft_ivf_c${numCentroids}_k${iters}_",
+        _.partitionBy("c_id")) {
+      ivfAssignWith(graft.Tables.load(spark, dir, "embeddings"),
+        ivfCentroidsTable(spark, dir, numCentroids, iters))
+        // int partition column: directory values read back as int
+        .withColumn("c_id", col("c_id").cast("int"))
+        .repartition(col("c_id"))
     }
 
   /** [[ivfTopK]] over the persisted index — identical rows, but the
@@ -548,21 +528,14 @@ object Similarity {
     */
   def ivfSliceIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     numCentroids: Int = 16, iters: Int = 2): DataFrame =
-    Similarity.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_ivfslice_c${numCentroids}_k${iters}_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        ivfAssignWith(
-          graft.Tables.load(spark, dir, "embeddings")
-            .filter(pmod(col("vec_id"), lit(10)) < 8),
-          ivfCentroidsTable(spark, dir, numCentroids, iters))
-          .withColumn("c_id", col("c_id").cast("int"))
-          .repartition(col("c_id"))
-          .write.partitionBy("c_id")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir,
+        s"graft_ivfslice_c${numCentroids}_k${iters}_", _.partitionBy("c_id")) {
+      ivfAssignWith(
+        graft.Tables.load(spark, dir, "embeddings")
+          .filter(pmod(col("vec_id"), lit(10)) < 8),
+        ivfCentroidsTable(spark, dir, numCentroids, iters))
+        .withColumn("c_id", col("c_id").cast("int"))
+        .repartition(col("c_id"))
     }
 
   /** INDEX MAINTENANCE without retraining: today's batch

@@ -401,14 +401,8 @@ object TextAnalysis {
     */
   def unigramModelTable(spark: org.apache.spark.sql.SparkSession,
                         dir: String): DataFrame =
-    TextAnalysis.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_unigram_$tag"
-      graft.Tables.ensurePersisted(spark, name) { path =>
-        unigramCounts(graft.Tables.load(spark, dir, "documents"))
-          .write.option("path", path).mode("overwrite").saveAsTable(name)
-      }
+    graft.Tables.persisted(spark, dir, "graft_unigram_") {
+      unigramCounts(graft.Tables.load(spark, dir, "documents"))
     }
 
   /** The corpus-total term in micro-nats, from a (tok, tf) model frame:

@@ -89,20 +89,12 @@ object ZOrder {
     * index).
     */
   def zOrderedOrders(spark: SparkSession, dir: String): DataFrame =
-    ZOrder.synchronized {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.DetHash.base60(dir) & 0xffffffffL)
-      val name = s"graft_orders_z$tag"
-      Tables.ensurePersisted(spark, name) { path =>
-        Tables.load(spark, dir, "orders")
-          .withColumn("zbucket",
-            shiftright(zkey(col("o_custkey"), priceDim(col("o_totalprice"))),
-              BucketShift).cast("int"))
-          .repartition(col("zbucket"))
-          .write.partitionBy("zbucket")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(name)
-      }
+    Tables.persisted(spark, dir, "graft_orders_z", _.partitionBy("zbucket")) {
+      Tables.load(spark, dir, "orders")
+        .withColumn("zbucket",
+          shiftright(zkey(col("o_custkey"), priceDim(col("o_totalprice"))),
+            BucketShift).cast("int"))
+        .repartition(col("zbucket"))
     }
 
   /** Rectangle query over the z-ordered table: the JVM-derived covering

@@ -362,10 +362,11 @@ object Pipelines {
                              n: Int = 3, threshold: Double = 0.8): DataFrame = {
     import graft.operators.Dedup
     import graft.functions.GraftFunctions.{normalizeText, shinglesFromTokens, tokens}
-    val probes = Dedup.withBandedSignature(
+    // one tokenize + shingle pass: the band stage and the verify read
+    // the same gram column
+    val probes = Dedup.banded(
         docs.withColumn("__tk", tokens(normalizeText(col("text"))))
-          .withColumn("__ns", shinglesFromTokens(col("__tk"), n))
-          .drop("__tk"), n)
+          .withColumn("__ns", shinglesFromTokens(col("__tk"), n)), "__ns")
       .select(col("doc_id"), col(eventTimeCol), col("__ns").as("ns"),
         size(col("__ns")).cast("long").as("nsz"), col("bk"))
     val verified = probes
@@ -528,9 +529,6 @@ object Pipelines {
                                      eventTimeCol: String, delay: String,
                                      n: Int = 3, threshold: Double = 0.9,
                                      hotGrams: Seq[String] = Nil): DataFrame = {
-    import graft.operators.Dedup
-    val den = 1000000L
-    val num = math.round(threshold * den)
     val base = streamingGramBase(docs, eventTimeCol, delay, n)
     val ev1 = streamingProbeSubset(docs, eventTimeCol, delay, n, threshold,
       hotGrams)
@@ -559,8 +557,7 @@ object Pipelines {
       .agg(first(col("ns")).as("ns"), first(col("sza")).as("sza"),
         sum(col("pm1")).as("pm1"), sum(col("pm2")).as("pm2"),
         max(col("xplen")).as("xplen"), max(col("xm")).as("xm"))
-    val mA = col("sza") - Dedup.ceilRational(num, col("sza"), den)
-    val plenA = least(col("sza"), lit(2) * mA + 1)
+    val (mA, plenA) = graft.operators.Dedup.pigeonhole(col("sza"), threshold)
     agg
       .filter(col("pm1") >= plenA - mA ||
         (col("xplen").isNotNull && col("pm2") >= col("xplen") - col("xm")))
@@ -597,12 +594,8 @@ object Pipelines {
                                           eventTimeCol: String, delay: String,
                                           n: Int, threshold: Double,
                                           hotGrams: Seq[String]): DataFrame = {
-    import graft.operators.Dedup
-    val den = 1000000L
-    val num = math.round(threshold * den)
     val base = streamingGramBase(docs, eventTimeCol, delay, n)
-    val m = col("sza") - Dedup.ceilRational(num, col("sza"), den)
-    val plen = least(col("sza"), lit(2) * m + 1)
+    val (_, plen) = graft.operators.Dedup.pigeonhole(col("sza"), threshold)
     val hot = typedLit(hotGrams)
     base.withColumn("pg",
       slice(array_sort(transform(col("ns"),

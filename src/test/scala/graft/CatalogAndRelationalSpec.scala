@@ -224,7 +224,7 @@ class CatalogAndRelationalSpec extends SparkSpec {
     */
   private def writeSingleFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staging = Files.createTempDirectory("graft_stage").resolve("t")
+    val staging = tempDir("graft_stage").resolve("t")
     df.coalesce(1).write.parquet(staging.toString)
     val part = staging.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
     Files.copy(part.toPath, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
@@ -258,7 +258,7 @@ class CatalogAndRelationalSpec extends SparkSpec {
   }
 
   test("Tables.load: a second load of a resolved table starts no Spark job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = tempDir("graft_memo").toString
     writeSingleFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), s"$dir/t.parquet")
     assert(jobsStartedBy(Tables.load(spark, dir, "t")) >= 1,
       "the first load infers the schema with a job (else this spec tests nothing)")
@@ -268,7 +268,7 @@ class CatalogAndRelationalSpec extends SparkSpec {
   }
 
   test("Tables.load: a table rewritten with an extra column is seen on the next load") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = tempDir("graft_memo").toString
     val path = s"$dir/t.parquet"
     writeSingleFile(Seq((1L, "a")).toDF("k", "v"), path)
     assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
@@ -280,7 +280,7 @@ class CatalogAndRelationalSpec extends SparkSpec {
   }
 
   test("Tables.load: two loads of one table are independent relations (self-join)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = tempDir("graft_memo").toString
     writeSingleFile(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), s"$dir/t.parquet")
     Tables.load(spark, dir, "t") // resolves the path: both loads below hit the memo
     val a = Tables.load(spark, dir, "t")
@@ -301,7 +301,7 @@ class CatalogAndRelationalSpec extends SparkSpec {
   }
 
   test("Tables.load: the fan-out verdict follows a rewritten table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = tempDir("graft_memo").toString
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     writeSingleFile(docs, s"$dir/documents.parquet")
     assert(roundRobin(Tables.load(spark, dir, "documents")))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.CdcSnapshot
@@ -11,7 +9,7 @@ class CdcSnapshotSpec extends SparkSpec {
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(name).toString
+    tempDir(name).toString
 
   private def initial(keys: Seq[Long]) =
     keys.map(k => (k, "O", k * 10.0)).toDF("key", "status", "price")

@@ -74,7 +74,7 @@ class CharLshWidthRecallSpec extends SparkSpec {
 
   test("measured near-threshold recall per band width (deterministic pins)") {
     val hits: Map[Int, Int] = Widths.map { rp =>
-      val got = Dedup.charLshPairsWith(fixture, 5, 0.8, Dedup.NumHashes / rp, rp)
+      val got = Dedup.charLshPairs(fixture, 5, 0.8, rp)
         .select("a", "b").as[(Long, Long)].collect()
         .filter { case (a, b) => constructed(a, b) && a < 100000L }
       rp -> got.length
@@ -104,7 +104,7 @@ class CharLshWidthRecallSpec extends SparkSpec {
     // collapse-first discipline and the duplicate-family at-scale story
     // rest on. Zero tolerance — this is structural, not binomial.
     Widths.foreach { rp =>
-      val got = Dedup.charLshPairsWith(fixture, 5, 0.8, Dedup.NumHashes / rp, rp)
+      val got = Dedup.charLshPairs(fixture, 5, 0.8, rp)
         .select("a", "b").as[(Long, Long)].collect()
         .filter { case (a, b) => constructed(a, b) && a >= 100000L }
       assert(got.length == 10, s"rp=$rp lost identical pairs: ${got.length}/10")
@@ -129,7 +129,7 @@ class CharLshWidthRecallSpec extends SparkSpec {
   }
 
   test("the capped schedule's relation IS charLshPairsWith at the capped width (recall curve carries over)") {
-    // charLshPairsAuto(maxRowsPerBand = rp) delegates to charLshPairsWith
+    // charLshPairsAuto(maxRowsPerBand = rp) delegates to charLshPairs
     // at width cappedRowsPerBand(n, rp) — the same banded relation this
     // spec's curve is measured on — so the pinned recall at width rp is
     // exactly what a capped pipeline holds at ANY corpus size: the width
@@ -137,7 +137,7 @@ class CharLshWidthRecallSpec extends SparkSpec {
     // relation on the fixture, and the curve test pins width → recall.
     val capped = Dedup.charLshPairsAuto(fixture, 5, 0.8, maxRowsPerBand = 4)
       .select("a", "b").as[(Long, Long)].collect().toSet
-    val explicit = Dedup.charLshPairsWith(fixture, 5, 0.8, Dedup.NumHashes / 4, 4)
+    val explicit = Dedup.charLshPairs(fixture, 5, 0.8, rowsPerBand = 4)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(capped == explicit, "capped auto diverges from the explicit width-4 relation")
     // and the default cap changes nothing on the registered relation

@@ -33,7 +33,7 @@ class CheckpointStartSpec extends SparkSpec {
     "rocksdb" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   private val Fast = Trigger.ProcessingTime(0L)
 
-  private def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+  private def tmpDir(prefix: String): String = tempDir(prefix).toString
 
   private def confNow: Seq[Option[String]] = Keys.map(spark.conf.getOption)
 

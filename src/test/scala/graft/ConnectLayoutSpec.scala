@@ -41,7 +41,7 @@ class ConnectLayoutSpec extends SparkSpec {
       Date.valueOf(nasc), "x", new Timestamp(tsMillis))
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def lines(p: java.nio.file.Path): Seq[String] =
     Files.readAllLines(p).asScala.toSeq

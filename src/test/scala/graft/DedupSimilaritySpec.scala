@@ -461,17 +461,10 @@ class DedupSimilaritySpec extends SparkSpec {
     // reliable-checkpoint mode (the 100 TB fault-tolerance path: round
     // boundaries written to storage instead of executor-local blocks)
     // produces the identical labeling
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    try {
-      val reliable = Dedup.clusters(chain, 3, 0.8, checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
-      assert(reliable == labels)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = tempDir("graft_ckpt").toString
+    val reliable = Dedup.clusters(chain, 3, 0.8, checkpointDir = Some(dir))
+      .as[(Long, Long)].collect().toMap
+    assert(reliable == labels)
   }
 
   test("pointer-jump clusters: same fixpoint, O(log d) rounds on a chain") {
@@ -482,9 +475,11 @@ class DedupSimilaritySpec extends SparkSpec {
       (12L, base + " kilo", "en", "s"),
       (30L, "totally unrelated words about engines and planners", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
+    def labelsWithRounds(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.componentLabels(docs.select($"doc_id"),
+        Dedup.minhashLshPairs(docs, 3, 0.8).select($"a", $"b"), "pj_spec")
     val plain = Dedup.clusters(shallow, 3, 0.8).as[(Long, Long)].collect().toMap
-    val pj = Dedup.clustersPointerJump(shallow, 3, 0.8)
-      .as[(Long, Long)].collect().toMap
+    val pj = labelsWithRounds(shallow)._1.as[(Long, Long)].collect().toMap
     assert(pj == plain)
 
     // a 24-doc double-linked chain (the chainedDocs construction on even
@@ -496,8 +491,10 @@ class DedupSimilaritySpec extends SparkSpec {
     // fixture sanity: even docs really are token windows
     val t0 = chainDocs.filter($"doc_id" === 4L).collect()(0).getString(1)
     assert(t0.startsWith("tok4 tok5") && t0.split(" ").length == Dedup.ChainWindow)
-    val (labelsDf, rounds) =
-      Dedup.clustersPointerJumpWithRounds(chainDocs, 3, 0.8, None)
+    val (labelsDf, rounds) = labelsWithRounds(chainDocs)
+    // the registered chain query is clusters over the same loop
+    assert(Dedup.clusters(chainDocs, 3, 0.8).as[(Long, Long)].collect().toMap ==
+      labelsDf.as[(Long, Long)].collect().toMap)
     val labels = labelsDf.as[(Long, Long)].collect().toMap
     assert(labels.size == 24 && labels.values.forall(_ == 0L),
       s"chain did not collapse: ${labels.toSeq.sorted}")
@@ -542,6 +539,33 @@ class DedupSimilaritySpec extends SparkSpec {
     val unfused = Dedup.shingled(docs)
       .select($"doc_id", Dedup.minhashSignature($"shingles").as("sig"))
     assert(fused.exceptAll(unfused).isEmpty && unfused.exceptAll(fused).isEmpty)
+  }
+
+  test("shared band stage: an empty gram set gets no band key on the word and char paths") {
+    // the one empty-set guard every banded chain goes through: a doc with
+    // grams gets NumHashes / rowsPerBand keys, a doc with none gets ONE
+    // null key, which no band equi-join can match. "ab" is one word
+    // shingle (a doc shorter than n words is its own shingle) but has no
+    // char 5-gram; "" has no gram on either path.
+    val docs = Seq((1L, "alpha bravo charlie delta echo foxtrot"), (2L, "ab"), (3L, ""))
+      .toDF("doc_id", "text")
+    def keys(sh: org.apache.spark.sql.DataFrame, rp: Int): Map[Long, Seq[String]] =
+      Dedup.banded(sh, rowsPerBand = rp).select($"doc_id", $"bk").as[(Long, String)]
+        .collect().toSeq.groupBy(_._1).map { case (d, r) => d -> r.map(_._2) }
+    for ((path, sh, empty) <- Seq(("word", Dedup.shingled(docs, 3), Seq(3L)),
+                                  ("char", Dedup.charShingled(docs, 5), Seq(2L, 3L)));
+         rp <- Seq(Dedup.RowsPerBand, 2 * Dedup.RowsPerBand)) {
+      val k = keys(sh, rp)
+      (Seq(1L, 2L, 3L).diff(empty)).foreach { d =>
+        assert(k(d).size == Dedup.NumHashes / rp && k(d).forall(_ != null),
+          s"$path rp=$rp doc $d: ${k(d)}")
+      }
+      empty.foreach(d => assert(k(d) == Seq(null), s"$path rp=$rp doc $d: ${k(d)}"))
+    }
+    // the public word entry and the char pair op ride the same stage:
+    // two gram-less docs never pair, though their signatures are equal
+    assert(Dedup.withBandedSignature(docs, 3).filter($"doc_id" === 3L && $"bk".isNotNull).isEmpty)
+    assert(Dedup.charLshPairs(docs, 5, 0.8).isEmpty)
   }
 
   test("fused SrpBandKeys is bit-identical to the unfused per-plane buckets") {
@@ -1001,7 +1025,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val base = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val skewed = Dedup.skewedDocs(base)
     def pairsAt(rp: Int): Set[(Long, Long)] =
-      Dedup.charLshPairsWith(skewed, 5, 0.8, Dedup.NumHashes / rp, rp)
+      Dedup.charLshPairs(skewed, 5, 0.8, rp)
         .select("a", "b").as[(Long, Long)].collect().toSet
     val fixed = pairsAt(4)
     val wide = pairsAt(8)

@@ -26,7 +26,7 @@ class EngineSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
       GroupWriteSupport}
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    val dir = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val dir = tempDir("graft_nanos").toString
     val schema: MessageType = Types.buildMessage()
       .addField(Types.primitive(PrimitiveTypeName.INT64,
         org.apache.parquet.schema.Type.Repetition.REQUIRED).named("event_id"))
@@ -93,7 +93,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("non-nanos read failures surface as-is, not masked by the legacy retry") {
-    val empty = java.nio.file.Files.createTempDirectory("graft_noevents").toString
+    val empty = tempDir("graft_noevents").toString
     val e = intercept[Exception](Tables.load(spark, empty, "events").count())
     assert(!e.getMessage.contains("nanosAsLong"))
     assert(e.getMessage.contains("PATH_NOT_FOUND") ||

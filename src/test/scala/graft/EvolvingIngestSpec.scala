@@ -67,7 +67,7 @@ class EvolvingIngestSpec extends SparkSpec {
 
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[Array[Byte]]
-      val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+      val dir = tempDir("graft_evolve").toString
       // id 99 is asked of the registry (404 → dropped from the writer
       // map), so its records dead-letter like any runtime-unknown id
       val q = Pipelines.startEvolvingIngestSink(

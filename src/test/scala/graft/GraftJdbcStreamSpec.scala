@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -105,8 +104,8 @@ class GraftJdbcStreamSpec extends SparkSpec {
     @volatile var snap = table((1L, 1000L), (2L, 2000L))
     val src = new SnapshotChunkSource(() => snap)
     val key = handle(src)
-    val ckp = Files.createTempDirectory("gjs_ckp_").toString
-    val out = Files.createTempDirectory("gjs_out_").toString
+    val ckp = tempDir("gjs_ckp_").toString
+    val out = tempDir("gjs_out_").toString
 
     def start() = readStream(key).writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckp).start()
@@ -204,8 +203,8 @@ class GraftJdbcStreamSpec extends SparkSpec {
     setRows(snap)
     val key = handle(new SnapshotChunkSource(() => snap,
       fetcher = Some(SharedRowsFetcher(k))))
-    val ckp = Files.createTempDirectory("gjs_pckp_").toString
-    val out = Files.createTempDirectory("gjs_pout_").toString
+    val ckp = tempDir("gjs_pckp_").toString
+    val out = tempDir("gjs_pout_").toString
     // a one-key cap: a restart that re-probed from the table start would
     // end its first batch below the committed offset and re-deliver rows
     def start() = readStream(key, "rowsPerPartition" -> "1", "maxRowsPerPoll" -> "1").writeStream

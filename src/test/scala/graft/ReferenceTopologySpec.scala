@@ -68,12 +68,12 @@ class ReferenceTopologySpec extends SparkSpec {
     @volatile var feed = phase1
     GraftJdbcStream.registry.put("spec_ref_topology",
       new SnapshotChunkSource(() => feed.toDF("value", "dt_update")))
-    val out = java.nio.file.Files.createTempDirectory("graft_reftopo").toString
+    val out = tempDir("graft_reftopo").toString
     val q = Pipelines.startReferenceTopology(
       spark.readStream.format("graft-jdbc")
         .option("sourceHandle", "spec_ref_topology").load(),
       reader, registry, Seq(1, 2), out,
-      java.nio.file.Files.createTempDirectory("graft_reftopo_ckpt").toString,
+      tempDir("graft_reftopo_ckpt").toString,
       buckets = 8, queryName = "spec_ref_topology_q")
     try {
       q.processAllAvailable()
@@ -136,8 +136,8 @@ class ReferenceTopologySpec extends SparkSpec {
     @volatile var feed = phase1
     GraftJdbcStream.registry.put("spec_ref_restart",
       new SnapshotChunkSource(() => feed.toDF("value", "dt_update")))
-    val out = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ck").toString
+    val out = tempDir("graft_restart").toString
+    val ckpt = tempDir("graft_restart_ck").toString
     def start() = Pipelines.startReferenceTopology(
       spark.readStream.format("graft-jdbc")
         .option("sourceHandle", "spec_ref_restart").load(),
@@ -186,7 +186,7 @@ class ReferenceTopologySpec extends SparkSpec {
     // snapshot, curated an EMPTY frame, and overwrote manifest/batch_id=N
     // with nothing. The staged-commit protocol re-drives manifest+upsert
     // from stage/batch_id=N instead.
-    val out = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val out = tempDir("graft_replay").toString
     val snap = s"$out/snapshot"
     val recs = Seq(
       enc(2, 1L, goodEn, "web", 1000L, Some("en")),
@@ -230,7 +230,7 @@ class ReferenceTopologySpec extends SparkSpec {
     // generation's _GRAFT_APPLIED marker and was silently dropped (rows
     // consumed, nothing written). Artifact paths now carry the
     // checkpoint's stream id — a new generation gets its own namespace.
-    val out = java.nio.file.Files.createTempDirectory("graft_gen").toString
+    val out = tempDir("graft_gen").toString
     val snap = s"$out/snapshot"
     def mkBatch(id: Long, text: String, ms: Long) =
       Seq(enc(2, id, text, "web", ms, Some("en"))).toDF("value")
@@ -251,7 +251,7 @@ class ReferenceTopologySpec extends SparkSpec {
       "generation B's manifest missing")
     // and the stream id itself: minted once, stable across restarts from
     // the same checkpoint, re-minted for a reset checkpoint
-    val ck = java.nio.file.Files.createTempDirectory("graft_gen_ck").toString
+    val ck = tempDir("graft_gen_ck").toString
     val id1 = Pipelines.streamInstanceId(spark, ck)
     assert(id1 == Pipelines.streamInstanceId(spark, ck), "id not stable")
     new java.io.File(s"$ck/_GRAFT_STREAM_ID").delete()
@@ -262,8 +262,8 @@ class ReferenceTopologySpec extends SparkSpec {
     // round-11 advisory: pre-namespace layouts wrote stage/batch_id=N with
     // no run= segment. A namespaced restart can't re-drive that crash
     // window, so the first mint against such an outDir must fail loudly.
-    val out = java.nio.file.Files.createTempDirectory("graft_legacy").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_legacy_ck").toString
+    val out = tempDir("graft_legacy").toString
+    val ck = tempDir("graft_legacy_ck").toString
     new java.io.File(s"$out/stage/batch_id=3").mkdirs()
     val e = intercept[IllegalArgumentException] {
       Pipelines.requireNoLegacyStage(spark, out, ck)
@@ -274,15 +274,15 @@ class ReferenceTopologySpec extends SparkSpec {
     Pipelines.streamInstanceId(spark, ck)
     Pipelines.requireNoLegacyStage(spark, out, ck)
     // namespaced dirs alone never block a fresh mint
-    val out2 = java.nio.file.Files.createTempDirectory("graft_legacy2").toString
-    val ck2 = java.nio.file.Files.createTempDirectory("graft_legacy_ck2").toString
+    val out2 = tempDir("graft_legacy2").toString
+    val ck2 = tempDir("graft_legacy_ck2").toString
     new java.io.File(s"$out2/stage/run=genA/batch_id=3").mkdirs()
     Pipelines.requireNoLegacyStage(spark, out2, ck2)
     // mint-race loser: the id file appearing between the exists() probe
     // and the create() must be ADOPTED, not thrown — simulated by the
     // non-overwriting create hitting a pre-existing file... the public
     // behavior pinned here is that concurrent minters converge on ONE id
-    val ck3 = java.nio.file.Files.createTempDirectory("graft_legacy_ck3").toString
+    val ck3 = tempDir("graft_legacy_ck3").toString
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val gate = new java.util.concurrent.CountDownLatch(1)
     val futs = (1 to 4).map(_ => pool.submit(
@@ -299,7 +299,7 @@ class ReferenceTopologySpec extends SparkSpec {
     // double separator) serialize on one qualified-path lock and read
     // one id — distinct raw-string lock keys would let two spellings
     // mint concurrently
-    val ck4 = java.nio.file.Files.createTempDirectory("graft_legacy_ck4").toString
+    val ck4 = tempDir("graft_legacy_ck4").toString
     val id4 = Pipelines.streamInstanceId(spark, ck4)
     assert(Pipelines.streamInstanceId(spark, s"$ck4/") == id4)
     assert(Pipelines.streamInstanceId(spark, ck4.replace("/graft_", "//graft_")) == id4)
@@ -327,7 +327,7 @@ class ReferenceTopologySpec extends SparkSpec {
     // the rest of the pool pile onto the live lock entry), then throws —
     // exercising eviction-with-waiters — and every survivor must still
     // agree on a single published id.
-    val ck = java.nio.file.Files.createTempDirectory("graft_mint_race").toString
+    val ck = tempDir("graft_mint_race").toString
     val key = Pipelines.mintLockKey(spark, ck)
     val failed = new java.util.concurrent.atomic.AtomicInteger(0)
     val entered = new java.util.concurrent.CountDownLatch(1)
@@ -370,7 +370,7 @@ class ReferenceTopologySpec extends SparkSpec {
   }
 
   test("applyUpsert disk face equals the pure upsertResult merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_pure").toString
+    val dir = tempDir("graft_upsert_pure").toString
     val init = Seq((1L, 0L, "a"), (2L, 0L, "b"), (9L, 0L, "z"))
       .toDF("key", "seq", "text")
     val b1 = Seq((1L, 5L, "a1"), (3L, 2L, "c")).toDF("key", "seq", "text")
@@ -386,7 +386,7 @@ class ReferenceTopologySpec extends SparkSpec {
   }
 
   test("applyUpsert: late lower-seq row loses; replay is idempotent; COW bucket-scoped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert").toString
     def batch(rows: (Long, Long, String)*): DataFrame =
       rows.toDF("key", "seq", "text")
     CdcSnapshot.applyUpsert(spark, dir, batch((1L, 10L, "a"), (2L, 10L, "b")), 4)

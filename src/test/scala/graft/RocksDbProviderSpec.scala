@@ -201,7 +201,7 @@ class RocksDbProviderSpec extends SparkSpec {
     // state), so no state-store metrics exist to assert — this pins that
     // the topology is provider-agnostic: flipping the session to RocksDB
     // (as a 100 TB deployment would, globally) changes nothing.
-    def tmp(n: String) = java.nio.file.Files.createTempDirectory(n).toString
+    def tmp(n: String) = tempDir(n).toString
     withRocksDb {
       val dir = tmp("cdc_rocks")
       CdcSnapshot.init(

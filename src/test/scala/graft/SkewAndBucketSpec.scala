@@ -73,7 +73,7 @@ class SkewAndBucketSpec extends SparkSpec {
   }
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_").toString
+    val wh = tempDir("graft_wh_").toString
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")
     Tables.load(spark, sf, "lineitem")

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one fixture per forked test
@@ -20,6 +22,34 @@ object SparkSpec {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** This suite's temp root, made on first use and deleted in afterAll. */
+  private var tempRoot: Option[Path] = None
+
+  /** A fresh directory under this suite's temp root (sinks, checkpoints,
+    * scratch tables); the whole root goes when the suite ends.
+    */
+  protected def tempDir(prefix: String): Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = Files.createTempDirectory(s"graft_${getClass.getSimpleName}_")
+      tempRoot = Some(r)
+      r
+    }
+    Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try {
+      tempRoot.foreach { root =>
+        // a streaming query still reading or writing under the root would
+        // fail on the deleted files, so the suite's queries stop first
+        spark.streams.active.foreach(_.stop())
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+        }
+        rm(root.toFile)
+      }
+    } finally super.afterAll()
 }

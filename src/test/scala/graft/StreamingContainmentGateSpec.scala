@@ -63,12 +63,9 @@ class StreamingContainmentGateSpec extends SparkSpec {
     * model-free ordering is graded against.
     */
   private lazy val batchRankedVolume: Long = {
-    val den = 1000000L
-    val num = math.round(T * den)
     val bg = Dedup.containmentPostingFrame(arrivals.drop("ts"), N)
       .select($"doc_id".as("a"), $"sz".as("sza"), $"g")
-    val m = $"sza" - Dedup.ceilRational(num, $"sza", den)
-    val plen = least($"sza", lit(2) * m + 1)
+    val (_, plen) = Dedup.pigeonhole($"sza", T)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"a").orderBy(coalesce($"df", lit(0L)), $"g")
     bg.join(dfModel, Seq("g"), "left")

@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("K3 parquet sink: appends files readable as the jovens schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_k3_").toString
+    val dir = tempDir("graft_k3_").toString
     val mem = MemoryStream[Cust]
     val q = Pipelines.startParquetSink(Pipelines.jovens(mem.toDF()),
       s"$dir/data", s"$dir/ckpt")
@@ -111,7 +111,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("K4 json changelog sink: update rows + batch id land as json lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_k4_").toString
+    val dir = tempDir("graft_k4_").toString
     val mem = MemoryStream[Cust]
     val q = Pipelines.startJsonChangelogSink(Pipelines.idadecont(mem.toDF()),
       s"$dir/data", s"$dir/ckpt")
@@ -326,11 +326,11 @@ class StreamingSpec extends SparkSpec {
     GraftJdbcStream.registry.put("spec_curation_docs",
       new SnapshotChunkSource(() => snap))
 
-    val out = Files.createTempDirectory("graft_cur_s3_").toString
+    val out = tempDir("graft_cur_s3_").toString
     val docsStream = spark.readStream.format("graft-jdbc")
       .option("sourceHandle", "spec_curation_docs").load()
     val q = Pipelines.startStreamingCuration(docsStream, out, "curated",
-      checkpoint = Files.createTempDirectory("graft_cur_ckp_").toString)
+      checkpoint = tempDir("graft_cur_ckp_").toString)
     try q.processAllAvailable() finally q.stop()
 
     // reference object layout: topics.dir/<topic>/partition=N/<topic>+N+off

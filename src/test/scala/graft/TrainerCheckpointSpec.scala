@@ -33,16 +33,7 @@ class TrainerCheckpointSpec extends SparkSpec {
       .toDF("vec_id", "label", "embedding")
   }
 
-  private def withTempDir[A](f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
-    try f(dir.toString)
-    finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(dir.toFile)
-    }
-  }
+  private def withTempDir[A](f: String => A): A = f(tempDir("graft_ckpt_spec").toString)
 
   test("ivfCentroids with checkpointDir: identical centroids, files written") {
     val emb = embFixture
