@@ -943,7 +943,7 @@ object OracleSqlGen {
         FROM hsx)"""
 
   /** [[sigCteOver]] for a `sh` CTE whose shingles are ALREADY BIGINT gram
-    * keys: base hash = key mod P, mirroring Dedup.signaturesOverHashes.
+    * keys: base hash = key mod P, mirroring Dedup.withSignature.
     */
   private def sigCteOverHashes(shCte: String): String =
     s"""$shCte,
@@ -1447,11 +1447,9 @@ object OracleSqlGen {
         FROM sized s JOIN fam USING (cluster_id)
         GROUP BY source"""
 
-  /** Mirrors Dedup.clustersPointerJump over the CHAIN stress fixture
-    * (Dedup.chainedDocs): even docs rebuilt as sliding `tok{j}` windows
-    * in SQL, then the identical closure — pointer jumping reaches the
-    * same min-label fixpoint as plain propagation, so ONE oracle serves
-    * both loop shapes.
+  /** Mirrors Dedup.clusters(chainedDocs(…)), the CHAIN stress fixture:
+    * even docs rebuilt as sliding `tok{j}` windows in SQL, then the same
+    * min-label closure as [[clustersSql]] ([[clustersSqlOver]]).
     */
   def clustersChainSql(n: Int, threshold: Double): String = {
     import graft.operators.Dedup.{ChainWindow, ChainStride}

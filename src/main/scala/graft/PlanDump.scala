@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
   * from the registered queries. PlansFreshnessSpec asserts the dump
   * carries every pick and the guarded plan markers (and none of the
   * forbidden ones), so a stale or hand-edited PLANS.md fails the build.
+  * Each plan is cut at 4,000 characters; the counts line above it is
+  * taken from the whole executed plan ([[PlanMetrics.census]]).
   */
 object PlanDump {
 
@@ -41,6 +43,9 @@ object PlanDump {
     "corpus_split_leakage_safe_indexed", "dedup_family_stats_indexed",
     "dedup_containment_incremental")
 
+  /** Starts each section's counts line (whole executed plan). */
+  val CountsPrefix = "Whole-plan counts:"
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
@@ -57,8 +62,11 @@ object PlanDump {
     sb.append("under-cap vocabularies (the above-cap branch ships per-candidate gram\n")
     sb.append("arrays instead — see ScaleBench notes), banded SRP with no nested-loop join, and\n")
     sb.append("`dynamicpruningexpression` on the partitioned ANN index scan.\n")
+    sb.append("Each plan is cut at 4,000 characters; the counts line above it is\n")
+    sb.append("taken from the whole executed plan (subqueries included): `Exchange` /\n")
+    sb.append("`BroadcastExchange` nodes (not `ReusedExchange`) and the evaluation\n")
+    sb.append("sites of the gram kernels `char_gram_hashes` and `ws_tokens`.\n")
     picks.foreach { name =>
-      sb.append(s"\n## $name\n\n```\n")
       // EXECUTE before dumping: AQE applies exchange reuse / skew splits /
       // coalescing only at runtime, so the pre-execution string would hide
       // exactly the properties the dump exists to document (e.g. the
@@ -67,6 +75,9 @@ object PlanDump {
       // pre-execution tree — dropped.
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect()
+      val c = PlanMetrics.census(df)
+      sb.append(s"\n## $name\n\n$CountsPrefix Exchange: ${c.exchanges} · " +
+        s"`char_gram_hashes`: ${c.charGramSites} · `ws_tokens`: ${c.wsTokenSites}\n\n```\n")
       sb.append(df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0).take(4000))
       sb.append("```\n")

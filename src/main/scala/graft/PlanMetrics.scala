@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 
 /** Post-execution shuffle accounting — the measured form of the engine's
   * "minimize shuffles" design claims. Where `PlanShapeSpec` pins plan
@@ -49,6 +49,26 @@ object PlanMetrics {
       shuffles.size,
       shuffles.map(_.metrics.get("shuffleRecordsWritten").map(_.value).getOrElse(0L)).sum,
       shuffles.map(_.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)).sum)
+  }
+
+  /** What a whole executed plan holds: `Exchange` / `BroadcastExchange`
+    * nodes (a `ReusedExchange` is not one), and the evaluation sites of
+    * the gram kernels `char_gram_hashes` and `ws_tokens` (an operator
+    * expression that computes them, not an attribute reading a result).
+    */
+  final case class PlanCensus(exchanges: Int, charGramSites: Int, wsTokenSites: Int)
+
+  /** [[PlanCensus]] of an ALREADY-EXECUTED frame: AQE's final plan, its
+    * query stages and every subquery, whatever the plan's printed length.
+    */
+  def census(df: DataFrame): PlanCensus = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      walk(p).flatMap(n => n +: n.subqueries.flatMap(nodes))
+    val all = nodes(df.queryExecution.executedPlan)
+    def sites(name: String): Int =
+      all.map(_.expressions.map(_.collect { case e if e.prettyName == name => e }.size).sum).sum
+    PlanCensus(all.count(_.isInstanceOf[Exchange]),
+      sites("char_gram_hashes"), sites("ws_tokens"))
   }
 
   /** Run the frame and return (row count, shuffle stats). Executes via

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
@@ -52,7 +55,7 @@ object Tables {
     * the read below raises Spark's own missing-path error.
     */
   private def listingStamp(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
       .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
     catch { case _: java.io.FileNotFoundException => Seq.empty }
@@ -170,11 +173,30 @@ object Tables {
   /** Per-session root for write-time-persisted derived tables (bucketed
     * fact tables, the partitioned ANN index). The applicationId in the
     * path keeps concurrent JVMs/users from colliding on one shared
-    * tmpdir location — the in-process locks only serialize one JVM.
+    * tmpdir location — the in-process locks only serialize one JVM. The
+    * first call for a SparkContext registers a [[PersistedRootCleanup]]
+    * on it, so the root goes when the application ends.
     */
-  def persistedTableRoot(spark: SparkSession): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_persisted_" +
-      spark.sparkContext.applicationId
+  def persistedTableRoot(spark: SparkSession): String = {
+    val sc = spark.sparkContext
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_persisted_${sc.applicationId}"
+    if (CleanedRoots.add(root)) sc.addSparkListener(new PersistedRootCleanup(root, sc.hadoopConfiguration))
+    root
+  }
+
+  private val CleanedRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Deletes a persisted-table root, recursively and through `conf`'s file
+    * system (the one its tables were written with), when the application
+    * ends: `SparkContext.stop`, which Spark's shutdown hook also runs.
+    */
+  private[graft] final class PersistedRootCleanup(root: String, conf: Configuration)
+      extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      val path = new Path(root)
+      path.getFileSystem(conf).delete(path, true)
+    }
+  }
 
   /** Ensure-once for a persisted derived table: reuse the catalog entry
     * only if its data is actually readable and non-empty (a persistent
@@ -192,7 +214,7 @@ object Tables {
     def listedFilesExist(t: DataFrame): Boolean = {
       val conf = spark.sessionState.newHadoopConf()
       t.inputFiles.forall { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
+        val p = new Path(f)
         p.getFileSystem(conf).exists(p)
       }
     }

@@ -164,15 +164,13 @@ object Pipelines {
     * `<topic>+<partition>+<startOffset>.parquet` — the Confluent S3 sink's
     * DefaultPartitioner path and object naming. `jovens` is unkeyed on a
     * single-partition topic, so everything is partition 0. The start
-    * offset is modeled as `batchId·10⁶ + first-record-index` (there is no
-    * Kafka offset off-broker); deterministic per batch, so a replayed
-    * micro-batch overwrites its own objects — idempotent like the real
-    * sink's offset-derived names. Files are written by the Spark parquet
-    * writer (flush.size via maxRecordsPerFile) and moved to their object
-    * names — a metadata op on HDFS/local, a copy on S3 (the real sink
-    * writes objects directly; the rename is the off-broker analog).
-    * `flushSize` must be positive: `maxRecordsPerFile` ≤ 0 means no limit,
-    * and every object of a batch would get the same name. Starts
+    * offset is modeled as `batchId·10⁶` plus the first record's index in
+    * its Spark partition's slot of those names (there is no Kafka offset
+    * off-broker); deterministic per batch, so a replayed micro-batch
+    * overwrites its own objects — idempotent like the real sink's
+    * offset-derived names. Each task of the micro-batch writes its objects
+    * straight into `partition=0` ([[ConnectLayout.writeParquetObjects]]);
+    * `flushSize` must be positive. Starts
     * through [[startCheckpointed]], under its lock: no `chmod` spawns for
     * a `file:` checkpoint, session conf restored even if `start()` throws.
     */

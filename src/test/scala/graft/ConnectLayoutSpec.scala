@@ -244,15 +244,92 @@ class ConnectLayoutSpec extends SparkSpec {
     assert(e.getMessage.contains("stride 1000000"), e.getMessage)
   }
 
-  test("parquet objects: a batch whose names reach the next batch's range throws before moving any") {
-    // two one-row files at flushSize 10^6: the second is named batch 1's first object
-    val topicDir = tmpDir("graft_s3r_") + "/jovens"
-    val batch = spark.range(2).repartition(2).toDF("id")
-    val e = intercept[java.io.IOException](
-      ConnectLayout.writeParquetObjects(batch, topicDir, "jovens", flushSize = 1000000, batchId = 0))
-    assertStrideRefusal(e, 0)
-    val part0 = Paths.get(topicDir, "partition=0")
-    assert(!Files.exists(part0) || Files.list(part0).iterator().asScala.isEmpty)
+  /** The parquet writer's fixture: a 3-partition batch of 25 rows (8, 8
+    * and 9 per partition) written at flushSize 4 into `<topicDir>/partition=0`.
+    */
+  private def writeParquetFixture(topicDir: String, batchId: Long): java.nio.file.Path = {
+    val batch = spark.range(0, 25, 1, 3).select($"id", ($"id" * 3).cast("string").as("s"))
+    assert(batch.rdd.getNumPartitions == 3)
+    ConnectLayout.writeParquetObjects(batch, topicDir, "jovens", flushSize = 4, batchId)
+    Paths.get(topicDir, "partition=0")
+  }
+
+  /** Visible objects of a directory by start offset, in name order. */
+  private def parquetObjects(dir: java.nio.file.Path): Seq[(Long, java.nio.file.Path)] =
+    Files.list(dir).iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .map { p =>
+        val name = p.getFileName.toString
+        assert(name.matches("jovens\\+0\\+\\d+\\.parquet"), s"bad object name $name")
+        (name.stripPrefix("jovens+0+").stripSuffix(".parquet").toLong, p)
+      }.sortBy(_._1)
+
+  private def ids(obj: java.nio.file.Path): Seq[Long] =
+    spark.read.parquet(obj.toString).as[(Long, String)].collect().toSeq.map { case (id, s) =>
+      assert(s == (id * 3).toString); id
+    }
+
+  test("parquet objects: names fall in each partition's slot, in record order") {
+    val part0 = writeParquetFixture(tmpDir("graft_s3n_") + "/jovens", batchId = 7)
+    val objs = parquetObjects(part0)
+    // slot i of 3 starts at 7·10⁶ + i·⌊10⁶/3⌋; its objects at first-record
+    // indexes 0 and 4 (8 rows), and 8 too in the last partition (9 rows)
+    val expected = for ((slot, n) <- Seq(0 -> 8, 1 -> 8, 2 -> 9); i <- 0 until n by 4)
+      yield 7000000L + slot * 333333L + i
+    assert(objs.map(_._1) == expected)
+    // read in name order, the objects give back the batch's records in order
+    assert(objs.flatMap { case (_, o) => ids(o) } == (0L until 25L))
+  }
+
+  test("parquet objects: each holds at most flushSize rows, and together the input") {
+    val objs = parquetObjects(writeParquetFixture(tmpDir("graft_s3f_") + "/jovens", batchId = 0))
+    val sizes = objs.map { case (_, o) => ids(o).size }
+    assert(sizes.forall(n => n >= 1 && n <= 4), s"$sizes")
+    assert(objs.flatMap { case (_, o) => ids(o) }.sorted == (0L until 25L))
+  }
+
+  test("parquet objects: a replayed batchId rewrites the same names and rows") {
+    val topicDir = tmpDir("graft_s3p_") + "/jovens"
+    def snapshot(dir: java.nio.file.Path) = parquetObjects(dir).map { case (off, o) => off -> ids(o) }
+    val first = snapshot(writeParquetFixture(topicDir, batchId = 2))
+    val replay = snapshot(writeParquetFixture(topicDir, batchId = 2))
+    assert(first.nonEmpty && replay == first)
+  }
+
+  test("parquet objects: a slot or batch-range overrun throws, no object visible") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // 3 partitions of 333,334 rows at flushSize 333,333: each one's second
+    // object would be named past its ⌊10⁶/3⌋-name slot; then one partition
+    // of 10⁶ + 1 rows at flushSize 10⁶, whose second object is batch 5's first
+    Seq((spark.range(0, 3 * 333334L, 1, 3), 333333, "of 3 (333333 names", "slot"),
+        (spark.range(0, 1000001L, 1, 1), 1000000, "slot 0 of 1 (1000000 names", "range")).foreach {
+      case (batch, flushSize, slot, tag) =>
+        val topicDir = tmpDir(s"graft_s3${tag}_") + "/jovens"
+        val e = intercept[Exception](ConnectLayout.writeParquetObjects(
+          batch.toDF("id"), topicDir, "jovens", flushSize, batchId = 4))
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("batch 4") && m.contains(slot) &&
+          m.contains("stride 1000000")), s"$tag: ${e.getMessage}")
+        val part0 = Paths.get(topicDir, "partition=0")
+        def entries = if (!Files.exists(part0)) Seq.empty
+          else Files.list(part0).iterator().asScala.map(_.getFileName.toString).toSeq
+        assert(entries.forall(_.startsWith(".")), s"$tag: visible objects $entries")
+        // every failed task deletes its temps; the job may fail before the last one finishes
+        eventually(timeout(60.seconds), interval(200.millis))(assert(entries.isEmpty, s"$tag"))
+    }
+  }
+
+  test("parquet objects: no temp, scratch, _temporary or _SUCCESS entry remains") {
+    val topicDir = tmpDir("graft_s3l_") + "/jovens"
+    writeParquetFixture(topicDir, batchId = 0)
+    writeParquetFixture(topicDir, batchId = 1)
+    val names = walk(Paths.get(topicDir)).drop(1).map(p => Paths.get(topicDir).relativize(p).toString)
+    val objects = names.filter(_.matches("partition=0/jovens\\+0\\+\\d+\\.parquet"))
+    assert(objects.size == 14)
+    // the partition directory, its objects and their .crc sidecars: nothing else
+    assert(names.toSet == Set("partition=0") ++ objects ++
+      objects.map(o => o.replace("partition=0/", "partition=0/.") + ".crc"), s"$names")
   }
 
   test("json objects: a partition whose offsets reach the next batch's range throws") {
@@ -270,6 +347,23 @@ class ConnectLayoutSpec extends SparkSpec {
     val names = Files.list(Paths.get(base, "partition=0")).iterator().asScala
       .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
     assert(names == Set("idadecont+0+3000000.json", "idadecont+0+3000000.keys.json"))
+  }
+
+  test("json objects: no dot-temp file survives a batch") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("__partition", IntegerType),
+      StructField("__key", StringType), StructField("__value", StringType)))
+    val rows = (0 until 7).map(i =>
+      new GenericRowWithSchema(Array[Any](i % 2, s"k$i", s"v$i"), schema): org.apache.spark.sql.Row)
+    val base = tmpDir("graft_s3j_") + "/idadecont"
+    ConnectLayout.writeJsonObjects(rows.iterator, ConnectLayout.sinkConf(spark), base,
+      "idadecont", flushSize = 2, batchId = 0)
+    val files = walk(Paths.get(base)).filter(Files.isRegularFile(_)).map(_.getFileName.toString)
+    val (hidden, objs) = files.partition(_.startsWith("."))
+    // partition 0 holds 4 records, partition 1 holds 3: two data + two keys objects each
+    assert(objs.size == 8 && objs.forall(_.matches("idadecont\\+[01]\\+\\d+(\\.keys)?\\.json")), s"$objs")
+    assert(hidden.toSet == objs.map(o => s".$o.crc").toSet, s"$hidden")
   }
 
   test("PosixLocalFileSystem matches chmod(1) on sticky modes and in setgid directories") {

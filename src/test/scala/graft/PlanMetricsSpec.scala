@@ -148,4 +148,21 @@ class PlanMetricsSpec extends SparkSpec {
     assert(stats.recordsWritten < total, s"stats=$stats total=$total")
     assert(stats.recordsWritten >= kept, s"stats=$stats kept=$kept")
   }
+
+  test("plan census: whole-plan exchanges and gram sites, reused exchange once") {
+    import graft.functions.{CharGramHashes, TextNorm}
+    // not a local relation, whose projections the optimizer evaluates itself
+    val docs = spark.range(1, 4).select($"id", concat(lit("a b "), ($"id" % 2).cast("string")).as("text"))
+    val agg = docs.select($"id", TextNorm.tokensColumn($"text").as("t"),
+        CharGramHashes.column(TextNorm.normalizeColumn($"text"), 3).as("g"))
+      .groupBy(($"id" % 2).as("k")).agg(count("*").as("n"), max(size($"t")), max(size($"g")))
+    agg.collect()
+    assert(PlanMetrics.census(agg) == PlanMetrics.PlanCensus(1, 1, 1))
+    // the second branch's aggregate reads the first one's exchange: no new
+    // exchange and no new gram site
+    val both = agg.union(agg)
+    both.collect()
+    assert(both.queryExecution.executedPlan.toString.contains("ReusedExchange"))
+    assert(PlanMetrics.census(both) == PlanMetrics.PlanCensus(1, 1, 1))
+  }
 }

@@ -50,4 +50,11 @@ class PlansFreshnessSpec extends AnyFunSuite {
     assert(!plans.contains("CartesianProduct"),
       "a pair-generation path degraded to a cartesian product")
   }
+
+  test("every PLANS.md section carries its whole-plan counts") {
+    val sections = plans.split("(?m)^## ").drop(1)
+    val uncounted = sections.filterNot(_.linesIterator.drop(1).map(_.trim).filter(_.nonEmpty)
+      .nextOption().exists(_.startsWith(PlanDump.CountsPrefix)))
+    assert(uncounted.isEmpty, s"sections without counts: ${uncounted.map(_.takeWhile(_ != '\n')).toSeq}")
+  }
 }

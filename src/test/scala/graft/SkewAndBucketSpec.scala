@@ -179,4 +179,19 @@ class SkewAndBucketSpec extends SparkSpec {
     val rebuilt = Similarity.partitionedAnnIndex(spark, sf, planes = 2)
     assert(rebuilt.count() == n, "unreadable files must trigger a rebuild")
   }
+
+  test("a persisted-table root is deleted when its application ends") {
+    import java.nio.file.Files
+    import org.apache.spark.scheduler.SparkListenerApplicationEnd
+    // the live session's root is one path per application, whoever asks
+    assert(Tables.persistedTableRoot(spark) == Tables.persistedTableRoot(spark.newSession()))
+    assert(Tables.persistedTableRoot(spark).endsWith(spark.sparkContext.applicationId))
+    // a stand-in root with a bucketed table's nested layout
+    val root = tempDir("graft_persisted_")
+    val table = Files.createDirectories(root.resolve("graft_bucketed_x/part=0"))
+    Files.write(table.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    val cleanup = new Tables.PersistedRootCleanup(root.toString, spark.sparkContext.hadoopConfiguration)
+    cleanup.onApplicationEnd(SparkListenerApplicationEnd(0L))
+    assert(!Files.exists(root))
+  }
 }
