@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.io.IOException
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.{IOException, OutputStream}
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -16,34 +17,42 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.functions.{col, lit, pmod, struct, to_json}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import graft.functions.DetHash
 
-/** Confluent-S3-sink object layout writers
+/** The Confluent S3 sink's object layout
   * (`/root/reference/connect_s3_sink_jovens.config`,
   * `connect_s3_sink_count.config`): `topics.dir/<topic>/partition=<p>/`
   * directories holding `<topic>+<partition>+<startOffset>.<ext>` objects
-  * of at most flush.size records, with optional record-aligned
-  * `.keys.<ext>` sidecars (`store.kafka.keys=true`).
+  * of at most flush.size records, with record-aligned `.keys.<ext>`
+  * objects when the sink stores keys (`store.kafka.keys=true`). One writer,
+  * [[writeObjects]], serves both sinks; a [[Format]] only opens, writes and
+  * closes one object.
   *
-  * Naming: off-broker there is no Kafka offset, so startOffset is
-  * `batchId·10⁶` plus the first record's index within its writer's slot of
-  * those 10⁶ names. The JSON sink has one writer per `partition=<p>`, whose
-  * slot is all of them; the parquet sink's Spark partition `i` of `n` shares
-  * `partition=0` and owns `[i·⌊10⁶/n⌋, (i+1)·⌊10⁶/n⌋)`. Names are unique,
-  * monotonic in record order and DETERMINISTIC per batch and partitioning,
-  * so a replayed batch overwrites its own objects, as the real sink's
-  * offset-derived names make S3 writes idempotent. A name past its slot
-  * throws: it belongs to another writer or to the next batch.
+  * Naming: the tasks of the batch's last stage write its objects, and Spark
+  * partition `i` of `n` owns slot `[i·⌊10⁶/n⌋, (i+1)·⌊10⁶/n⌋)` of the
+  * batch's `batchId·10⁶` names in every `partition=<p>` directory. Off-broker
+  * there is no Kafka offset, so an object's startOffset is `batchId·10⁶`
+  * plus its slot's start plus the index of its first record among the
+  * task's records in that Kafka partition. Names are unique, monotonic in
+  * record order and DETERMINISTIC per batch and partitioning, so a replayed
+  * batch overwrites its own objects, as the real sink's offset-derived
+  * names make S3 writes idempotent. A name past its slot throws: it belongs
+  * to another task or to the next batch.
   *
-  * Publishing: each object is written under `.<name>.tmp` in its own
-  * directory (readers skip dot files), then renamed, so no reader sees a
-  * partial object. Exactly-once comes from the replayable source plus these
-  * idempotent names (the Structured Streaming model), so no commit
-  * protocol, scratch directory or post-job move is needed: a failed or
-  * replayed batch is rewritten, never undone.
+  * Publishing: a task writes each object under `.<name>.tmp` in its own
+  * directory (readers skip dot files) and renames them all once it has
+  * written all its rows, a keys object before its data object, so no reader
+  * sees a partial object or a data object without its keys. A task that
+  * fails deletes its temps and publishes nothing. Exactly-once comes from
+  * the replayable source plus these idempotent names (the Structured
+  * Streaming model), so no commit protocol, scratch directory or post-job
+  * move is needed: a failed or replayed batch is rewritten, never undone.
   *
   * How objects reach the file system: every write, `rename` and `delete`
   * goes through [[sinkConf]], the session's Hadoop conf (so `spark.hadoop.*`
@@ -100,107 +109,170 @@ object ConnectLayout {
     if (!fs.rename(temp(obj), obj) && !(fs.delete(obj, false) && fs.rename(temp(obj), obj)))
       throw new IOException(s"Connect sink could not publish ${temp(obj)} as $obj")
 
-  /** Executor-side JSON object writer for one task's rows (columns
-    * `__partition`, `__key`, `__value`), through `conf` (a [[sinkConf]]
-    * shipped from the driver). Rows are grouped by Kafka-style
-    * partition (hash collisions can co-locate two partitions in one Spark
-    * task — each still writes to its own directory), buffered to
-    * `flushSize`, and flushed as a data object + aligned keys object,
-    * keys first, so a visible data object always has its keys.
-    * Buffers hold at most flushSize small JSON strings per partition —
-    * executor memory is bounded regardless of batch size.
-    */
-  def writeJsonObjects(rows: Iterator[Row], conf: Configuration, baseDir: String,
-                       topic: String, flushSize: Int, batchId: Long): Unit = {
-    val fs = new Path(baseDir).getFileSystem(conf)
-    def put(obj: Path, lines: Iterator[String]): Unit = {
-      val out = fs.create(temp(obj), true) // creates partition=<p> on first use
-      try out.write(lines.mkString("", "\n", "\n").getBytes(UTF_8))
-      finally out.close()
-      publish(fs, obj)
-    }
-    var first = true
-    var pIdx = 0; var kIdx = 0; var vIdx = 0
-    val bufs = scala.collection.mutable.Map
-      .empty[Int, (ArrayBuffer[(String, String)], Long)]
-    def flush(p: Int): Unit = bufs.get(p).foreach { case (buf, start) =>
-      if (buf.nonEmpty) {
-        val dir = new Path(s"$baseDir/partition=$p")
-        val name = s"$topic+$p+${startOffset(batchId, 0, 1, start)}"
-        put(new Path(dir, s"$name.keys.json"), buf.iterator.map(_._1))
-        put(new Path(dir, s"$name.json"), buf.iterator.map(_._2))
-        bufs(p) = (buf.empty, start + buf.length)
-      }
-    }
-    rows.foreach { r =>
-      if (first) {
-        pIdx = r.fieldIndex("__partition")
-        kIdx = r.fieldIndex("__key")
-        vIdx = r.fieldIndex("__value")
-        first = false
-      }
-      val p = r.getInt(pIdx)
-      val (buf, _) = bufs.getOrElseUpdate(p, (ArrayBuffer.empty[(String, String)], 0L))
-      buf += ((r.getString(kIdx), r.getString(vIdx)))
-      if (buf.length >= flushSize) flush(p)
-    }
-    bufs.keys.foreach(flush)
+  /** A Connect sink's object format (`format.class`). */
+  sealed trait Format extends Serializable {
+    /** An object's files, `<name>.<suffix>`, in publish order. */
+    private[streaming] def suffixes: Seq[String]
+    /** The rows the tasks write, and the Hadoop conf they write them with. */
+    private[streaming] def prepare(batch: DataFrame): (DataFrame, Configuration)
+    /** The Kafka partition of one of [[prepare]]'s rows. */
+    private[streaming] def partition(row: InternalRow): Int
+    /** A task's writer of this format's objects on `fs`. */
+    private[streaming] def task(fs: FileSystem, conf: Configuration): TaskObjects
   }
 
-  /** Parquet object writer for an unkeyed single-partition topic (the
-    * `jovens` shape): every Spark partition of `batch` writes its rows as
-    * flush-size objects straight into `partition=0`, under the names of
-    * its slot. Before the job, Spark's parquet write support is only
-    * configured on [[sinkConf]] (`ParquetFileFormat.prepareWrite`: schema,
-    * codec, timestamp type) and shipped; only the tasks touch files.
+  /** `ParquetFormat` for an unkeyed single-partition topic (the `jovens`
+    * shape): the batch's rows as they are, all in `partition=0`. Before the
+    * job, Spark's parquet write support is only configured on [[sinkConf]]
+    * (`ParquetFileFormat.prepareWrite`: schema, codec, timestamp type).
     */
-  def writeParquetObjects(batch: DataFrame, topicDir: String, topic: String,
-                          flushSize: Int, batchId: Long): Unit = {
+  case object Parquet extends Format {
+    private[streaming] def suffixes: Seq[String] = Seq("parquet")
+    private[streaming] def prepare(batch: DataFrame): (DataFrame, Configuration) = {
+      val job = Job.getInstance(sinkConf(batch.sparkSession))
+      new ParquetFileFormat().prepareWrite(batch.sparkSession, job, Map.empty, batch.schema)
+      (batch, job.getConfiguration)
+    }
+    private[streaming] def partition(row: InternalRow): Int = 0
+    private[streaming] def task(fs: FileSystem, conf: Configuration): TaskObjects =
+      new ParquetObjects(fs, conf)
+  }
+
+  /** `JsonFormat` with `store.kafka.keys=true` (the `idadecont` shape): a
+    * record's value is the JSON of its row, its key the JSON of `keyCols`,
+    * and its partition the key's md5 hash mod `numPartitions`, the
+    * off-broker analog of Kafka's key partitioner. The three are Catalyst
+    * expressions over the batch, so they run in the batch's last stage.
+    */
+  final case class Json(keyCols: Seq[String], numPartitions: Int) extends Format {
+    require(numPartitions > 0, s"numPartitions must be > 0, got $numPartitions")
+    private[streaming] def suffixes: Seq[String] = Seq("keys.json", "json")
+    private[streaming] def prepare(batch: DataFrame): (DataFrame, Configuration) = {
+      val keyed = batch.select(to_json(struct(keyCols.map(col): _*)).as("key"),
+        to_json(struct(batch.columns.toIndexedSeq.map(col): _*)).as("value"))
+      (keyed.select(pmod(DetHash.base60(col("key")), lit(numPartitions)).cast("int"),
+        col("key"), col("value")), sinkConf(batch.sparkSession))
+    }
+    private[streaming] def partition(row: InternalRow): Int = row.getInt(0)
+    private[streaming] def task(fs: FileSystem, conf: Configuration): TaskObjects =
+      new JsonObjects(fs)
+  }
+
+  /** One object being written. */
+  private[streaming] trait ObjectOut {
+    def write(row: InternalRow): Unit
+    def close(): Unit
+  }
+
+  /** A task's writer of one format's objects: `open` starts an object on
+    * the temp names of its files; `release` runs once, at the task's end.
+    */
+  private[streaming] trait TaskObjects {
+    def open(temps: Seq[Path]): ObjectOut
+    def release(): Unit = ()
+  }
+
+  /** Writes `batch` as `format` objects of at most `flushSize` records
+    * into `<topicDir>/partition=<p>/`, from the tasks of one job over the
+    * batch's own rows (`queryExecution.toRdd`): the formats' projections
+    * run in the batch's last stage, and the driver touches no file.
+    */
+  def writeObjects(batch: DataFrame, format: Format, topicDir: String, topic: String,
+                   flushSize: Int, batchId: Long): Unit = {
     require(flushSize > 0, s"flushSize must be > 0, got $flushSize")
-    val spark = batch.sparkSession
-    val job = Job.getInstance(sinkConf(spark))
-    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, batch.schema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
-    val rows = batch.queryExecution.toRdd
+    val (records, hadoopConf) = format.prepare(batch)
+    val conf = new SerializableConfiguration(hadoopConf)
+    val rows = records.queryExecution.toRdd
     val slots = rows.getNumPartitions
-    val dir = s"$topicDir/partition=0"
-    spark.sparkContext.runJob(rows, (task: TaskContext, it: Iterator[InternalRow]) =>
-      writeParquetSlot(it, conf.value, dir, topic, flushSize, batchId, task.partitionId, slots))
+    batch.sparkSession.sparkContext.runJob(rows, (task: TaskContext, it: Iterator[InternalRow]) =>
+      writeSlot(it, format, conf.value, topicDir, topic, flushSize, batchId, task.partitionId, slots))
   }
 
-  /** One task of [[writeParquetObjects]]: one write support and one codec
-    * factory for the task, one parquet-hadoop `ParquetWriter` per object.
-    * The objects are published once the partition is written, so a task
-    * that fails (a slot overrun included) publishes none and deletes its
-    * temps. Writer properties are parquet-hadoop's defaults, which are
-    * Spark's for a session that sets no `parquet.*` keys.
+  /** A Kafka partition's objects in one task: `index` records precede its
+    * open object `out`, which holds `n`.
     */
-  private def writeParquetSlot(rows: Iterator[InternalRow], conf: Configuration, dir: String,
-                               topic: String, flushSize: Int, batchId: Long,
-                               slot: Int, slots: Int): Unit = if (rows.hasNext) {
-    val fs = new Path(dir).getFileSystem(conf)
-    val support = new TaskWriteSupport
-    val codecs = new TaskCodecs(conf)
-    val codec = CompressionCodecName.fromConf(conf.get(ParquetOutputFormat.COMPRESSION))
-    val objects = ArrayBuffer.empty[Path]
+  private final class Part {
+    var index = 0L
+    var n = 0
+    var out: ObjectOut = _
+  }
+
+  /** One task of [[writeObjects]]: Spark partition `slot` of `slots` writes
+    * its rows in record order, an object per `flushSize` records of each
+    * Kafka partition, then publishes every file it wrote, or on failure
+    * closes what is open and deletes its temps.
+    */
+  private def writeSlot(rows: Iterator[InternalRow], format: Format, conf: Configuration,
+                        topicDir: String, topic: String, flushSize: Int, batchId: Long,
+                        slot: Int, slots: Int): Unit = if (rows.hasNext) {
+    val fs = new Path(topicDir).getFileSystem(conf)
+    val objects = format.task(fs, conf)
+    val parts = mutable.HashMap.empty[Int, Part]
+    val files = ArrayBuffer.empty[Path] // in publish order
     try {
-      var index = 0L
-      while (rows.hasNext) {
-        val obj = new Path(dir, s"$topic+0+${startOffset(batchId, slot, slots, index)}.parquet")
-        objects += obj
-        val writer = new ObjectWriter(new FsOutputFile(fs, temp(obj)), support)
-          .withConf(conf).withCodecFactory(codecs).withCompressionCodec(codec)
-          .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
-        try {
-          var n = 0
-          while (n < flushSize && rows.hasNext) { writer.write(rows.next()); n += 1 }
-          index += n
-        } finally writer.close()
+      rows.foreach { row =>
+        val p = format.partition(row)
+        val part = parts.getOrElseUpdate(p, new Part)
+        if (part.out == null) {
+          val name = s"$topic+$p+${startOffset(batchId, slot, slots, part.index)}"
+          val obj = format.suffixes.map(s => new Path(s"$topicDir/partition=$p", s"$name.$s"))
+          files ++= obj
+          part.out = objects.open(obj.map(temp))
+        }
+        part.out.write(row)
+        part.n += 1
+        if (part.n == flushSize) {
+          part.out.close()
+          part.out = null
+          part.index += part.n
+          part.n = 0
+        }
       }
-      objects.foreach(publish(fs, _))
+      parts.values.foreach { part => if (part.out != null) part.out.close(); part.out = null }
+      files.foreach(publish(fs, _))
     } catch {
-      case NonFatal(e) => objects.foreach(o => fs.delete(temp(o), false)); throw e
-    } finally codecs.releaseAll()
+      case NonFatal(e) =>
+        parts.values.foreach(part => if (part.out != null) Try(part.out.close()))
+        files.foreach(f => Try(fs.delete(temp(f), false)))
+        throw e
+    } finally objects.release()
+  }
+
+  /** [[Parquet]]'s task writer: one write support and one codec factory
+    * for the task, one parquet-hadoop `ParquetWriter` per object. Writer
+    * properties are parquet-hadoop's defaults, which are Spark's for a
+    * session that sets no `parquet.*` keys.
+    */
+  private final class ParquetObjects(fs: FileSystem, conf: Configuration) extends TaskObjects {
+    private val support = new TaskWriteSupport
+    private val codecs = new TaskCodecs(conf)
+    private val codec = CompressionCodecName.fromConf(conf.get(ParquetOutputFormat.COMPRESSION))
+    def open(temps: Seq[Path]): ObjectOut = {
+      val writer = new ObjectWriter(new FsOutputFile(fs, temps.head), support)
+        .withConf(conf).withCodecFactory(codecs).withCompressionCodec(codec)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+      new ObjectOut {
+        def write(row: InternalRow): Unit = writer.write(row)
+        def close(): Unit = writer.close()
+      }
+    }
+    override def release(): Unit = codecs.releaseAll()
+  }
+
+  /** [[Json]]'s task writer: a keys and a data line stream per object. */
+  private final class JsonObjects(fs: FileSystem) extends TaskObjects {
+    def open(temps: Seq[Path]): ObjectOut = {
+      val keys = fs.create(temps(0), true) // creates partition=<p> on first use
+      val values = try fs.create(temps(1), true) catch { case NonFatal(e) => keys.close(); throw e }
+      new ObjectOut {
+        def write(row: InternalRow): Unit = {
+          line(keys, row.getUTF8String(1))
+          line(values, row.getUTF8String(2))
+        }
+        def close(): Unit = try keys.close() finally values.close()
+      }
+    }
+    private def line(out: OutputStream, s: UTF8String): Unit = { s.writeTo(out); out.write('\n') }
   }
 
   /** Spark's parquet write support, initialised on its first writer only:

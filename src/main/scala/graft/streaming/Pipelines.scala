@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import org.apache.spark.util.SerializableConfiguration
 import graft.operators.ReferenceQueries
 
 /** Minimal event row for the custom-state operator. */
@@ -45,8 +44,6 @@ case class SessionBuffer(sessions: Seq[UserSession])
   *    changelog lands via foreachBatch, keys (idadecat, window bounds)
   *    kept as columns exactly like the S3 JSON sink stored Kafka keys
   *    (reference `connect_s3_sink_count.config:18`).
-  *  - flush.size=10 (reference `connect_s3_sink_jovens.config:6`) ≈
-  *    `maxRecordsPerFile` 10 per micro-batch file.
   */
 object Pipelines {
 
@@ -122,39 +119,6 @@ object Pipelines {
     }
   }
 
-  /** K3: append-mode parquet sink (`jovens` → data lake), 10-record files
-    * like the reference's flush.size. Starts
-    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
-    * a `file:` checkpoint, session conf restored even if `start()` throws.
-    */
-  def startParquetSink(df: DataFrame, path: String, checkpoint: String,
-                       trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startCheckpointed(df, checkpoint)(_
-      .format("parquet")
-      .option("path", path)
-      .option("maxRecordsPerFile", 10)
-      .outputMode(OutputMode.Append)
-      .trigger(trigger))
-
-  /** K4: update-mode windowed-count changelog → JSON-lines files.
-    * File sinks are append-only, so each micro-batch's updated rows land
-    * as a changelog (per-batch, vs the reference's per-record). Each batch
-    * OVERWRITES its own `batch_id=N` partition directory, so a replayed
-    * micro-batch after a failure rewrites identical files instead of
-    * double-appending — the sink is idempotent per batch (exactly-once
-    * directory contents, not merely at-least-once appends). Starts
-    * through [[startCheckpointed]], under its lock: no `chmod` spawns for
-    * a `file:` checkpoint, session conf restored even if `start()` throws.
-    */
-  def startJsonChangelogSink(agg: DataFrame, path: String, checkpoint: String,
-                             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startCheckpointed(agg, checkpoint)(_
-      .outputMode(OutputMode.Update)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").json(s"$path/batch_id=$batchId")
-      })
-
   // ----------------------------- Connect S3 object-layout sinks (K3/K4)
 
   /** K3 with the reference's EXACT S3 object layout
@@ -163,13 +127,10 @@ object Pipelines {
     * `<s3Dir>/<topicsDir>/<topic>/partition=<p>/` named
     * `<topic>+<partition>+<startOffset>.parquet` — the Confluent S3 sink's
     * DefaultPartitioner path and object naming. `jovens` is unkeyed on a
-    * single-partition topic, so everything is partition 0. The start
-    * offset is modeled as `batchId·10⁶` plus the first record's index in
-    * its Spark partition's slot of those names (there is no Kafka offset
-    * off-broker); deterministic per batch, so a replayed micro-batch
-    * overwrites its own objects — idempotent like the real sink's
-    * offset-derived names. Each task of the micro-batch writes its objects
-    * straight into `partition=0` ([[ConnectLayout.writeParquetObjects]]);
+    * single-partition topic, so everything is partition 0. Each task of
+    * the micro-batch writes its objects under names derived from the batch
+    * id, so a replayed micro-batch overwrites its own objects
+    * ([[ConnectLayout.writeObjects]] with [[ConnectLayout.Parquet]]);
     * `flushSize` must be positive. Starts
     * through [[startCheckpointed]], under its lock: no `chmod` spawns for
     * a `file:` checkpoint, session conf restored even if `start()` throws.
@@ -190,8 +151,8 @@ object Pipelines {
     w.outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ConnectLayout.writeParquetObjects(
-          batch, s"$s3Dir/$topicsDir/$topic", topic, flushSize, batchId)
+        ConnectLayout.writeObjects(
+          batch, ConnectLayout.Parquet, s"$s3Dir/$topicsDir/$topic", topic, flushSize, batchId)
       }
 
   /** K4 with the reference's layout AND sidecar key objects
@@ -202,10 +163,10 @@ object Pipelines {
     * record-aligned line by line — exactly how the S3 sink stores Kafka
     * keys as separate objects. Partition = md5-hash of the key mod
     * `numPartitions` (the off-broker analog of Kafka's key partitioner;
-    * deterministic, so results are reproducible). Objects are written
-    * executor-side per partition group — no driver collect at any scale —
-    * through the session's Hadoop conf, shipped to the tasks
-    * ([[ConnectLayout.sinkConf]]). `numPartitions` and `flushSize` must
+    * deterministic, so results are reproducible). The tasks of the
+    * micro-batch's state stage write the objects, with the parquet sink's
+    * naming and publishing ([[ConnectLayout.writeObjects]] with
+    * [[ConnectLayout.Json]]). `numPartitions` and `flushSize` must
     * be positive. Starts
     * through [[startCheckpointed]], under its lock: no `chmod` spawns for
     * a `file:` checkpoint, session conf restored even if `start()` throws.
@@ -215,7 +176,6 @@ object Pipelines {
                            numPartitions: Int = 1, flushSize: Int = 10,
                            topicsDir: String = "raw-data/kafka",
                            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    require(numPartitions > 0, s"numPartitions must be > 0, got $numPartitions")
     require(flushSize > 0, s"flushSize must be > 0, got $flushSize")
     startCheckpointed(agg, checkpoint)(
       connectJsonWriter(s3Dir, topic, keyCols, numPartitions, flushSize, topicsDir, trigger))
@@ -225,23 +185,15 @@ object Pipelines {
   private[graft] def connectJsonWriter(s3Dir: String, topic: String, keyCols: Seq[String],
                                        numPartitions: Int, flushSize: Int,
                                        topicsDir: String, trigger: Trigger)(
-      w: DataStreamWriter[Row]): DataStreamWriter[Row] =
+      w: DataStreamWriter[Row]): DataStreamWriter[Row] = {
+    val format = ConnectLayout.Json(keyCols, numPartitions)
     w.outputMode(OutputMode.Update)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keyed = batch.select(
-          to_json(struct(keyCols.map(col): _*)).as("__key"),
-          to_json(struct(batch.columns.toIndexedSeq.map(col): _*)).as("__value"))
-          .withColumn("__partition", pmod(
-            graft.functions.DetHash.base60(col("__key")),
-            lit(numPartitions)).cast("int"))
-        val base = s"$s3Dir/$topicsDir/$topic"
-        val conf = new SerializableConfiguration(ConnectLayout.sinkConf(batch.sparkSession))
-        keyed.repartition(numPartitions, col("__partition"))
-          .foreachPartition { (it: Iterator[Row]) =>
-            ConnectLayout.writeJsonObjects(it, conf.value, base, topic, flushSize, batchId)
-          }
+        ConnectLayout.writeObjects(
+          batch, format, s"$s3Dir/$topicsDir/$topic", topic, flushSize, batchId)
       }
+  }
 
   /** S4/P3: console push-query (`select * ... emit changes` /
     * `print <topic>`, reference README.md:180,204).
@@ -1267,11 +1219,10 @@ object Pipelines {
     * One source pass per micro-batch (the decoded frame is cached for
     * the two writes), and both outputs are idempotent per batch: each
     * micro-batch OVERWRITES its own `batch_id=N` directory, so failure
-    * replay rewrites identical files — the same exactly-once-directory
-    * discipline as [[startJsonChangelogSink]]. At 100 TB the decode is a
-    * narrow codegen'd projection (no shuffle, no registry call on the
-    * hot path); throughput is bounded by the parquet write, exactly as
-    * it should be.
+    * replay rewrites identical files instead of appending them twice.
+    * At 100 TB the decode is a narrow codegen'd projection (no shuffle,
+    * no registry call on the hot path); throughput is bounded by the
+    * parquet write, exactly as it should be.
     *
     * `records` must carry the Kafka wire column `value: binary`
     * ([[kafkaAvroSourceEvolving]]'s input shape, MemoryStream in tests). Starts

@@ -128,7 +128,7 @@ class CharLshWidthRecallSpec extends SparkSpec {
       "oversized caps clamp to the signature")
   }
 
-  test("the capped schedule's relation IS charLshPairsWith at the capped width (recall curve carries over)") {
+  test("the capped schedule's relation IS charLshPairs at the capped width (recall curve carries over)") {
     // charLshPairsAuto(maxRowsPerBand = rp) delegates to charLshPairs
     // at width cappedRowsPerBand(n, rp) — the same banded relation this
     // spec's curve is measured on — so the pinned recall at width rp is

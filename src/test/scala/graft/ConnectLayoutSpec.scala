@@ -15,7 +15,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.functions.{AvroBinary, AvroCodec}
+import graft.functions.{AvroBinary, AvroCodec, DetHash}
 import graft.streaming.{ConnectLayout, Pipelines, PosixLocalFileSystem}
 
 /** The raw local file system under the made-up scheme `sinktest:`. It
@@ -123,6 +123,8 @@ class ConnectLayoutSpec extends SparkSpec {
       s"bad object names: $objects")
     // all 5 JOVEM rows land, flush.size respected per object
     val back = spark.read.parquet(partDir.toString)
+    assert(back.columns.toSeq ==
+      Seq("nome", "telefone", "email", "dt_nascimento", "dt_updt_conv"))
     assert(back.count() == 5)
     objects.foreach { o =>
       assert(spark.read.parquet(partDir.resolve(o).toString).count() <= 2)
@@ -238,132 +240,151 @@ class ConnectLayoutSpec extends SparkSpec {
       Seq("idadecat"), tmpDir("graft_ckpz_"), numPartitions = 0)).contains("numPartitions"))
   }
 
-  /** The refusal of an object name in the next batch's range. */
-  private def assertStrideRefusal(e: java.io.IOException, batchId: Long): Unit = {
-    assert(e.getMessage.contains(s"batch $batchId"), e.getMessage)
-    assert(e.getMessage.contains("stride 1000000"), e.getMessage)
-  }
-
-  /** The parquet writer's fixture: a 3-partition batch of 25 rows (8, 8
-    * and 9 per partition) written at flushSize 4 into `<topicDir>/partition=0`.
+  /** A Connect object format under the writer's specs: `format(n)` spreads
+    * records over `n` Kafka partitions by the hash of their key `{"id":<id>}`
+    * (the parquet format keeps them all in partition 0); `exts` are an
+    * object's file extensions, its data object's first; `read` gives back
+    * the ids of the object at a path without its extension.
     */
-  private def writeParquetFixture(topicDir: String, batchId: Long): java.nio.file.Path = {
-    val batch = spark.range(0, 25, 1, 3).select($"id", ($"id" * 3).cast("string").as("s"))
+  private case class ObjectCase(name: String, topic: String, partitions: Int, exts: Seq[String],
+                                format: Int => ConnectLayout.Format, read: String => Seq[Long]) {
+    def partitionOf(id: Long): Int = (DetHash.base60(s"""{"id":$id}""") % partitions).toInt
+  }
+
+  private val JsonRecord = """\{"id":(\d+),"s":"(\d+)"\}""".r
+
+  private val objectCases = Seq(
+    ObjectCase("parquet", "jovens", 1, Seq("parquet"), _ => ConnectLayout.Parquet, base =>
+      spark.read.parquet(s"$base.parquet").as[(Long, String)].collect().toSeq.map { case (id, s) =>
+        assert(s == (id * 3).toString); id
+      }),
+    ObjectCase("json", "idadecont", 2, Seq("json", "keys.json"), ConnectLayout.Json(Seq("id"), _),
+      base => {
+        val ids = lines(Paths.get(s"$base.json")).map {
+          case JsonRecord(id, s) => assert(s.toLong == id.toLong * 3); id.toLong
+          case line => fail(s"bad record $line")
+        }
+        // the keys object is record-aligned with its data object
+        assert(lines(Paths.get(s"$base.keys.json")) == ids.map(id => s"""{"id":$id}"""))
+        ids
+      }))
+
+  /** The writer's fixture: a 3-partition batch of 25 rows (8, 8 and 9 per
+    * partition), written at flushSize 4 into `topicDir` over the case's
+    * Kafka partitions.
+    */
+  private def fixture = spark.range(0, 25, 1, 3).select($"id", ($"id" * 3).cast("string").as("s"))
+
+  private def writeFixture(c: ObjectCase, topicDir: String, batchId: Long): Unit = {
+    val batch = fixture
     assert(batch.rdd.getNumPartitions == 3)
-    ConnectLayout.writeParquetObjects(batch, topicDir, "jovens", flushSize = 4, batchId)
-    Paths.get(topicDir, "partition=0")
+    ConnectLayout.writeObjects(batch, c.format(c.partitions), topicDir, c.topic, flushSize = 4, batchId)
   }
 
-  /** Visible objects of a directory by start offset, in name order. */
-  private def parquetObjects(dir: java.nio.file.Path): Seq[(Long, java.nio.file.Path)] =
-    Files.list(dir).iterator().asScala.toSeq
-      .filterNot(_.getFileName.toString.startsWith("."))
-      .map { p =>
-        val name = p.getFileName.toString
-        assert(name.matches("jovens\\+0\\+\\d+\\.parquet"), s"bad object name $name")
-        (name.stripPrefix("jovens+0+").stripSuffix(".parquet").toLong, p)
-      }.sortBy(_._1)
+  /** Each Spark partition's ids of the fixture, in record order. */
+  private lazy val fixtureSlots: Seq[Seq[Long]] =
+    fixture.select(spark_partition_id(), $"id").as[(Int, Long)].collect().toSeq
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1).map(_._2)
 
-  private def ids(obj: java.nio.file.Path): Seq[Long] =
-    spark.read.parquet(obj.toString).as[(Long, String)].collect().toSeq.map { case (id, s) =>
-      assert(s == (id * 3).toString); id
+  /** The fixture's objects in `partition=p` of batch `batchId`, by start
+    * offset: slot i of 3 starts at `batchId·10⁶ + i·⌊10⁶/3⌋`, and its
+    * records in partition p fill objects of 4 in record order.
+    */
+  private def expectedObjects(c: ObjectCase, p: Int, batchId: Long): Seq[(Long, Seq[Long])] =
+    fixtureSlots.zipWithIndex.flatMap { case (ids, slot) =>
+      ids.filter(c.partitionOf(_) == p).grouped(4).zipWithIndex.map { case (objIds, k) =>
+        (batchId * 1000000L + slot * 333333L + k * 4L, objIds)
+      }
     }
 
-  test("parquet objects: names fall in each partition's slot, in record order") {
-    val part0 = writeParquetFixture(tmpDir("graft_s3n_") + "/jovens", batchId = 7)
-    val objs = parquetObjects(part0)
-    // slot i of 3 starts at 7·10⁶ + i·⌊10⁶/3⌋; its objects at first-record
-    // indexes 0 and 4 (8 rows), and 8 too in the last partition (9 rows)
-    val expected = for ((slot, n) <- Seq(0 -> 8, 1 -> 8, 2 -> 9); i <- 0 until n by 4)
-      yield 7000000L + slot * 333333L + i
-    assert(objs.map(_._1) == expected)
-    // read in name order, the objects give back the batch's records in order
-    assert(objs.flatMap { case (_, o) => ids(o) } == (0L until 25L))
+  /** The fixture's Kafka partitions. */
+  private def fixturePartitions(c: ObjectCase): Seq[Int] =
+    fixtureSlots.flatten.map(c.partitionOf).distinct.sorted
+
+  /** Visible objects of `partition=p` by start offset, each with its ids;
+    * every name is `<topic>+<p>+<offset>.<ext>`, and each data object has
+    * its other files.
+    */
+  private def readObjects(c: ObjectCase, topicDir: String, p: Int): Seq[(Long, Seq[Long])] = {
+    val dir = Paths.get(topicDir, s"partition=$p")
+    val Name = s"""\\Q${c.topic}+$p+\\E(\\d+)\\.(.+)""".r
+    val byExt = Files.list(dir).iterator().asScala.toSeq.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).map {
+        case n @ Name(offset, ext) => assert(c.exts.contains(ext), s"bad object name $n"); (ext, offset.toLong)
+        case n => fail(s"bad object name $n")
+      }.groupMap(_._1)(_._2)
+    val offsets = byExt.getOrElse(c.exts.head, Seq.empty).sorted
+    c.exts.foreach(e => assert(byExt.getOrElse(e, Seq.empty).sorted == offsets, s"unpaired .$e objects"))
+    offsets.map(off => off -> c.read(dir.resolve(s"${c.topic}+$p+$off").toString))
   }
 
-  test("parquet objects: each holds at most flushSize rows, and together the input") {
-    val objs = parquetObjects(writeParquetFixture(tmpDir("graft_s3f_") + "/jovens", batchId = 0))
-    val sizes = objs.map { case (_, o) => ids(o).size }
-    assert(sizes.forall(n => n >= 1 && n <= 4), s"$sizes")
-    assert(objs.flatMap { case (_, o) => ids(o) }.sorted == (0L until 25L))
-  }
-
-  test("parquet objects: a replayed batchId rewrites the same names and rows") {
-    val topicDir = tmpDir("graft_s3p_") + "/jovens"
-    def snapshot(dir: java.nio.file.Path) = parquetObjects(dir).map { case (off, o) => off -> ids(o) }
-    val first = snapshot(writeParquetFixture(topicDir, batchId = 2))
-    val replay = snapshot(writeParquetFixture(topicDir, batchId = 2))
-    assert(first.nonEmpty && replay == first)
-  }
-
-  test("parquet objects: a slot or batch-range overrun throws, no object visible") {
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
-    // 3 partitions of 333,334 rows at flushSize 333,333: each one's second
-    // object would be named past its ⌊10⁶/3⌋-name slot; then one partition
-    // of 10⁶ + 1 rows at flushSize 10⁶, whose second object is batch 5's first
-    Seq((spark.range(0, 3 * 333334L, 1, 3), 333333, "of 3 (333333 names", "slot"),
-        (spark.range(0, 1000001L, 1, 1), 1000000, "slot 0 of 1 (1000000 names", "range")).foreach {
-      case (batch, flushSize, slot, tag) =>
-        val topicDir = tmpDir(s"graft_s3${tag}_") + "/jovens"
-        val e = intercept[Exception](ConnectLayout.writeParquetObjects(
-          batch.toDF("id"), topicDir, "jovens", flushSize, batchId = 4))
-        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-        assert(msgs.exists(m => m != null && m.contains("batch 4") && m.contains(slot) &&
-          m.contains("stride 1000000")), s"$tag: ${e.getMessage}")
-        val part0 = Paths.get(topicDir, "partition=0")
-        def entries = if (!Files.exists(part0)) Seq.empty
-          else Files.list(part0).iterator().asScala.map(_.getFileName.toString).toSeq
-        assert(entries.forall(_.startsWith(".")), s"$tag: visible objects $entries")
-        // every failed task deletes its temps; the job may fail before the last one finishes
-        eventually(timeout(60.seconds), interval(200.millis))(assert(entries.isEmpty, s"$tag"))
+  objectCases.foreach { c =>
+    test(s"${c.name} objects: names fall in each partition's slot, in record order") {
+      val topicDir = tmpDir("graft_s3n_") + "/" + c.topic
+      writeFixture(c, topicDir, batchId = 7)
+      val parts = fixturePartitions(c)
+      assert(parts == (0 until c.partitions))
+      assert(Files.list(Paths.get(topicDir)).iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
+        parts.map(p => s"partition=$p"))
+      // read in name order, each partition's objects give back its records in order
+      parts.foreach(p => assert(readObjects(c, topicDir, p) == expectedObjects(c, p, 7), s"partition $p"))
     }
-  }
 
-  test("parquet objects: no temp, scratch, _temporary or _SUCCESS entry remains") {
-    val topicDir = tmpDir("graft_s3l_") + "/jovens"
-    writeParquetFixture(topicDir, batchId = 0)
-    writeParquetFixture(topicDir, batchId = 1)
-    val names = walk(Paths.get(topicDir)).drop(1).map(p => Paths.get(topicDir).relativize(p).toString)
-    val objects = names.filter(_.matches("partition=0/jovens\\+0\\+\\d+\\.parquet"))
-    assert(objects.size == 14)
-    // the partition directory, its objects and their .crc sidecars: nothing else
-    assert(names.toSet == Set("partition=0") ++ objects ++
-      objects.map(o => o.replace("partition=0/", "partition=0/.") + ".crc"), s"$names")
-  }
+    test(s"${c.name} objects: each holds at most flushSize rows, and together the input") {
+      val topicDir = tmpDir("graft_s3f_") + "/" + c.topic
+      writeFixture(c, topicDir, batchId = 0)
+      val objs = fixturePartitions(c).flatMap(readObjects(c, topicDir, _)).map(_._2)
+      assert(objs.forall(o => o.size >= 1 && o.size <= 4), s"${objs.map(_.size)}")
+      assert(objs.flatten.sorted == (0L until 25L))
+    }
 
-  test("json objects: a partition whose offsets reach the next batch's range throws") {
-    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("__partition", IntegerType),
-      StructField("__key", StringType), StructField("__value", StringType)))
-    val row: org.apache.spark.sql.Row = new GenericRowWithSchema(Array[Any](0, "k", "v"), schema)
-    val base = tmpDir("graft_s3r_") + "/idadecont"
-    // 10^6 + 1 records in one partition: the last starts at offset 10^6, batch 4's first name
-    val e = intercept[java.io.IOException](ConnectLayout.writeJsonObjects(
-      Iterator.fill(1000001)(row), ConnectLayout.sinkConf(spark), base, "idadecont",
-      flushSize = 1000000, batchId = 3))
-    assertStrideRefusal(e, 3)
-    val names = Files.list(Paths.get(base, "partition=0")).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
-    assert(names == Set("idadecont+0+3000000.json", "idadecont+0+3000000.keys.json"))
-  }
+    test(s"${c.name} objects: a replayed batchId rewrites the same names and rows") {
+      val topicDir = tmpDir("graft_s3p_") + "/" + c.topic
+      def snapshot() = {
+        writeFixture(c, topicDir, batchId = 2)
+        fixturePartitions(c).map(p => p -> readObjects(c, topicDir, p))
+      }
+      val first = snapshot()
+      assert(first.flatMap(_._2).nonEmpty && snapshot() == first)
+    }
 
-  test("json objects: no dot-temp file survives a batch") {
-    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("__partition", IntegerType),
-      StructField("__key", StringType), StructField("__value", StringType)))
-    val rows = (0 until 7).map(i =>
-      new GenericRowWithSchema(Array[Any](i % 2, s"k$i", s"v$i"), schema): org.apache.spark.sql.Row)
-    val base = tmpDir("graft_s3j_") + "/idadecont"
-    ConnectLayout.writeJsonObjects(rows.iterator, ConnectLayout.sinkConf(spark), base,
-      "idadecont", flushSize = 2, batchId = 0)
-    val files = walk(Paths.get(base)).filter(Files.isRegularFile(_)).map(_.getFileName.toString)
-    val (hidden, objs) = files.partition(_.startsWith("."))
-    // partition 0 holds 4 records, partition 1 holds 3: two data + two keys objects each
-    assert(objs.size == 8 && objs.forall(_.matches("idadecont\\+[01]\\+\\d+(\\.keys)?\\.json")), s"$objs")
-    assert(hidden.toSet == objs.map(o => s".$o.crc").toSet, s"$hidden")
+    test(s"${c.name} objects: a slot or batch-range overrun throws, no object visible") {
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      // 3 partitions of 333,334 rows at flushSize 333,333: each one's second
+      // object would be named past its ⌊10⁶/3⌋-name slot; then one partition
+      // of 10⁶ + 1 rows at flushSize 10⁶, whose second object is batch 5's first
+      Seq((spark.range(0, 3 * 333334L, 1, 3), 333333, "of 3 (333333 names", "slot"),
+          (spark.range(0, 1000001L, 1, 1), 1000000, "slot 0 of 1 (1000000 names", "range")).foreach {
+        case (batch, flushSize, slot, tag) =>
+          val topicDir = tmpDir(s"graft_s3${tag}_") + "/" + c.topic
+          val e = intercept[Exception](ConnectLayout.writeObjects(
+            batch.toDF("id"), c.format(1), topicDir, c.topic, flushSize, batchId = 4))
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+          assert(msgs.exists(m => m != null && m.contains("batch 4") && m.contains(slot) &&
+            m.contains("stride 1000000")), s"$tag: ${e.getMessage}")
+          val part0 = Paths.get(topicDir, "partition=0")
+          def entries = if (!Files.exists(part0)) Seq.empty
+            else Files.list(part0).iterator().asScala.map(_.getFileName.toString).toSeq
+          assert(entries.forall(_.startsWith(".")), s"$tag: visible objects $entries")
+          // every failed task deletes its temps; the job may fail before the last one finishes
+          eventually(timeout(60.seconds), interval(200.millis))(assert(entries.isEmpty, s"$tag"))
+      }
+    }
+
+    test(s"${c.name} objects: no temp, scratch, _temporary or _SUCCESS entry remains") {
+      val topicDir = tmpDir("graft_s3l_") + "/" + c.topic
+      writeFixture(c, topicDir, batchId = 0)
+      writeFixture(c, topicDir, batchId = 1)
+      val names = walk(Paths.get(topicDir)).drop(1).map(p => Paths.get(topicDir).relativize(p).toString)
+      val dirs = fixturePartitions(c).map(p => s"partition=$p")
+      val objects = for (b <- Seq(0L, 1L); p <- fixturePartitions(c);
+                         (offset, _) <- expectedObjects(c, p, b); ext <- c.exts)
+        yield s"partition=$p/${c.topic}+$p+$offset.$ext"
+      // the partition directories, their objects and their .crc sidecars: nothing else
+      assert(names.toSet == (dirs ++ objects ++
+        objects.map(o => o.replaceFirst("/", "/.") + ".crc")).toSet, s"$names")
+    }
   }
 
   test("PosixLocalFileSystem matches chmod(1) on sticky modes and in setgid directories") {

@@ -86,44 +86,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("K3 parquet sink: appends files readable as the jovens schema") {
-    val dir = tempDir("graft_k3_").toString
-    val mem = MemoryStream[Cust]
-    val q = Pipelines.startParquetSink(Pipelines.jovens(mem.toDF()),
-      s"$dir/data", s"$dir/ckpt")
-    try {
-      // 25 qualifying rows in ONE micro-batch so the flush-size assertion
-      // below can actually fail if maxRecordsPerFile is dropped
-      val young = (1 to 25).map(i => mkCust(s"y$i", "2001-05-05", i * 1000L))
-      mem.addData(rows ++ young: _*)
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$dir/data")
-      assert(got.columns.toSeq ==
-        Seq("nome", "telefone", "email", "dt_nascimento", "dt_updt_conv"))
-      assert(got.count() == 27) // 2 young of the base rows + 25
-      // flush.size parity: no file may hold more than 10 records
-      val perFile = got
-        .groupBy(org.apache.spark.sql.functions.input_file_name())
-        .count().select("count").as[Long].collect()
-      assert(perFile.forall(_ <= 10))
-      assert(perFile.length >= 3) // 27 rows really did split across files
-    } finally q.stop()
-  }
-
-  test("K4 json changelog sink: update rows + batch id land as json lines") {
-    val dir = tempDir("graft_k4_").toString
-    val mem = MemoryStream[Cust]
-    val q = Pipelines.startJsonChangelogSink(Pipelines.idadecont(mem.toDF()),
-      s"$dir/data", s"$dir/ckpt")
-    try {
-      mem.addData(rows: _*)
-      q.processAllAvailable()
-      val got = spark.read.json(s"$dir/data")
-      assert(got.columns.contains("idadecat") && got.columns.contains("batch_id"))
-      assert(got.count() >= 4)
-    } finally q.stop()
-  }
-
   test("streaming dedup drops within-watermark repeats across batches") {
     val mem = MemoryStream[Cust]
     val deduped = Pipelines.streamingDedup(
