@@ -81,9 +81,9 @@ object Bench {
         "sf" -> JString(sfDir)))))
     }
 
-  /** The session every measurement main builds: `local[n]` with `n`
-    * shuffle partitions, where `n` is `SPARK_GRAFT_CPUS` or, unset, the
-    * host's available processors.
+  /** The session every main builds: `local[n]` with `n` shuffle
+    * partitions, where `n` is `SPARK_GRAFT_CPUS` or, unset, the host's
+    * available processors, and a UTC session time zone (the oracle's).
     */
   private[graft] def localSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -91,6 +91,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

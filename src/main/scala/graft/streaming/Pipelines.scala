@@ -1268,17 +1268,28 @@ object Pipelines {
     * Per micro-batch, one source pass (the decoded frame is persisted for
     * its three consumers), and the whole batch is EXACTLY-ONCE under
     * foreachBatch replay via a staged-commit discipline: the curated rows
-    * are first written to `stage/batch_id=N` (this write doubles as the
-    * plan pin the previous localCheckpoint provided — the upsert
+    * are first written to `stage/run=Q/batch_id=N` (this write doubles as
+    * the plan pin the previous localCheckpoint provided — the upsert
     * overwrites the snapshot files the anti-join scanned), then manifest
     * and snapshot derive from the STAGE, and an `_GRAFT_APPLIED` marker
     * commits the batch. A replay (crash between the snapshot write and
-    * the checkpoint commit) finds the stage `_SUCCESS` and re-drives
-    * manifest + upsert from the staged rows instead of recomputing —
-    * recomputing would anti-join against the already-updated snapshot,
-    * yield an EMPTY curated frame, and overwrite `manifest/batch_id=N`
-    * with nothing, permanently losing that batch's release accounting.
-    * A replay that finds the marker skips the batch outright.
+    * the checkpoint commit) finds the stage's `_GRAFT_STAGED` marker and
+    * re-drives manifest + upsert from the staged rows instead of
+    * recomputing — recomputing would anti-join against the
+    * already-updated snapshot, yield an EMPTY curated frame, and
+    * overwrite `manifest/run=Q/batch_id=N` with nothing, permanently
+    * losing that batch's release accounting. A replay that finds the
+    * applied marker skips the batch outright.
+    *
+    * The run namespace `Q` is Spark's query id: Spark writes it to the
+    * checkpoint's `metadata` file on the first start, reads it back on
+    * every restart, and sets it as the `sql.streaming.queryId` local
+    * property of the thread that runs `foreachBatch`. Batch ids restart
+    * at 0 on a fresh checkpoint, so a fresh checkpoint over an existing
+    * outDir gets a new id and never meets the previous run's markers,
+    * while a restart on the same checkpoint re-drives its own crash
+    * window. A first start over an outDir holding un-namespaced
+    * artifacts fails ([[requireNoLegacyStage]]).
     *
     * Scale shape: decode + gates are narrow codegen'd projections fused
     * into the batch scan; the in-batch dedup is one fp-keyed exchange
@@ -1307,10 +1318,8 @@ object Pipelines {
                              minQuality: Double = 0.7,
                              queryName: String = "reference_topology",
                              trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    import graft.operators.{CorpusOps, TextAnalysis}
     val snapshotDir = s"$outDir/snapshot"
     requireNoLegacyStage(records.sparkSession, outDir, checkpoint)
-    val sid = streamInstanceId(records.sparkSession, checkpoint)
     startCheckpointed(records
       .select(col("value"), graft.functions.AvroCodec.avroDecodeEvolving(
         col("value"), readerSchema, registry, ids).as("r")), checkpoint)(_
@@ -1318,33 +1327,34 @@ object Pipelines {
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val queryId = batch.sparkSession.sparkContext
+          .getLocalProperty("sql.streaming.queryId")
+        require(queryId != null,
+          "Spark set no sql.streaming.queryId on the foreachBatch thread")
         referenceTopologyBatch(batch, batchId, outDir, snapshotDir,
-          buckets, lang, minQuality, streamId = sid)
+          buckets, lang, minQuality, streamId = queryId)
       })
   }
 
   /** UPGRADE GUARD: pre-namespace layouts wrote `stage/batch_id=N`
-    * directly under outDir (no `run=` segment). An id-namespaced restart
-    * against such an outDir cannot adopt them — the replay probe would
-    * look under `run=<id>/`, recompute a batch whose stage already
-    * exists (the empty-curated-frame hazard the staged-commit protocol
-    * documents), and its manifests would double-count next to the legacy
-    * `manifest/batch_id=N` dirs. If the CHECKPOINT already carries an id
-    * the stream was born namespaced and legacy dirs belong to some other
-    * producer — fine; but a first id mint over legacy artifacts fails
-    * loudly naming the migration (drain and commit the stream under the
-    * pre-upgrade binary, or move the legacy stage/manifest dirs aside)
-    * instead of silently starting a second accounting namespace.
+    * directly under outDir (no `run=` segment). A namespaced run cannot
+    * adopt them: the replay probe looks under `run=<id>/`, so it would
+    * recompute a batch whose stage already exists (the empty-curated-frame
+    * hazard the staged-commit protocol documents), and its manifests would
+    * double-count next to the legacy `manifest/batch_id=N` dirs. A
+    * checkpoint that already holds Spark's `metadata` file was started
+    * namespaced, and legacy dirs next to it belong to some other producer.
+    * A first start over legacy artifacts fails loudly, naming the
+    * migration, instead of silently opening a second accounting namespace.
     */
   private[graft] def requireNoLegacyStage(spark: SparkSession,
                                           outDir: String,
                                           checkpoint: String): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val started = p(s"$checkpoint/metadata")
+    if (started.getFileSystem(hconf).exists(started)) return
     val fs = p(outDir).getFileSystem(hconf)
-    val minted = p(s"$checkpoint/_GRAFT_STREAM_ID")
-      .getFileSystem(hconf).exists(p(s"$checkpoint/_GRAFT_STREAM_ID"))
-    if (minted) return
     val legacy = Seq("stage", "manifest", "dead_letter").flatMap { d =>
       val dir = p(s"$outDir/$d")
       if (!fs.exists(dir)) Nil
@@ -1356,143 +1366,10 @@ object Pipelines {
       s"outDir '$outDir' holds pre-upgrade artifacts written without a " +
         s"run= namespace (${legacy.take(3).mkString(", ")}${
           if (legacy.size > 3) ", ..." else ""}) and checkpoint " +
-        s"'$checkpoint' has no _GRAFT_STREAM_ID yet: a namespaced restart " +
+        s"'$checkpoint' has no metadata yet: a namespaced restart " +
         "cannot re-drive the legacy crash window. Drain and commit the " +
         "stream under the pre-upgrade binary, or move the legacy " +
         "stage/manifest/dead_letter batch_id= dirs aside before starting")
-  }
-
-  /** The INGEST-RUN identity a checkpoint carries: batch ids restart at 0
-    * whenever a stream starts from a fresh (or reset) checkpoint, so any
-    * artifact keyed by batch id alone collides across checkpoint
-    * generations — a fresh batch 0 would match the previous generation's
-    * `_GRAFT_APPLIED` marker and be silently SKIPPED (rows consumed,
-    * nothing written). The id therefore lives IN the checkpoint dir
-    * (`_GRAFT_STREAM_ID`, created on first start): restarts from the same
-    * checkpoint — the replay window the staged-commit protocol protects —
-    * read the same id, while a deleted/new checkpoint mints a new one and
-    * gets its own artifact namespace. Read-or-create, never cached in the
-    * JVM, so an in-process checkpoint reset is detected too.
-    */
-  /** In-JVM serialization of first mints: the common double-mint is two
-    * threads of ONE driver (a restarted query + a stale handle on the
-    * same checkpoint), where a lock makes adoption deterministic. An
-    * entry is only needed during the mint race window — once the id
-    * file exists every caller returns at the exists() fast path — so
-    * each mint attempt EVICTS its key on completion: a long-lived
-    * driver hosting many streams holds at most the locks of mints in
-    * flight, not one entry per checkpoint forever.
-    *
-    * Eviction is safe ONLY because every critical section first
-    * verifies its lock object is still the map's CURRENT entry
-    * ([[withMintLock]]). Without that check, a FAILED mint's eviction
-    * reopens a same-JVM concurrent-mint window: a waiter still
-    * synchronized on the removed lock object and a new caller on a
-    * fresh lock object both reach the mint path pre-publication — on
-    * HDFS/S3A the rename contract resolves it (loser adopts), but POSIX
-    * local rename OVERWRITES, so two threads of one JVM could adopt
-    * different ids for one checkpoint. The staleness re-check closes
-    * it: a thread that wakes on an evicted lock never runs the mint
-    * body — it retries on the current entry and adopts at exists().
-    */
-  private val mintLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Visible to the concurrent-mint spec: whether `key`'s qualified
-    * lock entry is live (the leak assertion scoped to ONE checkpoint,
-    * so a mint in flight on another suite's thread can't flake it).
-    */
-  private[graft] def mintLockHeld(key: String): Boolean =
-    mintLocks.containsKey(key)
-
-  /** The qualified-path lock key [[streamInstanceId]] serializes on,
-    * factored so the spec's scoped leak assertion targets exactly the
-    * entries its own mints would create.
-    */
-  private[graft] def mintLockKey(spark: SparkSession,
-                                 checkpoint: String): String = {
-    val p = new org.apache.hadoop.fs.Path(checkpoint)
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .makeQualified(p).toString
-  }
-
-  /** Test seam for the eviction-race interleaving spec: invoked inside
-    * the mint critical section, after the losers-adopt exists() re-check
-    * and before publication — the exact point the post-eviction race
-    * targets. Production no-op.
-    */
-  private[graft] var mintTestHook: String => Unit = _ => ()
-
-  /** Run `body` under the CURRENT mint lock for `key`: acquire the
-    * map's entry, then verify the acquired object is still that entry —
-    * a stale hit (the holder evicted while this thread waited) retries
-    * on the fresh entry instead of minting concurrently beside it. The
-    * entry is evicted on completion (success or failure) while the lock
-    * is still held, so at most one thread ever runs `body` per key at a
-    * time and the map never outlives the race window.
-    */
-  @annotation.tailrec
-  private def withMintLock[T](key: String)(body: => T): T = {
-    val lock = mintLocks.computeIfAbsent(key, _ => new Object)
-    val ran = lock.synchronized {
-      if (mintLocks.get(key) eq lock)
-        try Some(body) finally mintLocks.remove(key, lock)
-      else None
-    }
-    ran match {
-      case Some(t) => t
-      case None => withMintLock(key)(body)
-    }
-  }
-
-  private[graft] def streamInstanceId(spark: SparkSession,
-                                      checkpoint: String): String = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val idPath = new org.apache.hadoop.fs.Path(s"$checkpoint/_GRAFT_STREAM_ID")
-    val fs = idPath.getFileSystem(hconf)
-    def readId(): String = {
-      val in = fs.open(idPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    if (fs.exists(idPath)) return readId()
-    // the lock key is the QUALIFIED path, not the raw string: trailing-
-    // slash/relative spellings of one checkpoint must serialize on one
-    // lock, not mint concurrently under two
-    val lockKey = mintLockKey(spark, checkpoint)
-    withMintLock(lockKey) {
-      // two minters racing past the exists() probe must both end up on
-      // ONE id, never an exception and never a half-written read. The
-      // staleness-checked lock serializes ALL same-JVM minters (a thread
-      // waking on an evicted lock retries, never mints beside the fresh
-      // entry's holder); across drivers, publication is write-to-temp +
-      // atomic rename, so idPath only ever appears with its full content
-      // and exactly one rename wins under the rename-refuses-existing-
-      // destination contract (HDFS/S3A — what checkpoints run on; POSIX
-      // local rename can overwrite, where the cross-JVM race narrows to
-      // Spark's own no-concurrent-drivers-per-checkpoint rule). Losers
-      // adopt by re-reading.
-      if (fs.exists(idPath)) readId()
-      else {
-        mintTestHook(lockKey)
-        val id = java.util.UUID.randomUUID().toString.take(12)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$checkpoint/._GRAFT_STREAM_ID.$id.tmp")
-        val out = fs.create(tmp, false)
-        try out.write(id.getBytes("UTF-8")) finally out.close()
-        if (!fs.rename(tmp, idPath)) {
-          fs.delete(tmp, false)
-          // a failed rename means "another minter won" ONLY if the id now
-          // exists; any other failure (transient FS error) must surface as
-          // a mint failure, not as readId()'s opaque FileNotFoundException
-          require(fs.exists(idPath),
-            s"stream-id mint failed: rename to $idPath was refused but no " +
-              "winner published an id — filesystem error during mint, not " +
-              "a lost race; retry the stream start")
-        }
-        readId()
-      }
-    }
   }
 
   /** One [[startReferenceTopology]] micro-batch, factored so the replay
@@ -1505,12 +1382,10 @@ object Pipelines {
     *   snapshot upsert FROM THE STAGE → `_GRAFT_APPLIED` marker in the
     *   stage dir.
     *
-    * Every per-batch artifact path (stage, manifest, dead letters) is
-    * namespaced by the checkpoint's [[streamInstanceId]]: batch ids are
-    * only unique within one checkpoint generation, so un-namespaced
-    * paths made a fresh-checkpoint restart against an existing outDir
-    * match the PREVIOUS generation's markers — fresh batches silently
-    * skipped — and overwrite its `manifest/batch_id=N` accounting.
+    * Every per-batch artifact path (stage, manifest, dead letters) lies
+    * under `run=S`, where `S` = `streamId`: the query id when driven by
+    * [[startReferenceTopology]], since batch ids are only unique within
+    * one checkpoint.
     *
     * Replay cases: applied marker present → fully committed, skip;
     * `_GRAFT_STAGED` present (an explicit marker written after the stage

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, RawLocalFileSystem}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.functions.{input_file_name, regexp_replace}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.streaming.{Pipelines, PosixLocalFileSystem}
 
@@ -18,8 +18,10 @@ import graft.streaming.{Pipelines, PosixLocalFileSystem}
   * `file:` checkpoint their offset, commit and state files go through
   * [[PosixLocalFileSystem]] with the stock names and modes, the session
   * conf is left as it was, other schemes start untouched, and the Connect
-  * sinks resume from their checkpoints exactly once on both state-store
-  * providers, including from a checkpoint a plain `start()` wrote.
+  * sinks, the `idadecont` aggregation and the `streamingDedup` state
+  * behind them resume from their checkpoints exactly once on both
+  * state-store providers, including from a checkpoint a plain `start()`
+  * wrote.
   */
 class CheckpointStartSpec extends SparkSpec {
   import spark.implicits._
@@ -66,6 +68,22 @@ class CheckpointStartSpec extends SparkSpec {
     (df, s3, ckp) => Pipelines.connectJsonWriter(s3, "idadecont", Seq("idadecat", "window_start"),
       2, 2, "raw-data/kafka", Fast)(Pipelines.idadecont(df).writeStream)
       .option("checkpointLocation", ckp).start())
+
+  /** [[Pipelines.streamingDedup]] keyed so customers 0–2 of every batch
+    * repeat batch 0's (`c_0`..`c_2`) and customers 3–5 are new: a restart
+    * after batch 1 drops batches 2–3's repeats only from restored state.
+    * The 24 h delay keeps the watermark at 0, so no batch runs without
+    * data and batch ids match across runs.
+    */
+  private def dedup(df: DataFrame): DataFrame =
+    Pipelines.streamingDedup(df.withColumn("k", regexp_replace($"nome", "^c\\d+_([012])$", "c_$1")),
+      Seq("k"), "dt_update", "24 hours").drop("k")
+
+  private val dedupSink = Sink("dedup",
+    (df, s3, ckp) => Pipelines.startConnectParquetSink(dedup(df), s3, "dedup", ckp,
+      flushSize = 2, trigger = Fast),
+    (df, s3, ckp) => Pipelines.connectParquetWriter(s3, "dedup", 2, "raw-data/kafka", Fast)(
+      dedup(df).writeStream).option("checkpointLocation", ckp).start())
 
   /** Feeds batches to one MemoryStream, one query per segment, every
     * segment on the same checkpoint; returns the checkpoint and sink dirs.
@@ -201,7 +219,7 @@ class CheckpointStartSpec extends SparkSpec {
     assert(confNow == Seq(None, None, None))
   }
 
-  for (sink <- Seq(jovensSink, idadecontSink); (provider, cls) <- Providers) {
+  for (sink <- Seq(jovensSink, idadecontSink, dedupSink); (provider, cls) <- Providers) {
     test(s"${sink.topic} connect sink on $provider state: a restart or an upgrade matches an uninterrupted run") {
       withProvider(cls) {
         val (ckp, s3) = run(Seq(sink.helper -> (0 until 4)))
@@ -209,6 +227,8 @@ class CheckpointStartSpec extends SparkSpec {
           assert(walk(ckp).exists(_.getFileName.toString.endsWith(".zip")), "no RocksDB snapshot")
         val whole = contents(s3, sink.topic)
         assert(whole.keys.map(_._2).toSet == (0L until 4L).toSet)
+        if (sink.topic == "dedup")
+          assert(whole.values.map(_.size).sum == 6 + 3 * 3, "dedup kept a repeated key")
         Seq(
           "restart" -> Seq(sink.helper -> (0 until 2), sink.helper -> (2 until 4)),
           "upgrade" -> Seq(sink.stock -> (0 until 2), sink.helper -> (2 until 4))

@@ -3,7 +3,9 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.functions.{AvroCodec, StaticRegistry}
 import graft.sources.{GraftJdbcStream, SnapshotChunkSource}
@@ -22,6 +24,7 @@ import graft.streaming.{CdcSnapshot, Pipelines}
   */
 class ReferenceTopologySpec extends SparkSpec {
   import spark.implicits._
+  implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private val wireV1 = StructType(Seq( // early writer: no lang column
     StructField("doc_id", LongType), StructField("text", StringType),
@@ -161,10 +164,13 @@ class ReferenceTopologySpec extends SparkSpec {
     assert(s == Map(1L -> updatedEn, 5L -> otherEn, 7L -> thirdEn),
       s"restart diverged: ${s.keySet}")
     // phase-1 batch dirs untouched, phase-2 landed under NEW batch ids
-    // in the SAME run namespace (same checkpoint → same stream id)
+    // in the SAME run namespace (same checkpoint → same query id)
     val batchDirsAfter2 = batchDirs()
     assert(batchDirsAfter1.subsetOf(batchDirsAfter2), "phase-1 manifests lost")
     assert(batchDirsAfter2.size > batchDirsAfter1.size, "phase 2 not ingested")
+    assert(q2.id == q1.id, s"restart changed the query id: ${q1.id} → ${q2.id}")
+    assert(batchDirsAfter2.map(_.takeWhile(_ != '/')) == Set(s"run=${q1.id}"),
+      s"run namespaces: $batchDirsAfter2")
     // manifest totals = all released rows, counted once each
     val released = Seq((1L, goodEn, "web"), (5L, otherEn, "api"),
       (1L, updatedEn, "web"), (7L, thirdEn, "api"))
@@ -224,149 +230,72 @@ class ReferenceTopologySpec extends SparkSpec {
     assert(manifestRows() == m1 && snapshotRows() == s1)
   }
 
-  test("fresh-checkpoint restart against an existing outDir is not skipped") {
-    // the round-10 advisory finding: batch ids restart at 0 on a reset
-    // checkpoint, so an un-namespaced batch 0 matched the previous
-    // generation's _GRAFT_APPLIED marker and was silently dropped (rows
-    // consumed, nothing written). Artifact paths now carry the
-    // checkpoint's stream id — a new generation gets its own namespace.
-    val out = tempDir("graft_gen").toString
-    val snap = s"$out/snapshot"
-    def mkBatch(id: Long, text: String, ms: Long) =
-      Seq(enc(2, id, text, "web", ms, Some("en"))).toDF("value")
-        .select($"value",
-          AvroCodec.avroDecodeEvolving($"value", reader, registry, Seq(1, 2)).as("r"))
-    // generation A commits its batch 0
-    Pipelines.referenceTopologyBatch(mkBatch(1L, goodEn, 1000L), 0L, out, snap,
-      8, "en", 0.7, streamId = "genA")
-    // generation B (fresh checkpoint → new stream id) replays batch id 0
-    // with DIFFERENT data — it must be applied, not skipped
-    Pipelines.referenceTopologyBatch(mkBatch(7L, thirdEn, 2000L), 0L, out, snap,
-      8, "en", 0.7, streamId = "genB")
-    val s = CdcSnapshot.readUpsert(spark, snap)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(s == Set(1L, 7L), s"generation B's batch was skipped: $s")
-    assert(new java.io.File(s"$out/manifest/run=genA/batch_id=0").exists())
-    assert(new java.io.File(s"$out/manifest/run=genB/batch_id=0").exists(),
-      "generation B's manifest missing")
-    // and the stream id itself: minted once, stable across restarts from
-    // the same checkpoint, re-minted for a reset checkpoint
-    val ck = tempDir("graft_gen_ck").toString
-    val id1 = Pipelines.streamInstanceId(spark, ck)
-    assert(id1 == Pipelines.streamInstanceId(spark, ck), "id not stable")
-    new java.io.File(s"$ck/_GRAFT_STREAM_ID").delete()
-    assert(id1 != Pipelines.streamInstanceId(spark, ck), "reset not detected")
+  /** Starts the topology on `ckpt` over `out`, feeds it `recs` through a
+    * new MemoryStream and stops it; returns the query. A run without
+    * records commits no offset, so a later run on the same checkpoint
+    * reads its own new stream from the start.
+    */
+  private def runTopology(out: String, ckpt: String,
+                          recs: Seq[Array[Byte]]): StreamingQuery = {
+    val mem = MemoryStream[Array[Byte]]
+    val q = Pipelines.startReferenceTopology(mem.toDF(), reader, registry,
+      Seq(1, 2), out, ckpt, buckets = 8)
+    try if (recs.nonEmpty) { mem.addData(recs); q.processAllAvailable() }
+    finally q.stop()
+    q
   }
 
-  test("legacy un-namespaced outDir blocks a first id mint; loser of a mint race adopts") {
-    // round-11 advisory: pre-namespace layouts wrote stage/batch_id=N with
-    // no run= segment. A namespaced restart can't re-drive that crash
-    // window, so the first mint against such an outDir must fail loudly.
+  test("fresh-checkpoint restart against an existing outDir is not skipped") {
+    // batch ids restart at 0 on a fresh checkpoint: an un-namespaced
+    // batch 0 would match the previous run's _GRAFT_APPLIED marker and be
+    // dropped (rows consumed, nothing written). Each checkpoint carries
+    // its own query id, so each run gets its own namespace.
+    val out = tempDir("graft_gen").toString
+    val qa = runTopology(out, tempDir("graft_gen_cka").toString,
+      Seq(enc(2, 1L, goodEn, "web", 1000L, Some("en"))))
+    val qb = runTopology(out, tempDir("graft_gen_ckb").toString,
+      Seq(enc(2, 7L, thirdEn, "api", 2000L, Some("en"))))
+    assert(qa.id != qb.id, s"two checkpoints share query id ${qa.id}")
+    val runs = new java.io.File(s"$out/manifest").list().toSet
+    assert(runs == Set(s"run=${qa.id}", s"run=${qb.id}"), s"run namespaces: $runs")
+    runs.foreach { r =>
+      assert(new java.io.File(s"$out/manifest/$r/batch_id=0").isDirectory,
+        s"$r has no batch 0 manifest")
+    }
+    val s = CdcSnapshot.readUpsert(spark, s"$out/snapshot")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(s == Set(1L, 7L), s"the second checkpoint's batch was skipped: $s")
+  }
+
+  test("legacy un-namespaced outDir blocks a first start") {
+    // pre-namespace layouts wrote stage/batch_id=N with no run= segment. A
+    // namespaced run can't re-drive that crash window, so a first start
+    // (no Spark `metadata` in the checkpoint yet) over such an outDir
+    // must fail loudly.
     val out = tempDir("graft_legacy").toString
     val ck = tempDir("graft_legacy_ck").toString
     new java.io.File(s"$out/stage/batch_id=3").mkdirs()
     val e = intercept[IllegalArgumentException] {
-      Pipelines.requireNoLegacyStage(spark, out, ck)
+      runTopology(out, ck, Nil)
     }
     assert(e.getMessage.contains("pre-upgrade"), e.getMessage)
-    // a checkpoint that ALREADY carries an id was born namespaced: legacy
-    // dirs next to it belong to another producer and must not block it
-    Pipelines.streamInstanceId(spark, ck)
-    Pipelines.requireNoLegacyStage(spark, out, ck)
-    // namespaced dirs alone never block a fresh mint
+    assert(!new java.io.File(s"$ck/metadata").exists())
+    // a checkpoint a started query already wrote was born namespaced:
+    // legacy dirs next to it belong to another producer and must not
+    // block its restart
+    val ckStarted = tempDir("graft_legacy_ck_started").toString
+    val clean = tempDir("graft_legacy_clean").toString
+    val q1 = runTopology(clean, ckStarted, Nil)
+    assert(new java.io.File(s"$ckStarted/metadata").exists())
+    new java.io.File(s"$clean/manifest/batch_id=3").mkdirs()
+    val q2 = runTopology(clean, ckStarted,
+      Seq(enc(2, 1L, goodEn, "web", 1000L, Some("en"))))
+    assert(q2.id == q1.id)
+    assert(new java.io.File(s"$clean/manifest/run=${q1.id}").isDirectory)
+    // namespaced dirs alone never block a first start
     val out2 = tempDir("graft_legacy2").toString
-    val ck2 = tempDir("graft_legacy_ck2").toString
     new java.io.File(s"$out2/stage/run=genA/batch_id=3").mkdirs()
-    Pipelines.requireNoLegacyStage(spark, out2, ck2)
-    // mint-race loser: the id file appearing between the exists() probe
-    // and the create() must be ADOPTED, not thrown — simulated by the
-    // non-overwriting create hitting a pre-existing file... the public
-    // behavior pinned here is that concurrent minters converge on ONE id
-    val ck3 = tempDir("graft_legacy_ck3").toString
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val futs = (1 to 4).map(_ => pool.submit(
-      new java.util.concurrent.Callable[String] {
-        def call(): String = {
-          gate.await(); Pipelines.streamInstanceId(spark, ck3)
-        }
-      }))
-    gate.countDown()
-    val ids = futs.map(_.get()).toSet
-    pool.shutdown()
-    assert(ids.size == 1, s"concurrent minters diverged: $ids")
-    // r12 advisory: path spellings of ONE checkpoint (trailing slash,
-    // double separator) serialize on one qualified-path lock and read
-    // one id — distinct raw-string lock keys would let two spellings
-    // mint concurrently
-    val ck4 = tempDir("graft_legacy_ck4").toString
-    val id4 = Pipelines.streamInstanceId(spark, ck4)
-    assert(Pipelines.streamInstanceId(spark, s"$ck4/") == id4)
-    assert(Pipelines.streamInstanceId(spark, ck4.replace("/graft_", "//graft_")) == id4)
-    // r13 advisory: the mint-lock map must not grow one entry per
-    // checkpoint for the life of the driver. r14 advisory: assert the
-    // SPECIFIC keys this test minted are evicted, not that the global
-    // map is empty — a mint in flight on another suite's thread at this
-    // instant would flake a global-emptiness check under parallel runs
-    Seq(ck, ck2, ck3, ck4).foreach { c =>
-      val key = Pipelines.mintLockKey(spark, c)
-      assert(!Pipelines.mintLockHeld(key),
-        s"mint lock leaked for $c after its id published")
-    }
-  }
-
-  test("post-eviction mint race: a failed mint's waiters and newcomers converge on one id") {
-    // The r14-adjudicated window, now pinned directly: eviction runs in
-    // the lock's completion path, so after a FAILED mint (no id
-    // published) a waiter that was synchronized on the evicted lock
-    // object and a newcomer that minted a fresh lock object both reach
-    // the mint path. On POSIX local FS rename OVERWRITES, so without
-    // the staleness re-check ([[Pipelines.withMintLock]]) two same-JVM
-    // threads could adopt DIFFERENT ids for one checkpoint. The storm:
-    // the first thread into the critical section parks there (letting
-    // the rest of the pool pile onto the live lock entry), then throws —
-    // exercising eviction-with-waiters — and every survivor must still
-    // agree on a single published id.
-    val ck = tempDir("graft_mint_race").toString
-    val key = Pipelines.mintLockKey(spark, ck)
-    val failed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    Pipelines.mintTestHook = { _ =>
-      if (failed.compareAndSet(0, 1)) {
-        entered.countDown()
-        // hold the critical section until the storm is queued on this
-        // lock entry, then fail the mint pre-publication
-        Thread.sleep(200)
-        throw new RuntimeException("injected mint failure (spec)")
-      }
-    }
-    try {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val futs = (1 to 8).map(_ => pool.submit(
-        new java.util.concurrent.Callable[Either[String, String]] {
-          def call(): Either[String, String] = {
-            gate.await()
-            try Right(Pipelines.streamInstanceId(spark, ck))
-            catch { case e: RuntimeException => Left(e.getMessage) }
-          }
-        }))
-      gate.countDown()
-      assert(entered.await(10, java.util.concurrent.TimeUnit.SECONDS),
-        "no thread reached the mint critical section")
-      val results = futs.map(_.get())
-      pool.shutdown()
-      val ids = results.collect { case Right(id) => id }.toSet
-      val failures = results.collect { case Left(m) => m }
-      assert(failures.size == 1,
-        s"exactly the injected failure must surface: $failures")
-      assert(ids.size == 1,
-        s"post-eviction minters diverged: $ids")
-      // the survivors' id is the PUBLISHED one — and later callers adopt it
-      assert(Pipelines.streamInstanceId(spark, ck) == ids.head)
-      assert(!Pipelines.mintLockHeld(key),
-        "mint lock leaked after the race resolved")
-    } finally Pipelines.mintTestHook = _ => ()
+    Pipelines.requireNoLegacyStage(spark, out2, tempDir("graft_legacy_ck2").toString)
   }
 
   test("applyUpsert disk face equals the pure upsertResult merge") {
